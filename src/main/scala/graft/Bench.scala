@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -15,27 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Generated-class cache fix (round-14; ProfileQ99 A/B): the
-      // per-query codegen stage id is embedded in the generated class
-      // NAME by default, so two structurally-identical stages produce
-      // different source text and Janino's source-keyed compile cache
-      // can never hit across stages or plans. Dropping the id from the
-      // name (the class is held by reference, the name is cosmetic) +
-      // sizing the cache above the suite's distinct-stage count turns
-      // repeat compilations into cache hits: q99 warm 11.4 s/129
-      // compilations → 3.9 s/0 on the same box. This is the structural
-      // answer to the suite's dominant JIT bill (q99/q100 `weak`s).
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     // Memoized-sub-plan reuse graph: which CacheRegistry kinds each query
     // consumes. Between queries the bench releases every cached sub-plan
@@ -350,13 +328,10 @@ object Bench {
     //                latestOffset (the per-trigger fixed cost dial);
     //  sq_batch_ms — addBatch (the actual gate/engine work);
     //  sq_n        — trigger count.
-    // CAVEAT (r20 judge advice): StreamingQueryProgress events arrive
-    // asynchronously on the listener bus, so a just-stopped stream's
-    // last progress event can land AFTER exec()'s post-query counter
-    // read and smear into the next query's delta. The sq_* columns are
-    // attribution evidence, not a gated metric — read them as
-    // ±1-trigger approximate. (listenerBus.waitUntilEmpty is
-    // private[spark]; draining it here would need reflection.)
+    // StreamingQueryProgress events arrive asynchronously on the
+    // listener bus; exec() drains the bus (jobCounts.take) before it
+    // reads these counters, so a just-stopped stream's last progress
+    // event lands in its own query's delta, not the next one's.
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val sqTrig = new java.util.concurrent.atomic.AtomicLong(0L)
     val sqPlan = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -383,9 +358,14 @@ object Bench {
       }
     })
 
+    // Spark jobs and stages each query submitted (jobs/stages columns),
+    // counted by the threads it ran on, streams included — the
+    // per-trigger cost of a streaming row is its stage count (r22).
+    val jobCounts = new graft.util.JobCounts(spark)
+
     final case class Sample(sec: Double, gcMs: Long, jitMs: Long, cgN: Long,
         sqTrigMs: Long = 0L, sqPlanMs: Long = 0L, sqBatchMs: Long = 0L,
-        sqN: Long = 0L)
+        sqN: Long = 0L, jobs: Long = 0L, stages: Long = 0L)
 
     // keys live at the end of the index phase — the only entries
     // cross-query reuse legitimately flows through (every shared kind
@@ -401,19 +381,23 @@ object Bench {
       val (st0, sp0, sb0, sn0) =
         (sqTrig.get(), sqPlan.get(), sqBatch.get(), sqN.get())
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      try jobCounts.region(name) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        jobCounts.take(name) // the failed pass's counts go with it
         // attrib sentinel matches the -1.0 sec sentinel: a failed query
         // reads [-1,-1,-1,…], never confusable with a real zero-GC/
         // zero-JIT sample (review finding)
-        return Sample(-1.0, -1, -1, -1, -1, -1, -1, -1)
+        return Sample(-1.0, -1, -1, -1, -1, -1, -1, -1, -1, -1)
       }
       val t = (System.nanoTime() - t0) / 1e9
-      val sample = Sample(t, gcMs() - gc0, jitMs() - jit0, cgN() - cg0,
+      val (gc1, jit1, cg1) = (gcMs(), jitMs(), cgN())
+      val (jobs, stages) = jobCounts.take(name)
+      val sample = Sample(t, gc1 - gc0, jit1 - jit0, cg1 - cg0,
         sqTrig.get() - st0, sqPlan.get() - sp0, sqBatch.get() - sb0,
-        sqN.get() - sn0)
+        sqN.get() - sn0, jobs, stages)
       // drop in-run-created keys too (dead by construction once their
       // query finished) — but only when the index phase ran, so a
       // filtered local run without it keeps its ad-hoc cross-query hits
@@ -624,15 +608,19 @@ object Bench {
     // triples — ~260 chars, inside the tail window with the ~1.3 KB
     // values array. The judge can adjudicate a loaded box from the
     // parsed record alone; bench_out.json remains the complete artifact.
+    val attribCols = Seq("gc_ms", "jit_ms", "cg_n", "sq_trig_ms", "sq_plan_ms",
+      "sq_batch_ms", "sq_n", "jobs", "stages").map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     def trip(v: Sample): String =
-      s"[${v.gcMs},${v.jitMs},${v.cgN},${v.sqTrigMs},${v.sqPlanMs},${v.sqBatchMs},${v.sqN}]"
+      s"[${v.gcMs},${v.jitMs},${v.cgN},${v.sqTrigMs},${v.sqPlanMs},${v.sqBatchMs},${v.sqN},${v.jobs},${v.stages}]"
     val attrib = results
       .map { case (k, v) => "\"" + k + "\":" + trip(v) }
       .mkString("{", ",", "}")
     val ok = results.map(_._2).filter(_.sec >= 0)
     val attribSum = s"[${ok.map(_.gcMs).sum},${ok.map(_.jitMs).sum}," +
       s"${ok.map(_.cgN).sum},${ok.map(_.sqTrigMs).sum}," +
-      s"${ok.map(_.sqPlanMs).sum},${ok.map(_.sqBatchMs).sum},${ok.map(_.sqN).sum}]"
+      s"${ok.map(_.sqPlanMs).sum},${ok.map(_.sqBatchMs).sum},${ok.map(_.sqN).sum}," +
+      s"${ok.map(_.jobs).sum},${ok.map(_.stages).sum}]"
     val attribHot = results.filter(_._2.sec >= 0)
       .sortBy { case (_, v) => -(v.gcMs + v.jitMs + v.sqTrigMs) }.take(8)
       .map { case (k, v) => "\"" + k + "\":" + trip(v) }
@@ -661,7 +649,7 @@ object Bench {
         restoreJson +
         s""","n":${results.size},"order":"sorted-query-names"""" +
         s""","queries":$qsArray,"queries_file":"bench_out.json"""" +
-        s""","attrib_cols":["gc_ms","jit_ms","cg_n","sq_trig_ms","sq_plan_ms","sq_batch_ms","sq_n"],"attrib_sum":$attribSum""" +
+        s""","attrib_cols":$attribCols,"attrib_sum":$attribSum""" +
         s""","attrib_hot":$attribHot,"sf":"$sfDir"""" +
         s""","passes":$passes,"queries_are":"min-of-passes"""" +
         s""","query_names":$namesArray}"""
@@ -683,7 +671,7 @@ object Bench {
         s""","index_detail":$idxDetailJson""" +
         s""","queries":$qsFull""" +
         s""","passes":$passes,"queries_are":"min-of-passes"$passJson""" +
-        s""","attrib":$attrib,"attrib_cols":["gc_ms","jit_ms","cg_n","sq_trig_ms","sq_plan_ms","sq_batch_ms","sq_n"],"sf":"$sfDir"}"""
+        s""","attrib":$attrib,"attrib_cols":$attribCols,"sf":"$sfDir"}"""
     // anchored at the launch directory (the build root when run via sbt /
     // spark-submit from the checkout) rather than a hardcoded absolute
     // path, so the artifact lands next to whichever checkout ran it

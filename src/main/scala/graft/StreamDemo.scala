@@ -2,7 +2,6 @@ package graft
 
 import graft.rules.RuleCodec
 import graft.streaming.DynamicActiveEngine
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -20,15 +19,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     // README-style parent rule: per-user AVG over a trailing day, emitting
     // per event; on firing, spawn a per-user COUNT monitor with a TTL.

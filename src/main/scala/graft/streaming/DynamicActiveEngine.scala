@@ -131,8 +131,6 @@ final class DynamicActiveEngine(
     }
     val rules = store.snapshot()
     if (rules.isEmpty) return (None, noCkpt)
-    import DynamicActiveEngine.timed
-    DynamicActiveEngine.batches.incrementAndGet()
 
     // Persist the FRESH (fanned-out batch) side only (optimization
     // r22): the previous shape persisted the whole tail ∪ fresh union,
@@ -140,11 +138,9 @@ final class DynamicActiveEngine(
     // by its localCheckpoint) and the curMax agg scanned tail + batch.
     // Consumers now read tail blocks directly plus this batch-sized
     // cache; the union below stays a lazy plan.
-    val freshC = timed(DynamicActiveEngine.fanoutNanos) {
-      FanOut.auto(batch, rules, tsCol).toDF()
-        .withColumn("fresh", lit(true))
-        .persist()
-    }
+    val freshC = FanOut.auto(batch, rules, tsCol).toDF()
+      .withColumn("fresh", lit(true))
+      .persist()
     val combined = tail match {
       case Some(t) => t.withColumn("fresh", lit(false)).unionByName(freshC)
       case None => freshC
@@ -154,16 +150,13 @@ final class DynamicActiveEngine(
       // is ≤ the maxSeenTs of the batch that retained it, so the old
       // whole-union aggregate and this batch-only one are equal —
       // the agg now scans O(batch), never the tail (optimization r22).
-      val curMaxRaw = timed(DynamicActiveEngine.maxAggNanos) {
-        freshC.agg(max(col("tsMillis"))).head().get(0)
-      }
+      val curMaxRaw = freshC.agg(max(col("tsMillis"))).head().get(0)
       if (curMaxRaw == null && maxSeenTs == Long.MinValue)
         return (None, noCkpt)
       val curMax =
         if (curMaxRaw == null) maxSeenTs
         else math.max(curMaxRaw.asInstanceOf[Long], maxSeenTs)
 
-      val tPlan0 = System.nanoTime()
       val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
       val passthroughIds = rules.filter(_.isPassthrough).flatMap(_.queryId)
       val perEventIds = rules.filter(r => r.isPerEventEmission && !r.isPassthrough)
@@ -197,7 +190,6 @@ final class DynamicActiveEngine(
         (perEventAlerts.toSeq ++
           (passthroughAlerts.toSeq ++ periodicAlerts.toSeq).map(_.as[Alert]))
           .reduceOption(_ unionByName _)
-      DynamicActiveEngine.planNanos.addAndGet(System.nanoTime() - tPlan0)
       // Tail update: per-rule retention horizon, broadcast-joined so a
       // dropped rule's rows (= its state) vanish with it.
       val spark = batch.sparkSession
@@ -219,13 +211,11 @@ final class DynamicActiveEngine(
       // Thread created here so Spark's inheritable job-group properties
       // carry over; joined before the state vars advance.
       val tailT = new java.util.concurrent.FutureTask(() =>
-        timed(DynamicActiveEngine.tailNanos) {
-          combined
-            .join(broadcast(horizons), "ruleId")
-            .filter(col("tsMillis") >= col("__cm") - col("hz"))
-            .select("ruleId", "key", "tsMillis", "aggIn", "payload")
-            .localCheckpoint(true)
-        })
+        combined
+          .join(broadcast(horizons), "ruleId")
+          .filter(col("tsMillis") >= col("__cm") - col("hz"))
+          .select("ruleId", "key", "tsMillis", "aggIn", "payload")
+          .localCheckpoint(true))
       val tailTh = new Thread(tailT, "engine-tail-checkpoint")
       tailTh.setDaemon(true)
       tailTh.start()
@@ -233,9 +223,8 @@ final class DynamicActiveEngine(
       // the horizon and the collected set advancing together; the sink
       // and ECA spawn run after the monitor is released
       val fired =
-        try timed(DynamicActiveEngine.collectNanos) {
-          alerts.map(collectFired).getOrElse(Seq.empty)
-        } catch { case e: Throwable =>
+        try alerts.map(collectFired).getOrElse(Seq.empty)
+        catch { case e: Throwable =>
           // the concurrently-built tail must not leak its blocks when
           // the collect fails (the pre-r22 sequential shape never built
           // it on this path)
@@ -588,33 +577,6 @@ final class DynamicActiveEngine(
 }
 
 object DynamicActiveEngine {
-  /** Per-phase wall-nano counters for the micro-batch path — the q212
-    * per-trigger fixed-cost attribution (r19 verdict task #2; same
-    * diagnostic pattern as
-    * [[graft.util.CacheRegistry.fingerprintNanos]]). Cumulative across
-    * every engine instance in the JVM; a profiler resets, drives
-    * triggers, then reads the split. */
-  import java.util.concurrent.atomic.AtomicLong
-  val fanoutNanos = new AtomicLong(0L)   // FanOut.auto plan construction
-  val maxAggNanos = new AtomicLong(0L)   // the curMax agg action
-  val planNanos = new AtomicLong(0L)     // alert-plan construction (driver)
-  val collectNanos = new AtomicLong(0L)  // collectFired action
-  val tailNanos = new AtomicLong(0L)     // newTail localCheckpoint action
-  val batches = new AtomicLong(0L)
-  def resetMetrics(): Unit =
-    Seq(fanoutNanos, maxAggNanos, planNanos, collectNanos, tailNanos,
-      batches).foreach(_.set(0L))
-  def metricsString: String = {
-    def s(a: AtomicLong) = f"${a.get / 1e9}%.2f"
-    s"batches=${batches.get} fanout=${s(fanoutNanos)}s " +
-      s"maxAgg=${s(maxAggNanos)}s plan=${s(planNanos)}s " +
-      s"collect=${s(collectNanos)}s tail=${s(tailNanos)}s"
-  }
-  private[streaming] def timed[A](c: AtomicLong)(f: => A): A = {
-    val t0 = System.nanoTime()
-    try f finally { c.addAndGet(System.nanoTime() - t0); () }
-  }
-
   /** Parse the reference-format composite key string
     * (`KeysExtractor.java:19-41`) back to a field map. */
   def keyFields(key: String): Map[String, String] = {

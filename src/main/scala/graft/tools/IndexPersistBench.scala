@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.sources.IndexStore
-import org.apache.spark.sql.SparkSession
 
 /** Two-session measurement of cross-session index amortization
   * ([[graft.sources.IndexStore]]): the daily-restart story, priced.
@@ -28,14 +27,7 @@ object IndexPersistBench {
     val mode = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val store = if (args.length > 2) args(2) else "/tmp/graft_indexstore"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     val restored =
       if (mode == "restore-build") IndexStore.restoreAll(spark, store) else 0

@@ -42,19 +42,9 @@ object MaterializedScaleBench {
     val only = args.drop(2).headOption.map(_.split(",").toSet)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def session(): SparkSession = {
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        // same generated-class cache setup as Bench (round 14): probes
-        // should measure data scaling, not repeat compilation
-        .config("spark.sql.codegen.useIdInClassName", "false")
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    // Bench's session, whose generated-class cache setup keeps the
+    // probes measuring data scaling, not repeat compilation
+    def session(): SparkSession = graft.util.LocalSession()
 
     // ---- phase 1: materialize both scales to parquet ----
     locally {

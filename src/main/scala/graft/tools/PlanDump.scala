@@ -6,7 +6,6 @@
 //   env SPARK_GRAFT_PLANS_DIR (default plans/r21)
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 object PlanDump {
@@ -16,16 +15,8 @@ object PlanDump {
       else Seq.empty
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r21")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same session shape as Bench so the dumped plans are the measured ones
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session Bench runs on, so the dumped plans are the measured ones
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- qs) {

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.rules.RuleCodec
 import graft.streaming.ActiveEngine
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Replay-throughput benchmark against the reference's one concrete
@@ -29,15 +28,7 @@ object ReplayBench {
     val n = args.headOption.map(_.toInt).getOrElse(130000)
     val threads = args.lift(1).map(_.toInt).getOrElse(1)
     val nSources = math.max(1, args.lift(2).map(_.toInt).getOrElse(1))
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-replay-bench")
-      .config("spark.sql.shuffle.partitions", math.max(threads, 1).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(threads)
 
     // synthesize SHCarData-format lines: 200 cars, 1 event/s each,
     // deterministic speeds/coords (seeded) — FIXTURES A1 format

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.dedup.Dedup
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the heaviest operators: runs each at 1× and N×
@@ -27,12 +27,7 @@ object ScaleBench {
     require(factor >= 1 && factor <= ScaleCorpus.Alphabets.size,
       s"factor in 1..${ScaleCorpus.Alphabets.size}")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     def docsAt(k: Int): DataFrame =
       ScaleCorpus.docsAt(spark, dir, k)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize a FULL-SUITE scale-dir: the three LLM-pipeline tables
   * (documents/embeddings/events) replicated `factor`× by
   * [[ScaleCorpus]] (per-copy id offsets + per-copy text alphabet
@@ -27,11 +25,7 @@ object ScaleMaterialize {
     require(new java.io.File(out).getCanonicalPath !=
         new java.io.File(dir).getCanonicalPath,
       s"refusing to materialize $dir onto itself (unset SPARK_GRAFT_SF_DIR?)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     ScaleCorpus.docsAt(spark, dir, factor).write.mode("overwrite")
       .parquet(s"$out/documents.parquet")
     ScaleCorpus.embeddingsAt(spark, dir, factor).write.mode("overwrite")

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.sources.{IndexStore, Tables}
 import graft.streaming.RetrieveStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -39,14 +38,7 @@ object ServeRateBench {
     // story, exactly as GateRateBench's
     val queryStride = args.lift(3).map(_.toLong).getOrElse(100L)
     require(slices >= 2, "need >= 2 slices (1 warm-up + >= 1 measured)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     import spark.implicits._
 
     val restored =

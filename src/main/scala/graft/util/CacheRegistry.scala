@@ -55,22 +55,7 @@ object CacheRegistry {
     * all a literal frame can mean). md5 keeps accidental collisions at
     * the 128-bit floor — a colliding key would silently serve the
     * wrong index. */
-  /** Cumulative time spent in [[planFingerprint]] (diagnostic — the
-    * construction-cost attribution counter). */
-  val fingerprintNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-  val fingerprintCalls = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def planFingerprint(df: DataFrame): String = {
-    val __t0 = System.nanoTime()
-    try planFingerprintImpl(df)
-    finally {
-      fingerprintNanos.addAndGet(System.nanoTime() - __t0)
-      fingerprintCalls.incrementAndGet()
-      ()
-    }
-  }
-
-  private def planFingerprintImpl(df: DataFrame): String = {
     val canon = df.queryExecution.analyzed.canonicalized
     val leafIds = canon.collectLeaves().map {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>

@@ -1,0 +1,15 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+/** [[SparkEntry.entry]], the flagship query: two JSON rules (a per-user
+  * AVG and a per-event-type COUNT) fanned out over the sf0.001 events. */
+class EntrySpec extends SparkSpec {
+  test("entry: the two-rule fan-out returns alerts for both rules on sf0.001") {
+    val perRule = SparkEntry.entry(spark)
+      .groupBy("rule_id").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perRule.keySet == Set(1L, 2L), perRule)
+    assert(perRule.values.forall(_ > 0), perRule)
+  }
+}
