@@ -21,6 +21,11 @@ object SparkEntry extends CoreRegistry with DedupRegistry
     * the reference README's example queries. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
+    entry(spark, dir)
+  }
+
+  /** The flagship query over the events table of any data directory. */
+  def entry(spark: SparkSession, dir: String): DataFrame = {
     val rules = Seq(
       """{"queryId":1,"windowFilterRules":[{"field":"event_type","operator":"=","value":"purchase"}],
          "groupingKeyNames":["user_id"],"aggregateFieldName":"value",

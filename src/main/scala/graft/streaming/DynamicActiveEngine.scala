@@ -53,8 +53,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    collected for the ECA step per batch (the driver is a control
   *    plane, not a data plane).
   *
-  * The tail is an ordinary DataFrame: per batch it is `localCheckpoint()`ed
-  * (block-store backed, lineage truncated), and with `checkpointDir` set
+  * The tail is an ordinary DataFrame: per batch it is coalesced to the
+  * default parallelism and `localCheckpoint()`ed (block-store backed,
+  * lineage truncated, partition count bounded), and with `checkpointDir` set
   * it is also persisted durably ([[saveCheckpoint]]/[[restoreCheckpoint]]
   * + [[RuleStore.save]]) so a restarted driver resumes with full window
   * state — the reference gets the same from Flink checkpointing.
@@ -215,7 +216,7 @@ final class DynamicActiveEngine(
           .join(broadcast(horizons), "ruleId")
           .filter(col("tsMillis") >= col("__cm") - col("hz"))
           .select("ruleId", "key", "tsMillis", "aggIn", "payload")
-          .localCheckpoint(true))
+          .transform(retain))
       val tailTh = new Thread(tailT, "engine-tail-checkpoint")
       tailTh.setDaemon(true)
       tailTh.start()
@@ -430,9 +431,25 @@ final class DynamicActiveEngine(
     emittedThrough = kv.getOrElse("emittedThrough", Long.MinValue.toString).toLong
     tail =
       if (kv.get("hasTail").contains("true"))
-        Some(spark.read.parquet(s"$dir/tail").localCheckpoint(true))
+        Some(retain(spark.read.parquet(s"$dir/tail")))
       else None
   }
+
+  /** Materialize a new tail: coalesced to the default parallelism, then
+    * `localCheckpoint`ed. The tail is rebuilt from `tail ∪ fresh`, and a
+    * union keeps the partitions of both sides, so without the coalesce
+    * the partitions of every batch the engine ever saw would stay
+    * (mostly empty once eviction ran) and each later batch would scan
+    * them: per-batch task counts and checkpoint files grew with uptime.
+    * `coalesce` is narrow (no shuffle) and a no-op while the tail is
+    * already this small; rows are unchanged, and no consumer depends on
+    * their order ([[evalPerEvent]] sorts each group itself). */
+  private def retain(df: DataFrame): DataFrame =
+    df.coalesce(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint(true)
+
+  /** Partition count of the retained tail (0 when there is none). */
+  private[graft] def tailPartitions: Int =
+    tail.fold(0)(_.rdd.getNumPartitions)
 
   /** W1 replay over tail ∪ fresh: identical bucket arithmetic to
     * [[SlidingStateExec]], emitting only for fresh (this-batch) events.

@@ -10,10 +10,15 @@ import org.apache.spark.sql.functions._
   * For every live rule, events passing the rule's filters are tagged with
   * (ruleId, composite key string) — the reference's "implicit copy"
   * pattern (`DynamicKeyFunction.java:43-105`) — and union the per-rule
-  * branches. The rule set is tiny and the filters are compiled literals,
-  * so Catalyst shares the single source scan across branches and only
-  * matching rows ever reach the downstream shuffle (the reference's
-  * hand-built filter-before-shuffle, free here).
+  * branches. The filters are compiled literals pushed into each branch,
+  * so only matching rows ever reach the downstream shuffle (the
+  * reference's hand-built filter-before-shuffle, free here). Catalyst
+  * does NOT share the source scan across branches: the compiled side is
+  * a union of one scan per rule, so its output has rules × input
+  * partitions partitions (96 for 24 rules over a 4-partition batch).
+  * What keeps per-batch task counts flat is the dynamic engine's bound
+  * on its retained tail ([[DynamicActiveEngine]] coalesces it to the
+  * default parallelism), not this fan-out.
   *
   * Output is the normalized [[KeyedEvent]]: event-time millis, aggregate
   * input as an exact decimal string, full event payload as JSON.

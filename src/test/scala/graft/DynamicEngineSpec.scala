@@ -437,6 +437,47 @@ class DynamicEngineSpec extends SparkSpec {
       s"batch-2 window lost after recovery (at-most-once regression): $got")
   }
 
+  test("the retained tail stays within defaultParallelism partitions on both fan-out sides") {
+    // tail ∪ fresh keeps the partitions of both sides, so an unbounded
+    // tail grows by the fresh side's partition count every batch (rules ×
+    // 4 on the compiled side) and each later batch scans all of them
+    val maxParts = spark.sparkContext.defaultParallelism
+    val perEvent = Rule(
+      queryId = Some(80L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Sum),
+      limitOperatorType = Some(CompareOp.Greater),
+      limit = Some(BigDecimal(0)),
+      windowMilliseconds = Some(60000L),
+      frequencyMilliseconds = Some(0L))
+    val periodic = perEvent.copy(queryId = Some(81L), frequencyMilliseconds = None)
+    val base = 1700000000000L
+    def batchDf(i: Int) = spark.sparkContext.parallelize(
+      (0 until 8).map(j => (j % 3, new java.sql.Timestamp(base + i * 1000L + j), j.toDouble)),
+      4).toDF("carId", "ts", "speed")
+
+    for (inert <- Seq(0, 40)) { // 2 rules: compiled; 42 rules: broadcast
+      val rules = Seq(perEvent, periodic) ++ (0 until inert).map(i => perEvent.copy(
+        queryId = Some(3000L + i),
+        windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
+      val engine = new DynamicActiveEngine()
+      rules.foreach(engine.store.merge(_))
+      for (i <- 0 until 10) {
+        engine.processBatch(batchDf(i), "ts")
+        assert(engine.tailPartitions > 0 && engine.tailPartitions <= maxParts,
+          s"$inert inert rules, batch $i: tail has ${engine.tailPartitions} partitions")
+      }
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-tail")
+      engine.saveCheckpoint(spark, ckpt.toString)
+      val restored = new DynamicActiveEngine()
+      rules.foreach(restored.store.merge(_))
+      restored.restoreCheckpoint(spark, ckpt.toString)
+      assert(restored.tailPartitions > 0 && restored.tailPartitions <= maxParts,
+        s"$inert inert rules, restored tail has ${restored.tailPartitions} partitions")
+    }
+  }
+
   test("RuleStore save/load round-trips through the MERGE path") {
     val store = new RuleStore
     val rule = Rule(
