@@ -99,11 +99,11 @@ trait EntryHelpers {
       // Feed each weekly batch as a DRIVER-LOCAL frame (the q212
       // device, r21): one batch-sized collect per week — never more
       // than one week resident — re-parallelized as a local relation.
-      // The engine runs ~3 jobs per batch (curMax agg, alert collect,
-      // tail checkpoint); against `base.filter(__wk)` each of those
-      // re-scanned EVERY cached corpus partition per week (~52 weeks ×
-      // 3 jobs × 32 tasks of pure scan overhead, and at 10× a real
-      // re-read of the corpus per trigger). The batch-sized leaf makes
+      // The engine's per-batch jobs (curMax, the keyed pass, alert
+      // collect, tail checkpoint) each read the batch; against
+      // `base.filter(__wk)` they re-scanned EVERY cached corpus
+      // partition per week (~52 weeks × jobs × 32 tasks of pure scan
+      // overhead, and at 10× a real re-read of the corpus per trigger). The batch-sized leaf makes
       // every engine job O(batch), the same rows in the same weekly
       // order — alert output is row-set identical (q30's dedup already
       // makes within-batch order immaterial).

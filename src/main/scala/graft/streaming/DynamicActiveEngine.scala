@@ -1,11 +1,12 @@
 package graft.streaming
 
 import graft.active.{EcaLoop, RuleStore, SnowflakeId}
-import graft.compile.RuleCompiler
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+import java.math.{BigDecimal => JBigDecimal}
 
 /** The full-fidelity continuous engine: every micro-batch re-reads the
   * rule store, so rules added, deleted, re-triggered or ECA-spawned
@@ -18,40 +19,36 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * trigger of loop latency — the reference pays a Kafka round trip).
   *
   * Design: state-as-table, rules-as-data-per-batch. `foreachBatch`
-  * re-plans against a fresh `store.snapshot()` and keeps a bounded *tail*
-  * of fanned-out events (everything still inside some live rule's window)
-  * instead of opaque operator state:
+  * reads a fresh `store.snapshot()` and keeps a bounded *tail* of
+  * fanned-out events (everything still inside some live rule's window)
+  * instead of opaque operator state. One batch is one keyed pass:
   *
   *  - fan-out (D1-D3): the new batch is fanned out under the CURRENT
-  *    snapshot via [[FanOut.keyed]] — compiled Columns rebuilt per batch,
-  *    so a rule change is a re-plan, not a restart. Events that arrive
-  *    while no rule wants them are never keyed or retained (exactly the
-  *    reference: `DynamicKeyFunction` forwards per live rule only);
-  *  - per-event rules (W1): tail ∪ fresh, grouped by (rule, key); each
-  *    fresh event's trailing `[t-w, t]` aggregate is rebuilt with the
-  *    same micro-unit bucket arithmetic as [[SlidingStateExec]]. The
-  *    tail bounds the replay, so per-batch work is O(tail + batch) per
-  *    key and state for a spawned rule starts empty at spawn time
-  *    (reference semantics: a new rule sees only events after it
-  *    reached the operator);
-  *  - periodic rules (W2/W3): aligned windows whose *end* fell inside
-  *    `(prevMax, curMax]` event time are finalized and emitted once —
-  *    the event-time-watermark rendering of the reference's emission
-  *    timers (`DynamicQueryFunction.java:118-147`). ECA `$`-parameters
-  *    for periodic alerts bind from the group key (a window has no
-  *    single triggering event);
-  *  - eviction (W5, P5): the tail keeps only events within
-  *    window(+slide) of the max seen event time, per rule, via a
-  *    broadcast join against the live-rule horizons — so a deleted
-  *    rule's state is dropped with it (reference guard
-  *    `DynamicQueryFunction.java:85-88`);
+  *    snapshot via [[FanOut.auto]] and persisted, so a rule change is a
+  *    re-plan, not a restart. Events that arrive while no rule wants them
+  *    are never keyed or retained (exactly the reference:
+  *    `DynamicKeyFunction` forwards per live rule only);
+  *  - curMax, the batch's event-time watermark, is one `mapPartitions`
+  *    max over the fresh side;
+  *  - `tail ∪ fresh` is grouped by (rule, key) and every group runs
+  *    [[DynamicActiveEngine.evalGroup]], the pure kernel, with the rule
+  *    map broadcast: it emits the group's HAVING-passed alerts — W1
+  *    per-event sliding aggregates over the fresh events (state for a
+  *    spawned rule starts empty at spawn time, the reference's
+  *    semantics), W2/W3 aligned windows whose *end* fell inside
+  *    `(prevMax, curMax]`, W4 passthrough — and the rows the tail
+  *    retains (W5 eviction: within window + period of curMax, live rules
+  *    only, so a deleted rule's state is dropped with it). ECA
+  *    `$`-parameters for periodic alerts bind from the group key (a
+  *    window has no single triggering event);
+  *  - the pass's output is persisted: collecting at most
+  *    `maxFiredPerBatch` fired alerts for the ECA step (the driver is a
+  *    control plane, not a data plane) materializes it, and the new tail
+  *    is checkpointed from the cache;
   *  - CLEAR_STATE_ALL (C7): drops the whole tail before evaluation
   *    (reference `DynamicQueryFunction.java:339-341`
   *    applyToKeyedState(clear)); already-emitted windows stay emitted,
-  *    subsequent aggregates start empty;
-  *  - alert storm safety: at most `maxFiredPerBatch` fired alerts are
-  *    collected for the ECA step per batch (the driver is a control
-  *    plane, not a data plane).
+  *    subsequent aggregates start empty.
   *
   * The tail is an ordinary DataFrame: per batch it is coalesced to the
   * default parallelism and `localCheckpoint()`ed (block-store backed,
@@ -132,126 +129,52 @@ final class DynamicActiveEngine(
     }
     val rules = store.snapshot()
     if (rules.isEmpty) return (None, noCkpt)
+    val spark = batch.sparkSession
+    import spark.implicits._
 
-    // Persist the FRESH (fanned-out batch) side only (optimization
-    // r22): the previous shape persisted the whole tail ∪ fresh union,
-    // so every batch re-cached the tail's rows (already block-backed
-    // by its localCheckpoint) and the curMax agg scanned tail + batch.
-    // Consumers now read tail blocks directly plus this batch-sized
-    // cache; the union below stays a lazy plan.
-    val freshC = FanOut.auto(batch, rules, tsCol).toDF()
+    // persisted: read by the curMax job and by the keyed pass
+    val fresh = FanOut.auto(batch, rules, tsCol).toDF()
       .withColumn("fresh", lit(true))
       .persist()
-    val combined = tail match {
-      case Some(t) => t.withColumn("fresh", lit(false)).unionByName(freshC)
-      case None => freshC
-    }
     try {
-      // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis
-      // is ≤ the maxSeenTs of the batch that retained it, so the old
-      // whole-union aggregate and this batch-only one are equal —
-      // the agg now scans O(batch), never the tail (optimization r22).
-      val curMaxRaw = freshC.agg(max(col("tsMillis"))).head().get(0)
-      if (curMaxRaw == null && maxSeenTs == Long.MinValue)
-        return (None, noCkpt)
-      val curMax =
-        if (curMaxRaw == null) maxSeenTs
-        else math.max(curMaxRaw.asInstanceOf[Long], maxSeenTs)
+      // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis is
+      // ≤ the maxSeenTs of the batch that retained it, so only the fresh
+      // side is scanned
+      val batchMax = fresh.select(col("tsMillis")).as[Long]
+        .mapPartitions(it => if (it.hasNext) Iterator(it.max) else Iterator.empty)
+        .collect()
+      if (batchMax.isEmpty && maxSeenTs == Long.MinValue) return (None, noCkpt)
+      val curMax = (batchMax :+ maxSeenTs).max
 
       val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
-      val passthroughIds = rules.filter(_.isPassthrough).flatMap(_.queryId)
-      val perEventIds = rules.filter(r => r.isPerEventEmission && !r.isPassthrough)
-        .flatMap(_.queryId)
-      val periodic = rules.filter(r => !r.isPerEventEmission && !r.isPassthrough)
-
-      // W4: raw passthrough — one alert per fresh matching event, no state
-      // (reference `DynamicQueryFunction.java:93-116`)
-      val passthroughAlerts: Option[DataFrame] =
-        if (passthroughIds.isEmpty) None
-        else Some(filterByRuleIds(combined, passthroughIds)
-          .filter(col("fresh"))
-          .select(col("ruleId"), col("key"), col("tsMillis"),
-            col("aggIn").as("aggregate"), lit(true).as("passed"), col("payload")))
-      val perEventAlerts: Option[Dataset[Alert]] =
-        if (perEventIds.isEmpty) None
-        else Some(evalPerEvent(
-          filterByRuleIds(combined, perEventIds), rulesById))
-      // one plan per distinct (window, slide) — NOT per rule: with
-      // thousands of periodic rules a per-rule union makes Catalyst
-      // analysis the per-batch bottleneck (same scaling argument as
-      // FanOut.CompiledRuleLimit)
-      val periodicAlerts: Option[DataFrame] = periodic
-        .groupBy(r => (r.windowMilliseconds.get, slideOf(r)))
-        .values.toSeq
-        .map(group => evalPeriodic(combined, group, emittedThrough, curMax))
-        .reduceOption(_ unionByName _)
-
-      implicit val alertEnc = Encoders.product[Alert]
-      val alerts: Option[Dataset[Alert]] =
-        (perEventAlerts.toSeq ++
-          (passthroughAlerts.toSeq ++ periodicAlerts.toSeq).map(_.as[Alert]))
-          .reduceOption(_ unionByName _)
-      // Tail update: per-rule retention horizon, broadcast-joined so a
-      // dropped rule's rows (= its state) vanish with it.
-      val spark = batch.sparkSession
-      import spark.implicits._
-      // curMax rides the broadcast horizons frame's DATA, not a literal
-      // (optimization r21, same reasoning as evalPeriodic's bounds
-      // frame): a per-batch literal re-compiles the tail stage's
-      // generated class every batch.
-      val horizons = rules.flatMap(r => r.queryId.map(id => (id,
-        r.windowMilliseconds.getOrElse(0L) +
-          r.frequencyMilliseconds.filter(_ > 0).getOrElse(0L),
-        curMax)))
-        .toDF("ruleId", "hz", "__cm")
-      // The tail checkpoint depends only on (combined, curMax) — never
-      // on the alert plans — so its eager materialization overlaps the
-      // alert collect on a second thread (guide §2.6 "overlap
-      // independent jobs"; optimization r22): previously the two
-      // driver-blocking actions ran back to back under the monitor.
-      // Thread created here so Spark's inheritable job-group properties
-      // carry over; joined before the state vars advance.
-      val tailT = new java.util.concurrent.FutureTask(() =>
-        combined
-          .join(broadcast(horizons), "ruleId")
-          .filter(col("tsMillis") >= col("__cm") - col("hz"))
-          .select("ruleId", "key", "tsMillis", "aggIn", "payload")
-          .transform(retain))
-      val tailTh = new Thread(tailT, "engine-tail-checkpoint")
-      tailTh.setDaemon(true)
-      tailTh.start()
-      // collect (a Spark action) under the monitor — emit-once depends on
-      // the horizon and the collected set advancing together; the sink
-      // and ECA spawn run after the monitor is released
-      val fired =
-        try alerts.map(collectFired).getOrElse(Seq.empty)
-        catch { case e: Throwable =>
-          // the concurrently-built tail must not leak its blocks when
-          // the collect fails (the pre-r22 sequential shape never built
-          // it on this path)
-          try { tailT.get().unpersist(false); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw e
-        }
-
-      emittedThrough = math.max(emittedThrough, curMax)
-      maxSeenTs = curMax
-
-      val newTail =
-        try tailT.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-        }
-      tail.foreach(_.unpersist(false))
-      tail = Some(newTail)
-      // snapshot the post-batch state under the monitor; the WRITE runs
-      // after delivery (see processBatch) so a crash mid-delivery keeps
-      // the pre-batch checkpoint and recovery re-emits, never loses
-      val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
-      val ckpt: () => Unit = () =>
-        checkpointDir.foreach(writeCheckpoint(spark, _, ckptTail, ckptMax, ckptEmitted))
-      (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
-    } finally freshC.unpersist(false)
+      val rows = tail match {
+        case Some(t) => t.withColumn("fresh", lit(false)).unionByName(fresh)
+        case None => fresh
+      }
+      val out = evaluate(rows, rulesById, emittedThrough, curMax, curMax).persist()
+      try {
+        // the alert collect materializes `out`, and the tail's checkpoint
+        // reads it from the cache. Both run under the monitor: emit-once
+        // depends on the horizon and the collected set advancing
+        // together; the sink and ECA spawn run after the monitor is
+        // released
+        val fired = collectFired(out)
+        val newTail = retain(out.filter(!col("fired"))
+          .select(col("ruleId"), col("key"), col("tsMillis"), col("value").as("aggIn"),
+            col("payload")))
+        emittedThrough = math.max(emittedThrough, curMax)
+        maxSeenTs = curMax
+        tail.foreach(_.unpersist(false))
+        tail = Some(newTail)
+        // snapshot the post-batch state under the monitor; the WRITE runs
+        // after delivery (see processBatch) so a crash mid-delivery keeps
+        // the pre-batch checkpoint and recovery re-emits, never loses
+        val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
+        val ckpt: () => Unit = () =>
+          checkpointDir.foreach(writeCheckpoint(spark, _, ckptTail, ckptMax, ckptEmitted))
+        (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
+      } finally out.unpersist(false)
+    } finally fresh.unpersist(false)
   }
 
   /** W2/W3 under a STALLED source: finalize periodic windows whose end
@@ -297,26 +220,20 @@ final class DynamicActiveEngine(
         if (periodic.isEmpty) None
         else {
           val maxHz = periodic
-            .map(r => r.windowMilliseconds.get + slideOf(r)).max
+            .map(r => r.windowMilliseconds.get + DynamicActiveEngine.slideOf(r)).max
           val horizon = math.min(horizonMs, maxSeenTs + maxHz)
           if (horizon <= emittedThrough) None
           else {
-            val loEnd = emittedThrough
-            val fired = tail match {
-              case Some(t) =>
-                implicit val alertEnc = Encoders.product[Alert]
-                periodic.groupBy(r => (r.windowMilliseconds.get, slideOf(r)))
-                  .values.toSeq
-                  .map(group => evalPeriodic(t, group, loEnd, horizon))
-                  .reduceOption(_ unionByName _)
-                  .map(df => collectFired(df.as[Alert]))
-                  .getOrElse(Seq.empty)
-              case None => Seq.empty
-            }
+            val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
+            // the batch kernel over the tail alone: with no fresh rows only
+            // periodic windows can fire, and the retained rows are dropped
+            val fired = tail.fold(Seq.empty[Alert])(t => collectFired(
+              evaluate(t.withColumn("fresh", lit(false)), rulesById,
+                emittedThrough, horizon, maxSeenTs)))
             // collect succeeded — advance the emit-once horizon now
             emittedThrough = horizon
             if (fired.isEmpty) None
-            else Some((fired, rules.flatMap(r => r.queryId.map(_ -> r)).toMap))
+            else Some((fired, rulesById))
           }
         }
       }
@@ -357,26 +274,31 @@ final class DynamicActiveEngine(
     () => { ex.shutdownNow(); () }
   }
 
-  /** Filter to rows whose ruleId is in `ids`, as a broadcast-DATA
-    * semi-join rather than an inlined `isin` literal list (optimization
-    * r22, the r21 horizon-bounds pattern): spawned-rule ids are
-    * wall-clock snowflakes, so an isin list makes the generated class
-    * textually NEW whenever the rule set changed (ECA spawn, live merge)
-    * — broadcast-side data is referenced, not inlined, keeping the
-    * generated source (and the Janino + JIT bill) identical batch over
-    * batch. Identical rows: queryIds are unique and non-null. */
-  private def filterByRuleIds(df: DataFrame, ids: Seq[Long]): DataFrame = {
-    val spark = df.sparkSession
+  /** The keyed pass: `rows` (tail ∪ fresh, flagged by `fresh`) grouped by
+    * (rule, key) through [[DynamicActiveEngine.evalGroup]]. The rule map
+    * ships as a Spark broadcast variable — once per executor, not once per
+    * task closure, and no broadcast exchange in the plan. */
+  private def evaluate(rows: DataFrame, rulesById: Map[Long, Rule],
+      lo: Long, hi: Long, curMax: Long): Dataset[DynamicActiveEngine.EngineOut] = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    df.join(broadcast(ids.toDF("ruleId")), "ruleId")
+    val bcRules = spark.sparkContext.broadcast(rulesById)
+    rows.as[DynamicActiveEngine.EngineRow]
+      .groupByKey(r => (r.ruleId, r.key))
+      .flatMapGroups { (group: (Long, String), it: Iterator[DynamicActiveEngine.EngineRow]) =>
+        DynamicActiveEngine.evalGroup(bcRules.value, group._1, group._2, it, lo, hi, curMax)
+      }
   }
 
-  /** Collect fired alerts (bounded) — the Spark-action half, run under
-    * the engine monitor by both paths. `col("passed")` keeps the
-    * predicate in codegen; `_.passed` would deserialize every Alert
-    * into an object just to read one boolean (optimization r22). */
-  private def collectFired(ds: Dataset[Alert]): Seq[Alert] =
-    ds.filter(col("passed")).limit(maxFiredPerBatch).collect().toSeq
+  /** Collect the fired alerts of a keyed pass, at most `maxFiredPerBatch`
+    * (the driver is a control plane, not a data plane): each partition
+    * ships at most that many, in one job. */
+  private def collectFired(out: Dataset[DynamicActiveEngine.EngineOut]): Seq[Alert] = {
+    implicit val alertEnc = Encoders.product[Alert]
+    val cap = maxFiredPerBatch
+    out.mapPartitions(_.filter(_.fired).map(_.alert).take(cap))
+      .collect().toSeq.take(cap)
+  }
 
   /** Deliver to the sink and run the ECA spawn step — run OUTSIDE the
     * monitor so a blocking sink never wedges batch progress or the
@@ -443,147 +365,14 @@ final class DynamicActiveEngine(
     * them: per-batch task counts and checkpoint files grew with uptime.
     * `coalesce` is narrow (no shuffle) and a no-op while the tail is
     * already this small; rows are unchanged, and no consumer depends on
-    * their order ([[evalPerEvent]] sorts each group itself). */
+    * their order ([[DynamicActiveEngine.evalGroup]] sorts what it
+    * replays). */
   private def retain(df: DataFrame): DataFrame =
     df.coalesce(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint(true)
 
   /** Partition count of the retained tail (0 when there is none). */
   private[graft] def tailPartitions: Int =
     tail.fold(0)(_.rdd.getNumPartitions)
-
-  /** W1 replay over tail ∪ fresh: identical bucket arithmetic to
-    * [[SlidingStateExec]], emitting only for fresh (this-batch) events.
-    * The rule map ships as a Spark broadcast — once per executor, not
-    * once per task closure (at the reference's thousands-of-rules scale
-    * the closure copy is per-task serialization on every batch). */
-  private def evalPerEvent(keyed: DataFrame,
-      rulesById: Map[Long, Rule]): Dataset[Alert] = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    implicit val alertEnc = Encoders.product[Alert]
-    val bcRules = spark.sparkContext.broadcast(rulesById)
-    keyed.select("ruleId", "key", "tsMillis", "aggIn", "payload", "fresh")
-      .as[(Long, String, Long, String, String, Boolean)]
-      .groupByKey { case (rid, key, _, _, _, _) => (rid, key) }
-      .flatMapGroups[Alert] { (group: (Long, String),
-          it: Iterator[(Long, String, Long, String, String, Boolean)]) =>
-        val (rid, key) = group
-        bcRules.value.get(rid) match {
-          case Some(rule) if rule.isPerEventEmission =>
-            val w = rule.windowMilliseconds.getOrElse(0L)
-            // deterministic replay order, as SlidingStateExec sorts batches
-            val evs = it.toArray.sortBy { case (_, _, ts, _, p, _) => (ts, p) }
-            val out = scala.collection.mutable.ArrayBuffer.empty[Alert]
-            var buckets = Map.empty[Long, SlidingStateExec.Bucket]
-            for ((_, _, ts, aggIn, payload, isFresh) <- evs) {
-              buckets = SlidingStateExec.insert(buckets, ts, aggIn)
-              buckets = buckets.filter { case (t, _) => t >= ts - w }
-              if (isFresh) {
-                val agg = SlidingStateExec.merge(rule, buckets, ts - w, ts)
-                out += Alert(rid, key, ts, agg.toPlainString,
-                  rule.applyLimit(BigDecimal(agg)), payload)
-              }
-            }
-            out.iterator
-          case _ => Iterator.empty
-        }
-      }
-  }
-
-  /** Effective slide of a periodic rule: its emission frequency when it
-    * is a genuine sub-window period, else tumbling (= window). */
-  private def slideOf(r: Rule): Long = {
-    val w = r.windowMilliseconds.get
-    r.frequencyMilliseconds.filter(f => f > 0 && f <= w).getOrElse(w)
-  }
-
-  /** W2/W3: finalize aligned windows whose end fell in `(loEnd, hiEnd]`,
-    * for a whole GROUP of rules sharing one (window, slide) — one
-    * `groupBy(ruleId, key, window)` pass computes every aggregate shape
-    * (count / sum / min / max / exact micro-unit avg) once, then a
-    * broadcast per-rule meta join picks each rule's aggregate and applies
-    * its HAVING as a codegen'd CASE. Plan size is O(distinct window
-    * shapes), constant in rule count. Emitted rows are HAVING-passed
-    * (the reference's periodic path only outputs firing evaluations). */
-  private def evalPeriodic(combined: DataFrame, group: Seq[Rule],
-      loEnd: Long, hiEnd: Long): DataFrame = {
-    val spark = combined.sparkSession
-    import spark.implicits._
-    val w = group.head.windowMilliseconds.get
-    val slide = slideOf(group.head)
-    val rids = group.flatMap(_.queryId)
-    val meta = group.flatMap(r => r.queryId.map(id => (id,
-      if (r.isCount) "COUNT" else r.aggregatorFunctionType.fold("SUM")(_.name),
-      (r.limitOperatorType, r.limit) match {
-        case (Some(op), Some(_)) => op.name
-        case _                   => null
-      },
-      r.limit.map(_.bigDecimal.toPlainString).orNull)))
-      .toDF("ruleId", "aggType", "limitOp", "limitVal")
-
-    val D = RuleCompiler.RuleDecimal
-    // try_cast: COUNT-sentinel rules carry aggIn = "" (no value), which a
-    // plain ANSI cast rejects; their rows must still count via __cnt_dec
-    val dec = expr(s"try_cast(aggIn AS ${D.sql})")
-    // the (loEnd, hiEnd] horizon bounds ride a broadcast 1-row frame
-    // instead of literals (optimization r21): a primitive literal
-    // INLINES into the whole-stage-codegen source, so the per-batch
-    // horizon values made every batch's generated class textually new —
-    // Janino recompiled + the JVM re-JITted ~12–19 classes per batch
-    // across a replay (q185 cg_n 96–98 per run). Broadcast-side DATA is
-    // passed by reference in generated code, so the source — and the
-    // compiled class — is identical batch over batch. Same rows out.
-    val bounds = Seq((loEnd, hiEnd)).toDF("__lo_end", "__hi_end")
-    val agged = filterByRuleIds(combined, rids)
-      .withColumn("__ts", timestamp_millis(col("tsMillis")))
-      .groupBy(col("ruleId"), col("key"),
-        window(col("__ts"), s"$w milliseconds", s"$slide milliseconds"))
-      .agg(
-        count(lit(1)).cast(D).as("__cnt_dec"),
-        sum(dec).cast(D).as("__sum"),
-        min(dec).cast(D).as("__min"),
-        max(dec).cast(D).as("__max"),
-        // exact AVG partials: micro-unit integer sum, HALF_UP at the end
-        // (same arithmetic as RuleCompiler.aggPlan's Avg plan)
-        sum((dec * lit(1000000)).cast("long")).as("__sum_micro"),
-        count(dec).as("__cnt"))
-      .withColumn("__w_end", unix_millis(col("window.end")))
-      .crossJoin(broadcast(bounds))
-      .filter(col("__w_end") > col("__lo_end") &&
-        col("__w_end") <= col("__hi_end"))
-      .drop("__lo_end", "__hi_end")
-    // guard: a window whose events all lack a value has __cnt = 0 — the
-    // div would be an ANSI divide-by-zero at runtime even though only
-    // AVG rules select this branch
-    val avg = when(col("__cnt") > 0,
-      (expr("(2 * __sum_micro + __cnt) div (2 * __cnt)") / lit(1000000.0)).cast(D))
-      .otherwise(lit(null).cast(D))
-    val aggVal = when(col("aggType") === "COUNT", col("__cnt_dec"))
-      .when(col("aggType") === AggregatorType.Sum.name, col("__sum"))
-      .when(col("aggType") === AggregatorType.Min.name, col("__min"))
-      .when(col("aggType") === AggregatorType.Max.name, col("__max"))
-      .otherwise(avg)
-    val lim = col("limitVal").cast(D)
-    val a = col(RuleCompiler.AggAlias)
-    val passed = when(col("limitOp").isNull, lit(true))
-      .when(col("limitOp") === CompareOp.Equal.name, a === lim)
-      .when(col("limitOp") === CompareOp.NotEqual.name, a =!= lim)
-      .when(col("limitOp") === CompareOp.Greater.name, a > lim)
-      .when(col("limitOp") === CompareOp.Less.name, a < lim)
-      .when(col("limitOp") === CompareOp.GreaterEqual.name, a >= lim)
-      .otherwise(a <= lim)
-    agged
-      .join(broadcast(meta), "ruleId")
-      .withColumn(RuleCompiler.AggAlias, aggVal)
-      .filter(passed)
-      .select(
-        col("ruleId"),
-        col("key"),
-        unix_millis(col("window.start")).as("tsMillis"),
-        a.cast("string").as("aggregate"),
-        lit(true).as("passed"),
-        lit("").as("payload"))
-  }
 
   /** ECA `$`-binding source for one alert: the triggering event's fields
     * (per-event alerts carry the event as JSON) or, for periodic alerts,
@@ -594,6 +383,129 @@ final class DynamicActiveEngine(
 }
 
 object DynamicActiveEngine {
+  /** A fanned-out event as the keyed pass reads it: the tail's columns,
+    * plus `fresh` for the rows of the batch being processed. */
+  private[graft] final case class EngineRow(ruleId: Long, key: String,
+      tsMillis: Long, aggIn: String, payload: String, fresh: Boolean)
+
+  /** One row out of the keyed pass: a fired alert (`value` = its
+    * aggregate) or, when `fired` is false, a retained tail row (`value` =
+    * its `aggIn`). */
+  private[graft] final case class EngineOut(ruleId: Long, key: String,
+      tsMillis: Long, value: String, payload: String, fired: Boolean) {
+    def alert: Alert = Alert(ruleId, key, tsMillis, value, passed = true, payload)
+  }
+
+  /** The engine's kernel: everything one batch does for one (rule, key)
+    * group, as a pure function of its rows. It emits the HAVING-passed
+    * alerts of the rule's kind, then the rows the tail retains.
+    *
+    *  - passthrough (W4): one alert per fresh row, aggregate = `aggIn`
+    *    (reference `DynamicQueryFunction.java:93-116`);
+    *  - per-event (W1): the group replays in (ts, payload) order through
+    *    [[SlidingStateExec.insert]]/[[SlidingStateExec.merge]], and each
+    *    fresh row gets its trailing `[t-w, t]` aggregate;
+    *  - periodic (W2/W3): epoch-aligned windows `[start, start+w)`, one
+    *    every slide, are finalized when their end falls in `(lo, hi]`,
+    *    with `tsMillis = start` and an empty payload (the event-time
+    *    rendering of the reference's emission timers,
+    *    `DynamicQueryFunction.java:118-147`). Aggregates render at scale
+    *    6; AVG is `(2Σµ + n) div (2n)` over the n rows holding a value,
+    *    and a non-COUNT window with no value has a null aggregate, which
+    *    fires only when the rule has no HAVING;
+    *  - eviction (W5, P5): rows with `ts ≥ curMax − (window + period)`
+    *    are retained. A rule missing from `rules` (deleted) emits and
+    *    retains nothing, so its state goes with it (reference guard
+    *    `DynamicQueryFunction.java:85-88`). */
+  private[graft] def evalGroup(rules: Map[Long, Rule], ruleId: Long, key: String,
+      rows: Iterator[EngineRow], lo: Long, hi: Long, curMax: Long): Iterator[EngineOut] =
+    rules.get(ruleId) match {
+      case None => Iterator.empty
+      case Some(rule) =>
+        val all = rows.toArray
+        val alerts =
+          if (rule.isPassthrough)
+            all.iterator.filter(_.fresh)
+              .map(r => EngineOut(ruleId, key, r.tsMillis, r.aggIn, r.payload, fired = true))
+          else if (rule.isPerEventEmission) perEvent(rule, ruleId, key, all)
+          else periodic(rule, ruleId, key, all, lo, hi)
+        val oldest = curMax - (rule.windowMilliseconds.getOrElse(0L) +
+          rule.frequencyMilliseconds.filter(_ > 0).getOrElse(0L))
+        alerts ++ all.iterator.filter(_.tsMillis >= oldest)
+          .map(r => EngineOut(ruleId, key, r.tsMillis, r.aggIn, r.payload, fired = false))
+    }
+
+  private def perEvent(rule: Rule, ruleId: Long, key: String,
+      rows: Array[EngineRow]): Iterator[EngineOut] = {
+    val w = rule.windowMilliseconds.getOrElse(0L)
+    val out = scala.collection.mutable.ArrayBuffer.empty[EngineOut]
+    var buckets = Map.empty[Long, SlidingStateExec.Bucket]
+    // deterministic replay order, as SlidingStateExec sorts batches
+    for (r <- rows.sortBy(r => (r.tsMillis, r.payload))) {
+      buckets = SlidingStateExec.insert(buckets, r.tsMillis, r.aggIn)
+        .filter { case (t, _) => t >= r.tsMillis - w }
+      if (r.fresh) {
+        val agg = SlidingStateExec.merge(rule, buckets, r.tsMillis - w, r.tsMillis)
+        if (rule.applyLimit(BigDecimal(agg)))
+          out += EngineOut(ruleId, key, r.tsMillis, agg.toPlainString, r.payload, fired = true)
+      }
+    }
+    out.iterator
+  }
+
+  /** Running partials of one periodic window, in micro-units. */
+  private final class WindowAcc {
+    var rows = 0L; var n = 0L; var sum = 0L
+    var min = Long.MaxValue; var max = Long.MinValue
+  }
+
+  private def periodic(rule: Rule, ruleId: Long, key: String, rows: Array[EngineRow],
+      lo: Long, hi: Long): Iterator[EngineOut] = {
+    import graft.model.AggregatorType._
+    val w = rule.windowMilliseconds.get
+    val slide = slideOf(rule)
+    val wins = scala.collection.mutable.TreeMap.empty[Long, WindowAcc]
+    for (r <- rows) {
+      val v = SlidingStateExec.micro(r.aggIn)
+      // the windows holding r (start ≤ ts < start + w) whose end is in
+      // (lo, hi]: aligned starts in (max(ts, lo) − w, min(ts, hi − w)]
+      val top = math.min(r.tsMillis, hi - w)
+      var start = top - Math.floorMod(top, slide)
+      while (start > math.max(r.tsMillis, lo) - w) {
+        val a = wins.getOrElseUpdate(start, new WindowAcc)
+        a.rows += 1
+        v.foreach { m =>
+          a.n += 1; a.sum += m
+          a.min = math.min(a.min, m); a.max = math.max(a.max, m)
+        }
+        start -= slide
+      }
+    }
+    val hasHaving = rule.limitOperatorType.isDefined && rule.limit.isDefined
+    wins.iterator.flatMap { case (start, a) =>
+      val agg: JBigDecimal =
+        if (rule.isCount) JBigDecimal.valueOf(a.rows).setScale(6)
+        else if (a.n == 0) null
+        else rule.aggregatorFunctionType.getOrElse(Sum) match {
+          case Sum => JBigDecimal.valueOf(a.sum, 6)
+          case Avg => JBigDecimal.valueOf((2 * a.sum + a.n) / (2 * a.n), 6)
+          case Min => JBigDecimal.valueOf(a.min, 6)
+          case Max => JBigDecimal.valueOf(a.max, 6)
+        }
+      val fires = if (agg == null) !hasHaving else rule.applyLimit(BigDecimal(agg))
+      if (fires) Some(EngineOut(ruleId, key, start,
+        if (agg == null) null else agg.toPlainString, "", fired = true))
+      else None
+    }
+  }
+
+  /** Effective slide of a periodic rule: its emission frequency when it
+    * is a genuine sub-window period, else tumbling (= window). */
+  private[streaming] def slideOf(r: Rule): Long = {
+    val w = r.windowMilliseconds.get
+    r.frequencyMilliseconds.filter(f => f > 0 && f <= w).getOrElse(w)
+  }
+
   /** Parse the reference-format composite key string
     * (`KeysExtractor.java:19-41`) back to a field map. */
   def keyFields(key: String): Map[String, String] = {

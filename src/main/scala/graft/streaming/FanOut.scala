@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * does NOT share the source scan across branches: the compiled side is
   * a union of one scan per rule, so its output has rules × input
   * partitions partitions (96 for 24 rules over a 4-partition batch).
-  * What keeps per-batch task counts flat is the dynamic engine's bound
-  * on its retained tail ([[DynamicActiveEngine]] coalesces it to the
-  * default parallelism), not this fan-out.
+  * [[DynamicActiveEngine]] persists this output and reads it twice, in
+  * its curMax job and on the map side of its one keyed shuffle, so those
+  * stages run a task per partition. Everything downstream is bounded
+  * apart from the fan-out: the shuffle's reduce side by the shuffle
+  * partitions, the retained tail by the default parallelism.
   *
   * Output is the normalized [[KeyedEvent]]: event-time millis, aggregate
   * input as an exact decimal string, full event payload as JSON.

@@ -91,7 +91,7 @@ object SlidingStateExec {
   }
 
   /** Parse the scale-6 decimal string once, to micro-units. */
-  private def micro(s: String): Option[Long] =
+  private[streaming] def micro(s: String): Option[Long] =
     if (s == null || s.isEmpty) None
     else Some(new JBigDecimal(s).movePointRight(6).longValueExact())
 

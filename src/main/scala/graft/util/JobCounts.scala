@@ -11,11 +11,11 @@ import org.apache.spark.sql.graftbridge.BusBridge
   * thread runs in.
   *
   * The region rides a local property, which the threads a region starts
-  * inherit (Structured Streaming's execution thread, the engine's tail
-  * checkpoint, the gate's evidence branch), so a streaming query's
-  * trigger jobs count toward the region that started it. The job group
-  * (`spark.jobGroup.id`) cannot carry it: each stream execution thread
-  * overwrites its group with the stream's run id. */
+  * inherit (Structured Streaming's execution thread, the gate's evidence
+  * branch), so a streaming query's trigger jobs count toward the region
+  * that started it. The job group (`spark.jobGroup.id`) cannot carry it:
+  * each stream execution thread overwrites its group with the stream's
+  * run id. */
 final class JobCounts(spark: SparkSession) {
   private val jobs = mutable.Map.empty[String, Long].withDefaultValue(0L)
   private val stages = mutable.Map.empty[String, Long].withDefaultValue(0L)

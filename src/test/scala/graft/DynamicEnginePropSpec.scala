@@ -15,46 +15,42 @@ import org.scalacheck.rng.Seed
 class DynamicEnginePropSpec extends SparkSpec {
   import spark.implicits._
 
-  private val base = 1700000000000L - (1700000000000L % 10000L)
+  // aligned to every window and slide drawn below
+  private val base = 1700000000000L - (1700000000000L % 30000L)
 
-  private val perEventAvg = Rule(
-    queryId = Some(1L),
-    groupingKeyNames = Seq("carId"),
-    aggregateFieldName = Some("speed"),
-    aggregatorFunctionType = Some(AggregatorType.Avg),
-    limitOperatorType = Some(CompareOp.Greater),
-    limit = Some(BigDecimal(60)),
-    windowMilliseconds = Some(10000L),
-    frequencyMilliseconds = Some(0L))
-  private val perEventCount = Rule(
-    queryId = Some(2L),
-    groupingKeyNames = Seq("carId"),
-    aggregateFieldName = Some(Rule.CountSentinel),
-    limitOperatorType = Some(CompareOp.GreaterEqual),
-    limit = Some(BigDecimal(2)),
-    windowMilliseconds = Some(5000L),
-    frequencyMilliseconds = Some(0L))
-  private val tumblingSum = Rule(
-    queryId = Some(3L),
-    groupingKeyNames = Seq("carId"),
-    aggregateFieldName = Some("speed"),
-    aggregatorFunctionType = Some(AggregatorType.Sum),
-    limitOperatorType = Some(CompareOp.Greater),
-    limit = Some(BigDecimal(50)),
-    windowMilliseconds = Some(10000L))
-  private val slidingMax = Rule(
-    queryId = Some(4L),
-    groupingKeyNames = Seq("carId"),
-    aggregateFieldName = Some("speed"),
-    aggregatorFunctionType = Some(AggregatorType.Max),
-    limitOperatorType = Some(CompareOp.Greater),
-    limit = Some(BigDecimal(90)),
-    windowMilliseconds = Some(10000L),
-    frequencyMilliseconds = Some(5000L))
-  private val passthrough = Rule(
-    queryId = Some(5L),
-    windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "100")))
-  private val rules = Seq(perEventAvg, perEventCount, tumblingSum, slidingMax, passthrough)
+  /** One rule of a drawn shape — per-event, tumbling, sliding with a slide
+    * that does not divide the window, passthrough, or COUNT (per-event or
+    * periodic) — with a random aggregator, HAVING operator and limit. */
+  private def rule(id: Long): Gen[Rule] = for {
+    shape <- Gen.oneOf("perEvent", "tumbling", "sliding", "passthrough", "count")
+    agg <- Gen.oneOf(AggregatorType.all)
+    op <- Gen.oneOf(CompareOp.all)
+    limit <- Gen.choose(0, 120)
+    perEventCount <- Gen.oneOf(true, false)
+    threshold <- Gen.oneOf("40", "80", "100")
+  } yield {
+    val r = Rule(
+      queryId = Some(id),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(agg),
+      limitOperatorType = Some(op),
+      limit = Some(BigDecimal(limit)),
+      windowMilliseconds = Some(10000L))
+    shape match {
+      case "perEvent" => r.copy(frequencyMilliseconds = Some(0L))
+      case "tumbling" => r
+      case "sliding" => r.copy(frequencyMilliseconds = Some(3000L))
+      case "passthrough" => r.copy(windowMilliseconds = None,
+        windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, threshold)))
+      case _ => r.copy(aggregateFieldName = Some(Rule.CountSentinel),
+        aggregatorFunctionType = None, limit = Some(BigDecimal(limit % 5)),
+        frequencyMilliseconds = if (perEventCount) Some(0L) else None)
+    }
+  }
+
+  private val rules: Gen[Seq[Rule]] =
+    Gen.choose(1, 6).flatMap(n => Gen.sequence[Seq[Rule], Rule]((1 to n).map(i => rule(i.toLong))))
 
   private type Ev = (Int, java.sql.Timestamp, Double)
 
@@ -72,7 +68,7 @@ class DynamicEnginePropSpec extends SparkSpec {
   private def cuts(n: Int): Gen[Seq[Int]] =
     Gen.choose(1, 3).flatMap(k => Gen.pick(k, 1 until n)).map(_.toSeq.sorted)
 
-  private def fired(batches: Seq[Seq[Ev]], partitions: Int): List[Alert] = {
+  private def fired(rules: Seq[Rule], batches: Seq[Seq[Ev]], partitions: Int): List[Alert] = {
     val engine = new DynamicActiveEngine()
     rules.foreach(engine.store.merge(_))
     val out = scala.collection.mutable.ArrayBuffer.empty[Alert]
@@ -87,18 +83,22 @@ class DynamicEnginePropSpec extends SparkSpec {
 
   test("fired alerts are invariant under batch cuts and input partitioning") {
     val gen = for {
+      rs <- rules
       evs <- events
       cs <- cuts(evs.size)
       parts <- Gen.oneOf(1, 4)
-    } yield (evs, cs, parts)
-    val prop = Prop.forAllNoShrink(gen) { case (evs, cs, parts) =>
+    } yield (rs, evs, cs, parts)
+    // emission kinds that fired across all cases: the property must not
+    // hold vacuously
+    val kinds = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(gen) { case (rs, evs, cs, parts) =>
       val sliced = (0 +: cs).zip(cs :+ evs.size).map { case (a, b) => evs.slice(a, b) }
-      val oneBatch = fired(Seq(evs), 1)
-      val modes = oneBatch.map(_.ruleId).toSet
-      ((modes(1L) || modes(2L)) && (modes(3L) || modes(4L)) && modes(5L)) :|
-        s"reference run fires every emission mode: $modes" &&
-      (fired(Seq(evs), 4) == oneBatch) :| "one batch, 4 partitions" &&
-      (fired(sliced, parts) == oneBatch) :| s"cuts at $cs, $parts partitions"
+      val oneBatch = fired(rs, Seq(evs), 1)
+      for (a <- oneBatch; r <- rs.find(_.queryId.contains(a.ruleId)))
+        kinds += (if (r.isPassthrough) "passthrough"
+          else if (r.isPerEventEmission) "per-event" else "periodic")
+      (fired(rs, Seq(evs), 4) == oneBatch) :| "one batch, 4 partitions" &&
+      (fired(rs, sliced, parts) == oneBatch) :| s"cuts at $cs, $parts partitions, rules $rs"
     }
     val params = Test.Parameters.default
       .withMinSuccessfulTests(6)
@@ -106,5 +106,6 @@ class DynamicEnginePropSpec extends SparkSpec {
       .withInitialSeed(Seed(20261018L))
     val res = Test.check(params, prop)
     assert(res.passed, res.status)
+    assert(kinds == Set("passthrough", "per-event", "periodic"), s"kinds fired: $kinds")
   }
 }

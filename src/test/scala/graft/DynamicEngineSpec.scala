@@ -117,10 +117,10 @@ class DynamicEngineSpec extends SparkSpec {
     assert(w4.map(_.tsMillis) == List(base + 2000))
   }
 
-  test("grouped periodic pass evaluates every aggregator + HAVING shape in ONE plan (W2)") {
-    // Five periodic rules sharing (window=10s, tumbling) — the engine must
-    // evaluate them in a single groupBy pass (plan size O(window shapes),
-    // not O(rules)) and still give each rule its own aggregate and HAVING.
+  test("periodic rules sharing a window keep their own aggregator and HAVING (W2)") {
+    // Five periodic rules sharing (window=10s, tumbling): each rule's
+    // window carries its own aggregate, rendered at scale 6, and fires on
+    // its own HAVING.
     def mk(id: Long, agg: Option[AggregatorType], field: String,
         op: Option[CompareOp], lim: Option[Int]) = Rule(
       queryId = Some(id),
@@ -231,11 +231,10 @@ class DynamicEngineSpec extends SparkSpec {
   }
 
   test("200 periodic rules sharing a window evaluate in one batch without plan blowup") {
-    // The grouped pass claims plan size O(distinct window shapes): 200
-    // same-window rules must run as ONE groupBy + meta join, so the
-    // per-batch wall time stays flat (a per-rule union would analyze 200
-    // plan branches). Assert correctness of a spread of rules + a sane
-    // wall-clock bound that a 200-branch union reliably blows through.
+    // Rules are data to the keyed pass, so the plan does not grow with the
+    // rule count: 200 same-window rules with thresholds 0..199 each fire
+    // on their own HAVING, inside a wall-clock bound that a plan with one
+    // branch per rule (200 to analyze) reliably blows through.
     val rules = (0 until 200).map { i =>
       Rule(
         queryId = Some(2000L + i),
@@ -476,6 +475,45 @@ class DynamicEngineSpec extends SparkSpec {
       assert(restored.tailPartitions > 0 && restored.tailPartitions <= maxParts,
         s"$inert inert rules, restored tail has ${restored.tailPartitions} partitions")
     }
+  }
+
+  test("a batch on a mixed store runs at most 6 Spark jobs") {
+    // One keyed pass per batch: the fresh side's max, then the pass's
+    // shuffle, the alert collect and the tail checkpoint over its cached
+    // output, 5 jobs here. Separate plans per rule kind cost 18.
+    val perEvent = Rule(
+      queryId = Some(90L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Avg),
+      limitOperatorType = Some(CompareOp.Greater),
+      limit = Some(BigDecimal(0)),
+      windowMilliseconds = Some(10000L),
+      frequencyMilliseconds = Some(0L))
+    val tumbling = perEvent.copy(queryId = Some(91L), frequencyMilliseconds = None,
+      aggregatorFunctionType = Some(AggregatorType.Sum))
+    val sliding = tumbling.copy(queryId = Some(92L), frequencyMilliseconds = Some(3000L))
+    val passthrough = Rule(queryId = Some(93L),
+      windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "5")))
+    // inert rules push the store past FanOut.CompiledRuleLimit
+    val inert = (0 until 40).map(i => perEvent.copy(queryId = Some(4000L + i),
+      windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
+    val engine = new DynamicActiveEngine()
+    (Seq(perEvent, tumbling, sliding, passthrough) ++ inert).foreach(engine.store.merge(_))
+    val fired = scala.collection.mutable.ArrayBuffer.empty[Alert]
+    engine.onAlerts(as => fired.synchronized { fired ++= as })
+    val base = 1700000000000L
+    val counts = new graft.util.JobCounts(spark)
+    val jobs = (0 until 4).map { i =>
+      val batch = spark.sparkContext.parallelize(
+        (0 until 8).map(j => (j % 3, new java.sql.Timestamp(base + i * 4000L + j * 400L),
+          j.toDouble)), 4).toDF("carId", "ts", "speed")
+      counts.region("engine") { engine.processBatch(batch, "ts") }
+      counts.take("engine")._1
+    }
+    val ids = fired.synchronized(fired.map(_.ruleId).toSet)
+    assert(Set(90L, 91L, 92L, 93L).subsetOf(ids), s"every rule kind fired: $ids")
+    assert(jobs.forall(_ <= 6), s"jobs per batch: $jobs")
   }
 
   test("RuleStore save/load round-trips through the MERGE path") {
