@@ -56,9 +56,6 @@ import java.math.{BigDecimal => JBigDecimal}
   * it is also persisted durably ([[saveCheckpoint]]/[[restoreCheckpoint]]
   * + [[RuleStore.save]]) so a restarted driver resumes with full window
   * state — the reference gets the same from Flink checkpointing.
-  * [[ActiveEngine]] remains the
-  * static-rule fast path (single compiled `flatMapGroupsWithState` plan,
-  * no per-batch re-plan) for deployments whose rule set is fixed.
   */
 final class DynamicActiveEngine(
     val store: RuleStore = new RuleStore,
@@ -378,7 +375,7 @@ final class DynamicActiveEngine(
     * (per-event alerts carry the event as JSON) or, for periodic alerts,
     * the group-key fields — `{carId=7;lon=121.5}` → carId, lon. */
   private def bindFields(a: Alert): Map[String, String] =
-    if (a.payload != null && a.payload.nonEmpty) PayloadCodec.fields(a.payload)
+    if (a.payload != null && a.payload.nonEmpty) DynamicActiveEngine.payloadFields(a.payload)
     else DynamicActiveEngine.keyFields(a.key)
 }
 
@@ -402,17 +399,21 @@ object DynamicActiveEngine {
     *
     *  - passthrough (W4): one alert per fresh row, aggregate = `aggIn`
     *    (reference `DynamicQueryFunction.java:93-116`);
-    *  - per-event (W1): the group replays in (ts, payload) order through
-    *    [[SlidingStateExec.insert]]/[[SlidingStateExec.merge]], and each
-    *    fresh row gets its trailing `[t-w, t]` aggregate;
+    *  - per-event (W1): the group is sorted by (ts, payload), and each
+    *    fresh row gets the aggregate of the rows from the first one with
+    *    `ts ≥ t − w` up to itself: the inclusive `[t − w, t]` window
+    *    (reference `DynamicQueryFunction.java:277-280`), where rows after
+    *    it at the same timestamp are not yet seen;
     *  - periodic (W2/W3): epoch-aligned windows `[start, start+w)`, one
     *    every slide, are finalized when their end falls in `(lo, hi]`,
     *    with `tsMillis = start` and an empty payload (the event-time
     *    rendering of the reference's emission timers,
-    *    `DynamicQueryFunction.java:118-147`). Aggregates render at scale
-    *    6; AVG is `(2Σµ + n) div (2n)` over the n rows holding a value,
-    *    and a non-COUNT window with no value has a null aggregate, which
-    *    fires only when the rule has no HAVING;
+    *    `DynamicQueryFunction.java:118-147`);
+    *  - both aggregating modes fold their rows through one `Acc`, with
+    *    SQL's null rule: SUM/AVG/MIN/MAX run over the rows holding a
+    *    value (AVG is `(2Σµ + n) div (2n)` over those n rows, at scale 6),
+    *    COUNT counts every row, and a window with no value has a null
+    *    aggregate, which fires only when the rule has no HAVING;
     *  - eviction (W5, P5): rows with `ts ≥ curMax − (window + period)`
     *    are retained. A rule missing from `rules` (deleted) emits and
     *    retains nothing, so its state goes with it (reference guard
@@ -438,72 +439,106 @@ object DynamicActiveEngine {
   private def perEvent(rule: Rule, ruleId: Long, key: String,
       rows: Array[EngineRow]): Iterator[EngineOut] = {
     val w = rule.windowMilliseconds.getOrElse(0L)
+    val sorted = rows.sortBy(r => (r.tsMillis, r.payload))
+    val vals = sorted.map(r => micro(r.aggIn))
     val out = scala.collection.mutable.ArrayBuffer.empty[EngineOut]
-    var buckets = Map.empty[Long, SlidingStateExec.Bucket]
-    // deterministic replay order, as SlidingStateExec sorts batches
-    for (r <- rows.sortBy(r => (r.tsMillis, r.payload))) {
-      buckets = SlidingStateExec.insert(buckets, r.tsMillis, r.aggIn)
-        .filter { case (t, _) => t >= r.tsMillis - w }
+    var first = 0 // the first row with ts ≥ t − w; t only grows
+    for (i <- sorted.indices) {
+      val r = sorted(i)
+      while (sorted(first).tsMillis < r.tsMillis - w) first += 1
       if (r.fresh) {
-        val agg = SlidingStateExec.merge(rule, buckets, r.tsMillis - w, r.tsMillis)
-        if (rule.applyLimit(BigDecimal(agg)))
-          out += EngineOut(ruleId, key, r.tsMillis, agg.toPlainString, r.payload, fired = true)
+        val acc = new Acc
+        for (j <- first to i) acc.add(vals(j))
+        out ++= alert(rule, acc.render(rule, countScale = 0), ruleId, key, r.tsMillis,
+          r.payload)
       }
     }
     out.iterator
   }
 
-  /** Running partials of one periodic window, in micro-units. */
-  private final class WindowAcc {
-    var rows = 0L; var n = 0L; var sum = 0L
-    var min = Long.MaxValue; var max = Long.MinValue
-  }
-
   private def periodic(rule: Rule, ruleId: Long, key: String, rows: Array[EngineRow],
       lo: Long, hi: Long): Iterator[EngineOut] = {
-    import graft.model.AggregatorType._
     val w = rule.windowMilliseconds.get
     val slide = slideOf(rule)
-    val wins = scala.collection.mutable.TreeMap.empty[Long, WindowAcc]
+    val wins = scala.collection.mutable.TreeMap.empty[Long, Acc]
     for (r <- rows) {
-      val v = SlidingStateExec.micro(r.aggIn)
+      val v = micro(r.aggIn)
       // the windows holding r (start ≤ ts < start + w) whose end is in
       // (lo, hi]: aligned starts in (max(ts, lo) − w, min(ts, hi − w)]
       val top = math.min(r.tsMillis, hi - w)
       var start = top - Math.floorMod(top, slide)
       while (start > math.max(r.tsMillis, lo) - w) {
-        val a = wins.getOrElseUpdate(start, new WindowAcc)
-        a.rows += 1
-        v.foreach { m =>
-          a.n += 1; a.sum += m
-          a.min = math.min(a.min, m); a.max = math.max(a.max, m)
-        }
+        wins.getOrElseUpdate(start, new Acc).add(v)
         start -= slide
       }
     }
-    val hasHaving = rule.limitOperatorType.isDefined && rule.limit.isDefined
     wins.iterator.flatMap { case (start, a) =>
-      val agg: JBigDecimal =
-        if (rule.isCount) JBigDecimal.valueOf(a.rows).setScale(6)
-        else if (a.n == 0) null
-        else rule.aggregatorFunctionType.getOrElse(Sum) match {
-          case Sum => JBigDecimal.valueOf(a.sum, 6)
-          case Avg => JBigDecimal.valueOf((2 * a.sum + a.n) / (2 * a.n), 6)
-          case Min => JBigDecimal.valueOf(a.min, 6)
-          case Max => JBigDecimal.valueOf(a.max, 6)
-        }
-      val fires = if (agg == null) !hasHaving else rule.applyLimit(BigDecimal(agg))
-      if (fires) Some(EngineOut(ruleId, key, start,
-        if (agg == null) null else agg.toPlainString, "", fired = true))
-      else None
+      alert(rule, a.render(rule, countScale = 6), ruleId, key, start, "")
     }
   }
+
+  /** Running partials of one aggregate, in micro-units: every row, and the
+    * count, sum, min and max of the rows holding a value. */
+  private final class Acc {
+    private var rows = 0L; private var n = 0L; private var sum = 0L
+    private var min = Long.MaxValue; private var max = Long.MinValue
+
+    def add(v: Option[Long]): Unit = {
+      rows += 1
+      v.foreach { m =>
+        n += 1; sum += m
+        if (m < min) min = m
+        if (m > max) max = m
+      }
+    }
+
+    /** The rule's aggregate at scale 6 (COUNT at `countScale`), or null
+      * when no row holds a value. A non-COUNT rule without an aggregator
+      * sums. */
+    def render(rule: Rule, countScale: Int): JBigDecimal = {
+      import graft.model.AggregatorType._
+      if (rule.isCount) JBigDecimal.valueOf(rows).setScale(countScale)
+      else if (n == 0) null
+      else rule.aggregatorFunctionType.getOrElse(Sum) match {
+        case Sum => JBigDecimal.valueOf(sum, 6)
+        case Avg => JBigDecimal.valueOf((2 * sum + n) / (2 * n), 6)
+        case Min => JBigDecimal.valueOf(min, 6)
+        case Max => JBigDecimal.valueOf(max, 6)
+      }
+    }
+  }
+
+  /** The alert for an aggregate, if HAVING passes; a null aggregate
+    * passes only when the rule has no HAVING. */
+  private def alert(rule: Rule, agg: JBigDecimal, ruleId: Long, key: String,
+      tsMillis: Long, payload: String): Option[EngineOut] = {
+    val passes =
+      if (agg == null) rule.limitOperatorType.isEmpty || rule.limit.isEmpty
+      else rule.applyLimit(BigDecimal(agg))
+    if (!passes) None
+    else Some(EngineOut(ruleId, key, tsMillis,
+      if (agg == null) null else agg.toPlainString, payload, fired = true))
+  }
+
+  /** Parse a scale-6 decimal string to micro-units; empty is no value.
+    * Long micro-units hold values up to ~9.2e12 per window. */
+  private def micro(s: String): Option[Long] =
+    if (s == null || s.isEmpty) None
+    else Some(new JBigDecimal(s).movePointRight(6).longValueExact())
 
   /** Effective slide of a periodic rule: its emission frequency when it
     * is a genuine sub-window period, else tumbling (= window). */
   private[streaming] def slideOf(r: Rule): Long = {
     val w = r.windowMilliseconds.get
     r.frequencyMilliseconds.filter(f => f > 0 && f <= w).getOrElse(w)
+  }
+
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A per-event alert's payload, a flat JSON object, as a field map. */
+  private def payloadFields(json: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    mapper.readTree(json).fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
   }
 
   /** Parse the reference-format composite key string

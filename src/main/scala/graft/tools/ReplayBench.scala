@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.rules.RuleCodec
-import graft.streaming.{ActiveEngine, DynamicActiveEngine}
+import graft.streaming.DynamicActiveEngine
 import org.apache.spark.sql.streaming.Trigger
 
 /** Replay-throughput benchmark against the reference's one concrete
@@ -12,12 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
   * the README example rules → per-event sliding windows → ECA), and
   * reports end-to-end events/s.
   *
-  * Usage: runMain graft.tools.ReplayBench [nEvents] [threads] [sources] [engine]
-  *
-  * `engine` is `static` (default: [[ActiveEngine]], one compiled
-  * `flatMapGroupsWithState` plan) or `dynamic` ([[DynamicActiveEngine]],
-  * which re-reads the rule store every micro-batch), so both engines run
-  * the same feed and rules.
+  * Usage: runMain graft.tools.ReplayBench [nEvents] [threads] [sources]
   *
   * `sources` > 1 exercises the SOURCE-PARALLELISM lever the cluster
   * story depends on (the single synthesized feed's thread curve
@@ -33,7 +28,6 @@ object ReplayBench {
     val n = args.headOption.map(_.toInt).getOrElse(130000)
     val threads = args.lift(1).map(_.toInt).getOrElse(1)
     val nSources = math.max(1, args.lift(2).map(_.toInt).getOrElse(1))
-    val engineName = args.lift(3).getOrElse("static")
     val spark = graft.util.LocalSession(threads)
 
     // synthesize SHCarData-format lines: 200 cars, 1 event/s each,
@@ -72,9 +66,8 @@ object ReplayBench {
 
     // README example rules: per-car AVG speed (10s window, per-event
     // emission) spawning a per-car MAX monitor; plus the geo-box AVG rule
-    val static = new ActiveEngine()
-    val dynamic = new DynamicActiveEngine(store = static.store)
-    static.store.merge(RuleCodec.decode(
+    val engine = new DynamicActiveEngine()
+    engine.store.merge(RuleCodec.decode(
       """{"queryId":1,"queryState":"ACTIVE","groupingKeyNames":["carId"],
           "aggregateFieldName":"speed","aggregatorFunctionType":"AVG",
           "limitOperatorType":">","limit":120,
@@ -84,7 +77,7 @@ object ReplayBench {
             "aggregatorFunctionType":"MAX","limitOperatorType":">","limit":10,
             "windowMilliseconds":5000,"frequencyMilliseconds":0,
             "lastTime":10000}]}"""))
-    static.store.merge(RuleCodec.decode(
+    engine.store.merge(RuleCodec.decode(
       """{"queryId":3,"queryState":"ACTIVE",
           "windowFilterRules":[
             {"field":"lon","operator":">","value":"121.45"},
@@ -97,28 +90,22 @@ object ReplayBench {
           "windowMilliseconds":60000,"frequencyMilliseconds":0}"""))
 
     var fired = 0L
-    static.onAlerts(a => fired += a.size)
-    dynamic.onAlerts(a => fired += a.size)
+    engine.onAlerts(a => fired += a.size)
     val events = (0 until nSources).map { i =>
       graft.sources.ShCarData.readStream(spark, dir.resolve(s"src$i").toString,
         maxFilesPerTrigger = 100)
     }.reduce(_ union _)
     val start = System.nanoTime()
-    val writer = engineName match {
-      case "static" => static.perEventWriter(events, "eventTime")
-      case "dynamic" => dynamic.writer(events, "eventTime")
-      case other => throw new IllegalArgumentException(s"engine must be static or dynamic: $other")
-    }
-    val q = writer
+    val q = engine.writer(events, "eventTime")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft-replay-ckpt").toString)
       .start()
     q.awaitTermination()
     val secs = (System.nanoTime() - start) / 1e9
-    println(f"[replay] engine=$engineName events=$n threads=$threads sources=$nSources " +
+    println(f"[replay] events=$n threads=$threads sources=$nSources " +
       f"wall=$secs%.1fs rate=${n / secs}%.0f events/s fired=$fired " +
-      f"spawned=${static.store.size - 2}")
+      f"spawned=${engine.store.size - 2}")
     spark.stop()
   }
 }

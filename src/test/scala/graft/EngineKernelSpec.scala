@@ -89,6 +89,43 @@ class EngineKernelSpec extends AnyFunSuite {
     assert(window == List((0L, "3.000000")))
   }
 
+  test("per-event AVG over mixed nulls divides by the rows holding a value") {
+    val avg = sum.copy(aggregatorFunctionType = Some(AggregatorType.Avg),
+      frequencyMilliseconds = Some(0L))
+    val rows = Seq(row(1000, "1.000000"), row(2000, ""), row(3000, "2.000000"))
+    val (fired, _) = eval(avg, rows, hi = base + 3000, curMax = base + 3000)
+    // (1 + 2) / 2, half up; the null row leaves the mean as it was
+    assert(fired == List((1000L, "1.000000"), (2000L, "1.000000"), (3000L, "1.500000")))
+  }
+
+  test("per-event SUM over only nulls is null and fires only without HAVING") {
+    val perEvent = sum.copy(frequencyMilliseconds = Some(0L))
+    val rows = Seq(row(1000, ""), row(2000, ""))
+    val (free, _) = eval(perEvent, rows, hi = base + 2000, curMax = base + 2000)
+    assert(free == List((1000L, null), (2000L, null)))
+    val having = perEvent.copy(limitOperatorType = Some(CompareOp.GreaterEqual),
+      limit = Some(BigDecimal(0)))
+    val (gated, _) = eval(having, rows, hi = base + 2000, curMax = base + 2000)
+    assert(gated.isEmpty)
+  }
+
+  test("per-event COUNT counts the rows without a value") {
+    val perEvent = count.copy(frequencyMilliseconds = Some(0L))
+    val rows = Seq(row(1000, ""), row(2000, "5.000000"), row(3000, ""))
+    val (fired, _) = eval(perEvent, rows, hi = base + 3000, curMax = base + 3000)
+    assert(fired == List((1000L, "1"), (2000L, "2"), (3000L, "3")))
+  }
+
+  test("a non-COUNT rule without an aggregator sums, per event and per window") {
+    val bare = sum.copy(aggregatorFunctionType = None)
+    val rows = Seq(row(1000, "2.000000"), row(2000, "3.000000"))
+    val (events, _) = eval(bare.copy(frequencyMilliseconds = Some(0L)), rows,
+      hi = base + 2000, curMax = base + 2000)
+    assert(events == List((1000L, "2.000000"), (2000L, "5.000000")))
+    val (window, _) = eval(bare, rows, hi = base + 10000, curMax = base + 10000)
+    assert(window == List((0L, "5.000000")))
+  }
+
   test("per-event alerts cover fresh rows only; tail rows still count") {
     val perEvent = sum.copy(frequencyMilliseconds = Some(0L))
     val rows = Seq(row(1000, "4.000000", fresh = false), row(5000, "6.000000"),

@@ -2,17 +2,11 @@ package graft
 
 import graft.model._
 import graft.sinks.Sinks
-import graft.streaming.ActiveEngine
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 
-/** W2/W3/W5/W8: native windowed continuous query with watermark
-  * eviction, and the K2/C8 sink surfaces. */
+/** The `session_window` boundary q38's oracle relies on, and the K2/C8
+  * sink surfaces. */
 class WindowedStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  case class Ev(user: Long, ts: java.sql.Timestamp, v: Double)
-  def ev(user: Long, tsMs: Long, v: Double) = Ev(user, new java.sql.Timestamp(tsMs), v)
 
   test("session_window merges events exactly one gap apart (q38's oracle relies on it)") {
     import org.apache.spark.sql.functions._
@@ -34,65 +28,6 @@ class WindowedStreamSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"))
       .select(col("user"), col("n")).as[(Long, Long)].collect().sorted
     assert(sessions.toSeq == Seq((1L, 2L), (2L, 1L), (2L, 1L), (3L, 2L)))
-  }
-
-  test("windowed streaming query finalizes windows past the watermark (W2/W5/W8)") {
-    val rule = Rule(
-      queryId = Some(1L),
-      groupingKeyNames = Seq("user"),
-      aggregateFieldName = Some("v"),
-      aggregatorFunctionType = Some(AggregatorType.Sum),
-      windowMilliseconds = Some(60000L)) // 1-min tumbling
-    val engine = new ActiveEngine()
-    val base = 1700000000000L - (1700000000000L % 60000L) // window-aligned
-    val input = MemoryStream[Ev](spark)
-    val out = engine.windowedQuery(input.toDF(), rule, "ts")
-    val q = out.writeStream.format("memory").queryName("w2_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(ev(1, base + 1000, 10), ev(1, base + 2000, 5),
-        ev(2, base + 3000, 7))
-      q.processAllAvailable()
-      // watermark still at 0 → nothing finalized
-      assert(spark.table("w2_out").count() == 0)
-      // jump 3 windows ahead: watermark = max(ts) - 60s passes window 0
-      input.addData(ev(1, base + 180000, 1))
-      q.processAllAvailable()
-      input.addData(ev(1, base + 240000, 1)) // advance again to flush
-      q.processAllAvailable()
-      val rows = spark.table("w2_out")
-        .select($"user", $"w_start", $"agg_value".cast("string"))
-        .as[(Long, Long, String)].collect().toSet
-      assert(rows.contains((1L, base / 1000, "15.000000")))
-      assert(rows.contains((2L, base / 1000, "7.000000")))
-    } finally q.stop()
-  }
-
-  test("streaming session window finalizes a closed session past the watermark") {
-    val engine = new ActiveEngine()
-    val gap = 60000L
-    val base = 1700000000000L
-    val input = MemoryStream[Ev](spark)
-    val out = engine.sessionQuery(input.toDF(), Seq("user"), gap, "v", "ts")
-    val q = out.writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // burst of 3 events within one gap = one session
-      input.addData(ev(1, base, 10), ev(1, base + 1000, 5), ev(1, base + 2000, 7))
-      q.processAllAvailable()
-      assert(spark.table("sess_out").count() == 0, "session still open")
-      // jump event time far past the close: watermark finalizes it
-      input.addData(ev(1, base + 10 * gap, 1))
-      q.processAllAvailable()
-      input.addData(ev(1, base + 11 * gap, 1)) // advance again to flush
-      q.processAllAvailable()
-      val rows = spark.table("sess_out")
-        .select($"user", $"s_start", $"s_end", $"n_events",
-          $"agg_value".cast("string"))
-        .as[(Long, Long, Long, Long, String)].collect().toSet
-      assert(rows.contains((1L, base, base + 2000 + gap, 3L, "22.000000")),
-        s"got $rows")
-    } finally q.stop()
   }
 
   test("demo CSV sink formats the reference line (K2)") {
