@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.active.{EcaLoop, RuleStore, SnowflakeId}
 import graft.model._
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import java.math.{BigDecimal => JBigDecimal}
@@ -21,7 +22,10 @@ import java.math.{BigDecimal => JBigDecimal}
   * Design: state-as-table, rules-as-data-per-batch. `foreachBatch`
   * reads a fresh `store.snapshot()` and keeps a bounded *tail* of
   * fanned-out events (everything still inside some live rule's window)
-  * instead of opaque operator state. One batch is one keyed pass:
+  * instead of opaque operator state. The tail stays hash-partitioned by
+  * (rule, key) from batch to batch, so only the batch's own rows cross
+  * an exchange (the reference's `keyBy`, `App.java:73`). One batch is
+  * two Spark jobs:
   *
   *  - fan-out (D1-D3): the new batch is fanned out under the CURRENT
   *    snapshot via [[FanOut.auto]] and persisted, so a rule change is a
@@ -29,10 +33,12 @@ import java.math.{BigDecimal => JBigDecimal}
   *    are never keyed or retained (exactly the reference:
   *    `DynamicKeyFunction` forwards per live rule only);
   *  - curMax, the batch's event-time watermark, is one `mapPartitions`
-  *    max over the fresh side;
-  *  - `tail ∪ fresh` is grouped by (rule, key) and every group runs
-  *    [[DynamicActiveEngine.evalGroup]], the pure kernel, with the rule
-  *    map broadcast: it emits the group's HAVING-passed alerts — W1
+  *    max over the fresh side (the first job);
+  *  - the fresh rows are shuffled by (rule, key) onto the tail's
+  *    partitioning and zipped with it partition by partition; each
+  *    partition groups its rows by (rule, key) and runs every group
+  *    through [[DynamicActiveEngine.evalGroup]], the pure kernel, with the
+  *    rule map broadcast: it emits the group's HAVING-passed alerts — W1
   *    per-event sliding aggregates over the fresh events (state for a
   *    spawned rule starts empty at spawn time, the reference's
   *    semantics), W2/W3 aligned windows whose *end* fell inside
@@ -41,20 +47,24 @@ import java.math.{BigDecimal => JBigDecimal}
   *    only, so a deleted rule's state is dropped with it). ECA
   *    `$`-parameters for periodic alerts bind from the group key (a
   *    window has no single triggering event);
-  *  - the pass's output is persisted: collecting at most
-  *    `maxFiredPerBatch` fired alerts for the ECA step (the driver is a
-  *    control plane, not a data plane) materializes it, and the new tail
-  *    is checkpointed from the cache;
+  *  - the pass's output is marked for `localCheckpoint` and the second
+  *    job collects at most `maxFiredPerBatch` fired alerts from it for
+  *    the ECA step (the driver is a control plane, not a data plane).
+  *    Spark checkpoints a job's final RDD, so that same job materializes
+  *    the new tail: each group's output stays in the partition it came
+  *    from, which keeps the partitioning without another exchange;
   *  - CLEAR_STATE_ALL (C7): drops the whole tail before evaluation
   *    (reference `DynamicQueryFunction.java:339-341`
   *    applyToKeyedState(clear)); already-emitted windows stay emitted,
   *    subsequent aggregates start empty.
   *
-  * The tail is an ordinary DataFrame: per batch it is coalesced to the
-  * default parallelism and `localCheckpoint()`ed (block-store backed,
-  * lineage truncated, partition count bounded), and with `checkpointDir` set
-  * it is also persisted durably ([[saveCheckpoint]]/[[restoreCheckpoint]]
-  * + [[RuleStore.save]]) so a restarted driver resumes with full window
+  * The tail is an RDD of the keyed pass's output whose partition i holds
+  * exactly the (rule, key) groups a `HashPartitioner` over its partition
+  * count (the default parallelism when it was first built) maps to i; its
+  * fired alerts are skipped when it is read back. It is block-store
+  * backed with its lineage truncated, and with `checkpointDir` set it is
+  * also persisted durably ([[saveCheckpoint]]/[[restoreCheckpoint]] +
+  * [[RuleStore.save]]) so a restarted driver resumes with full window
   * state — the reference gets the same from Flink checkpointing.
   */
 final class DynamicActiveEngine(
@@ -66,6 +76,7 @@ final class DynamicActiveEngine(
       * the `localCheckpoint` tail, making the engine driver-restart
       * recoverable (see [[saveCheckpoint]]). */
     val checkpointDir: Option[String] = None) {
+  import DynamicActiveEngine.EngineOut
 
   @volatile private var alertSink: Seq[Alert] => Unit = _ => ()
   /** Register a callback for *fired* alerts (HAVING passed) per batch.
@@ -82,7 +93,7 @@ final class DynamicActiveEngine(
   val tickFailures = new java.util.concurrent.atomic.AtomicLong(0)
 
   // Cross-batch state: driver-held handles, data lives on executors.
-  @volatile private var tail: Option[DataFrame] = None
+  @volatile private var tail: Option[RDD[EngineOut]] = None
   @volatile private var maxSeenTs: Long = Long.MinValue
   @volatile private var emittedThrough: Long = Long.MinValue
 
@@ -126,53 +137,52 @@ final class DynamicActiveEngine(
     }
     val rules = store.snapshot()
     if (rules.isEmpty) return (None, noCkpt)
-    val spark = batch.sparkSession
-    import spark.implicits._
 
-    // persisted: read by the curMax job and by the keyed pass
-    val fresh = FanOut.auto(batch, rules, tsCol).toDF()
-      .withColumn("fresh", lit(true))
-      .persist()
+    // persisted: read by the curMax job and by the shuffle's map side
+    val fresh = FanOut.auto(batch, rules, tsCol).rdd.persist()
     try {
       // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis is
       // ≤ the maxSeenTs of the batch that retained it, so only the fresh
       // side is scanned
-      val batchMax = fresh.select(col("tsMillis")).as[Long]
-        .mapPartitions(it => if (it.hasNext) Iterator(it.max) else Iterator.empty)
+      val batchMax = fresh
+        .mapPartitions(it => if (it.hasNext) Iterator(it.map(_.tsMillis).max) else Iterator.empty)
         .collect()
       if (batchMax.isEmpty && maxSeenTs == Long.MinValue) return (None, noCkpt)
       val curMax = (batchMax :+ maxSeenTs).max
 
       val rulesById = rules.flatMap(r => r.queryId.map(_ -> r)).toMap
-      val rows = tail match {
-        case Some(t) => t.withColumn("fresh", lit(false)).unionByName(fresh)
-        case None => fresh
-      }
-      val out = evaluate(rows, rulesById, emittedThrough, curMax, curMax).persist()
-      try {
-        // the alert collect materializes `out`, and the tail's checkpoint
-        // reads it from the cache. Both run under the monitor: emit-once
-        // depends on the horizon and the collected set advancing
-        // together; the sink and ECA spawn run after the monitor is
-        // released
-        val fired = collectFired(out)
-        val newTail = retain(out.filter(!col("fired"))
-          .select(col("ruleId"), col("key"), col("tsMillis"), col("value").as("aggIn"),
-            col("payload")))
-        emittedThrough = math.max(emittedThrough, curMax)
-        maxSeenTs = curMax
-        tail.foreach(_.unpersist(false))
-        tail = Some(newTail)
-        // snapshot the post-batch state under the monitor; the WRITE runs
-        // after delivery (see processBatch) so a crash mid-delivery keeps
-        // the pre-batch checkpoint and recovery re-emits, never loses
-        val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
-        val ckpt: () => Unit = () =>
-          checkpointDir.foreach(writeCheckpoint(spark, _, ckptTail, ckptMax, ckptEmitted))
-        (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
-      } finally out.unpersist(false)
+      // the batch's one exchange: only the fresh rows cross it
+      val freshByKey = fresh.keyBy(e => (e.ruleId, e.key))
+        .partitionBy(partitioner(fresh.sparkContext)).values
+      val out = evaluate(tail, Some(freshByKey), rulesById, emittedThrough, curMax, curMax)
+        .localCheckpoint()
+      // the alert collect materializes `out` and checkpoints it as the
+      // new tail, in one job. It runs under the monitor: emit-once
+      // depends on the horizon and the collected set advancing together;
+      // the sink and ECA spawn run after the monitor is released
+      val fired =
+        try collectFired(out)
+        catch { case e: Throwable => out.unpersist(false); throw e }
+      emittedThrough = math.max(emittedThrough, curMax)
+      maxSeenTs = curMax
+      tail.foreach(_.unpersist(false))
+      tail = Some(out)
+      // snapshot the post-batch state under the monitor; the WRITE runs
+      // after delivery (see processBatch) so a crash mid-delivery keeps
+      // the pre-batch checkpoint and recovery re-emits, never loses
+      val (ckptTail, ckptMax, ckptEmitted) = (tail, maxSeenTs, emittedThrough)
+      val ckpt: () => Unit = () =>
+        checkpointDir.foreach(writeCheckpoint(batch.sparkSession, _, ckptTail, ckptMax,
+          ckptEmitted))
+      (if (fired.nonEmpty) Some((fired, rulesById)) else None, ckpt)
     } finally fresh.unpersist(false)
   }
+
+  /** How the tail is laid out: by (rule, key) over the tail's own
+    * partition count, so a batch's fresh rows land beside the groups
+    * they extend; the default parallelism when there is no tail. */
+  private def partitioner(sc: SparkContext): HashPartitioner =
+    new HashPartitioner(tail.fold(sc.defaultParallelism)(_.getNumPartitions))
 
   /** W2/W3 under a STALLED source: finalize periodic windows whose end
     * fell in `(emittedThrough, horizonMs]` using the retained tail alone —
@@ -225,8 +235,7 @@ final class DynamicActiveEngine(
             // the batch kernel over the tail alone: with no fresh rows only
             // periodic windows can fire, and the retained rows are dropped
             val fired = tail.fold(Seq.empty[Alert])(t => collectFired(
-              evaluate(t.withColumn("fresh", lit(false)), rulesById,
-                emittedThrough, horizon, maxSeenTs)))
+              evaluate(Some(t), None, rulesById, emittedThrough, horizon, maxSeenTs)))
             // collect succeeded — advance the emit-once horizon now
             emittedThrough = horizon
             if (fired.isEmpty) None
@@ -271,30 +280,33 @@ final class DynamicActiveEngine(
     () => { ex.shutdownNow(); () }
   }
 
-  /** The keyed pass: `rows` (tail ∪ fresh, flagged by `fresh`) grouped by
-    * (rule, key) through [[DynamicActiveEngine.evalGroup]]. The rule map
-    * ships as a Spark broadcast variable — once per executor, not once per
-    * task closure, and no broadcast exchange in the plan. */
-  private def evaluate(rows: DataFrame, rulesById: Map[Long, Rule],
-      lo: Long, hi: Long, curMax: Long): Dataset[DynamicActiveEngine.EngineOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val bcRules = spark.sparkContext.broadcast(rulesById)
-    rows.as[DynamicActiveEngine.EngineRow]
-      .groupByKey(r => (r.ruleId, r.key))
-      .flatMapGroups { (group: (Long, String), it: Iterator[DynamicActiveEngine.EngineRow]) =>
-        DynamicActiveEngine.evalGroup(bcRules.value, group._1, group._2, it, lo, hi, curMax)
-      }
+  /** The keyed pass over the tail and the fresh rows, which are
+    * partitioned alike, so partition i of each holds whole (rule, key)
+    * groups: [[DynamicActiveEngine.evalPartition]] per partition. The rule
+    * map ships as a Spark broadcast variable — once per executor, not
+    * once per task closure. */
+  private def evaluate(tail: Option[RDD[EngineOut]], fresh: Option[RDD[KeyedEvent]],
+      rulesById: Map[Long, Rule], lo: Long, hi: Long, curMax: Long): RDD[EngineOut] = {
+    val sc = (tail ++ fresh).head.sparkContext
+    val bcRules = sc.broadcast(rulesById)
+    val pass = (t: Iterator[EngineOut], f: Iterator[KeyedEvent]) =>
+      DynamicActiveEngine.evalPartition(bcRules.value, t, f, lo, hi, curMax)
+    (tail, fresh) match {
+      case (Some(t), Some(f)) => t.zipPartitions(f)(pass)
+      case (Some(t), None) => t.mapPartitions(pass(_, Iterator.empty))
+      case (None, f) => f.get.mapPartitions(pass(Iterator.empty, _))
+    }
   }
 
   /** Collect the fired alerts of a keyed pass, at most `maxFiredPerBatch`
     * (the driver is a control plane, not a data plane): each partition
-    * ships at most that many, in one job. */
-  private def collectFired(out: Dataset[DynamicActiveEngine.EngineOut]): Seq[Alert] = {
-    implicit val alertEnc = Encoders.product[Alert]
+    * ships at most that many, in one job over `out` itself, so an `out`
+    * marked for checkpointing is checkpointed by the same job. */
+  private def collectFired(out: RDD[EngineOut]): Seq[Alert] = {
     val cap = maxFiredPerBatch
-    out.mapPartitions(_.filter(_.fired).map(_.alert).take(cap))
-      .collect().toSeq.take(cap)
+    out.sparkContext
+      .runJob(out, (it: Iterator[EngineOut]) => it.filter(_.fired).map(_.alert).take(cap).toArray)
+      .iterator.flatten.take(cap).toSeq
   }
 
   /** Deliver to the sink and run the ECA spawn step — run OUTSIDE the
@@ -326,12 +338,16 @@ final class DynamicActiveEngine(
     * after delivery (at-least-once), so the values must not be re-read
     * from the mutable fields at write time. */
   private def writeCheckpoint(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tailSnap: Option[DataFrame],
+      dir: String, tailSnap: Option[RDD[EngineOut]],
       maxSeen: Long, emitted: Long): Unit = {
     val d = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(d)
     tailSnap match {
-      case Some(t) => t.write.mode("overwrite").parquet(s"$dir/tail")
+      case Some(t) =>
+        val rows = t.filter(!_.fired)
+          .map(o => KeyedEvent(o.ruleId, o.key, o.tsMillis, o.value, o.payload))
+        spark.createDataset(rows)(Encoders.product[KeyedEvent])
+          .write.mode("overwrite").parquet(s"$dir/tail")
       case None    => ()
     }
     java.nio.file.Files.writeString(d.resolve("engine_state.txt"),
@@ -349,27 +365,23 @@ final class DynamicActiveEngine(
     maxSeenTs = kv.getOrElse("maxSeenTs", Long.MinValue.toString).toLong
     emittedThrough = kv.getOrElse("emittedThrough", Long.MinValue.toString).toLong
     tail =
-      if (kv.get("hasTail").contains("true"))
-        Some(retain(spark.read.parquet(s"$dir/tail")))
-      else None
+      if (kv.get("hasTail").contains("true")) {
+        // laid out as the batch path lays out the tail, then materialized
+        // (the parquet files are overwritten by the next checkpoint)
+        val t = spark.read.parquet(s"$dir/tail").as[KeyedEvent](Encoders.product[KeyedEvent])
+          .rdd.keyBy(e => (e.ruleId, e.key))
+          .partitionBy(new HashPartitioner(spark.sparkContext.defaultParallelism))
+          .values
+          .map(e => EngineOut(e.ruleId, e.key, e.tsMillis, e.aggIn, e.payload, fired = false))
+          .localCheckpoint()
+        t.count()
+        Some(t)
+      } else None
   }
-
-  /** Materialize a new tail: coalesced to the default parallelism, then
-    * `localCheckpoint`ed. The tail is rebuilt from `tail ∪ fresh`, and a
-    * union keeps the partitions of both sides, so without the coalesce
-    * the partitions of every batch the engine ever saw would stay
-    * (mostly empty once eviction ran) and each later batch would scan
-    * them: per-batch task counts and checkpoint files grew with uptime.
-    * `coalesce` is narrow (no shuffle) and a no-op while the tail is
-    * already this small; rows are unchanged, and no consumer depends on
-    * their order ([[DynamicActiveEngine.evalGroup]] sorts what it
-    * replays). */
-  private def retain(df: DataFrame): DataFrame =
-    df.coalesce(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint(true)
 
   /** Partition count of the retained tail (0 when there is none). */
   private[graft] def tailPartitions: Int =
-    tail.fold(0)(_.rdd.getNumPartitions)
+    tail.fold(0)(_.getNumPartitions)
 
   /** ECA `$`-binding source for one alert: the triggering event's fields
     * (per-event alerts carry the event as JSON) or, for periodic alerts,
@@ -393,17 +405,37 @@ object DynamicActiveEngine {
     def alert: Alert = Alert(ruleId, key, tsMillis, value, passed = true, payload)
   }
 
+  /** One partition of the keyed pass: the retained rows of its tail (the
+    * alerts beside them are skipped) and its fresh rows, grouped by
+    * (rule, key), each group through [[evalGroup]]. Both sides hold
+    * exactly the groups the engine's partitioner maps to this partition,
+    * so every group is whole. */
+  private[graft] def evalPartition(rules: Map[Long, Rule], tail: Iterator[EngineOut],
+      fresh: Iterator[KeyedEvent], lo: Long, hi: Long, curMax: Long): Iterator[EngineOut] = {
+    val groups = scala.collection.mutable.HashMap
+      .empty[(Long, String), scala.collection.mutable.ArrayBuffer[EngineRow]]
+    def add(r: EngineRow): Unit =
+      groups.getOrElseUpdate((r.ruleId, r.key), scala.collection.mutable.ArrayBuffer.empty) += r
+    tail.foreach(o =>
+      if (!o.fired) add(EngineRow(o.ruleId, o.key, o.tsMillis, o.value, o.payload, fresh = false)))
+    fresh.foreach(e => add(EngineRow(e.ruleId, e.key, e.tsMillis, e.aggIn, e.payload, fresh = true)))
+    groups.iterator.flatMap { case ((ruleId, key), rows) =>
+      evalGroup(rules, ruleId, key, rows.iterator, lo, hi, curMax)
+    }
+  }
+
   /** The engine's kernel: everything one batch does for one (rule, key)
     * group, as a pure function of its rows. It emits the HAVING-passed
     * alerts of the rule's kind, then the rows the tail retains.
     *
     *  - passthrough (W4): one alert per fresh row, aggregate = `aggIn`
     *    (reference `DynamicQueryFunction.java:93-116`);
-    *  - per-event (W1): the group is sorted by (ts, payload), and each
-    *    fresh row gets the aggregate of the rows from the first one with
-    *    `ts ≥ t − w` up to itself: the inclusive `[t − w, t]` window
-    *    (reference `DynamicQueryFunction.java:277-280`), where rows after
-    *    it at the same timestamp are not yet seen;
+    *  - per-event (W1): the group is sorted by (ts, payload, aggIn), tail
+    *    rows before fresh ones, so tied rows replay in one order however
+    *    they arrive, and each fresh row gets the aggregate of the rows
+    *    from the first one with `ts ≥ t − w` up to itself: the inclusive
+    *    `[t − w, t]` window (reference `DynamicQueryFunction.java:277-280`),
+    *    where rows after it at the same timestamp are not yet seen;
     *  - periodic (W2/W3): epoch-aligned windows `[start, start+w)`, one
     *    every slide, are finalized when their end falls in `(lo, hi]`,
     *    with `tsMillis = start` and an empty payload (the event-time
@@ -436,24 +468,36 @@ object DynamicActiveEngine {
           .map(r => EngineOut(ruleId, key, r.tsMillis, r.aggIn, r.payload, fired = false))
     }
 
+  /** The per-event replay: two pointers slide over the sorted group, one
+    * `SlidingAcc` holds the window, so the cost after the sort is linear
+    * in the rows from the first fresh row's window on. */
   private def perEvent(rule: Rule, ruleId: Long, key: String,
       rows: Array[EngineRow]): Iterator[EngineOut] = {
     val w = rule.windowMilliseconds.getOrElse(0L)
-    val sorted = rows.sortBy(r => (r.tsMillis, r.payload))
-    val vals = sorted.map(r => micro(r.aggIn))
+    val sorted = rows.sorted(replayOrder)
+    val lastFresh = sorted.lastIndexWhere(_.fresh)
+    if (lastFresh < 0) return Iterator.empty
+    val from = sorted.indexWhere(_.tsMillis >= sorted(sorted.indexWhere(_.fresh)).tsMillis - w)
+    val win = new SlidingAcc(sorted.map(r => micro(r.aggIn)))
     val out = scala.collection.mutable.ArrayBuffer.empty[EngineOut]
-    var first = 0 // the first row with ts ≥ t − w; t only grows
-    for (i <- sorted.indices) {
+    var first = from // the first row with ts ≥ t − w; t only grows
+    for (i <- from to lastFresh) {
       val r = sorted(i)
-      while (sorted(first).tsMillis < r.tsMillis - w) first += 1
-      if (r.fresh) {
-        val acc = new Acc
-        for (j <- first to i) acc.add(vals(j))
-        out ++= alert(rule, acc.render(rule, countScale = 0), ruleId, key, r.tsMillis,
-          r.payload)
-      }
+      while (sorted(first).tsMillis < r.tsMillis - w) { win.evict(first); first += 1 }
+      win.push(i)
+      if (r.fresh) out ++= alert(rule, win.render(rule, countScale = 0), ruleId, key,
+        r.tsMillis, r.payload)
     }
     out.iterator
+  }
+
+  /** (ts, payload, aggIn), then tail rows before fresh ones. */
+  private val replayOrder: Ordering[EngineRow] = (a: EngineRow, b: EngineRow) => {
+    var c = java.lang.Long.compare(a.tsMillis, b.tsMillis)
+    if (c == 0) c = a.payload.compareTo(b.payload)
+    if (c == 0) c = a.aggIn.compareTo(b.aggIn)
+    if (c == 0) c = java.lang.Boolean.compare(a.fresh, b.fresh)
+    c
   }
 
   private def periodic(rule: Rule, ruleId: Long, key: String, rows: Array[EngineRow],
@@ -479,18 +523,21 @@ object DynamicActiveEngine {
 
   /** Running partials of one aggregate, in micro-units: every row, and the
     * count, sum, min and max of the rows holding a value. */
-  private final class Acc {
-    private var rows = 0L; private var n = 0L; private var sum = 0L
-    private var min = Long.MaxValue; private var max = Long.MinValue
+  private class Acc {
+    protected var rows = 0L; protected var n = 0L; protected var sum = 0L
+    private var lo = Long.MaxValue; private var hi = Long.MinValue
 
     def add(v: Option[Long]): Unit = {
       rows += 1
       v.foreach { m =>
         n += 1; sum += m
-        if (m < min) min = m
-        if (m > max) max = m
+        if (m < lo) lo = m
+        if (m > hi) hi = m
       }
     }
+
+    protected def min: Long = lo
+    protected def max: Long = hi
 
     /** The rule's aggregate at scale 6 (COUNT at `countScale`), or null
       * when no row holds a value. A non-COUNT rule without an aggregator
@@ -506,6 +553,51 @@ object DynamicActiveEngine {
         case Max => JBigDecimal.valueOf(max, 6)
       }
     }
+  }
+
+  /** An [[Acc]] over a window of `vals` (a sorted group's values) that
+    * only moves forward: row i joins at the back with `push(i)` and
+    * leaves from the front with `evict(i)`. MIN and MAX come from
+    * monotone deques of the valued rows' positions, so every step is
+    * amortized O(1). */
+  private final class SlidingAcc(vals: Array[Option[Long]]) extends Acc {
+    private val lows = new MonoDeque(vals, _ < _)
+    private val highs = new MonoDeque(vals, _ > _)
+
+    def push(i: Int): Unit = {
+      add(vals(i))
+      if (vals(i).isDefined) { lows.push(i); highs.push(i) }
+    }
+
+    def evict(i: Int): Unit = {
+      rows -= 1
+      vals(i).foreach { m =>
+        n -= 1; sum -= m
+        lows.evict(i); highs.evict(i)
+      }
+    }
+
+    override protected def min: Long = lows.front
+    override protected def max: Long = highs.front
+  }
+
+  /** Positions of valued rows in a sliding window whose values keep
+    * `before` order from front to back, so the front holds the window's
+    * extreme. Each position is pushed once. */
+  private final class MonoDeque(vals: Array[Option[Long]], before: (Long, Long) => Boolean) {
+    private val q = new Array[Int](vals.length)
+    private var h = 0
+    private var t = 0
+
+    def push(i: Int): Unit = {
+      while (t > h && !before(vals(q(t - 1)).get, vals(i).get)) t -= 1
+      q(t) = i; t += 1
+    }
+
+    /** Row i leaves the window; it is the front if still held. */
+    def evict(i: Int): Unit = if (t > h && q(h) == i) h += 1
+
+    def front: Long = vals(q(h)).get
   }
 
   /** The alert for an aggregate, if HAVING passes; a null aggregate

@@ -17,10 +17,11 @@ import org.apache.spark.sql.functions._
   * a union of one scan per rule, so its output has rules × input
   * partitions partitions (96 for 24 rules over a 4-partition batch).
   * [[DynamicActiveEngine]] persists this output and reads it twice, in
-  * its curMax job and on the map side of its one keyed shuffle, so those
-  * stages run a task per partition. Everything downstream is bounded
-  * apart from the fan-out: the shuffle's reduce side by the shuffle
-  * partitions, the retained tail by the default parallelism.
+  * its curMax job and on the map side of the shuffle that moves these
+  * rows, and only these, onto the retained tail's (rule, key)
+  * partitioning, so those stages run a task per partition. Everything
+  * downstream is bounded apart from the fan-out: the keyed pass runs one
+  * task per tail partition, at most the default parallelism.
   *
   * Output is the normalized [[KeyedEvent]]: event-time millis, aggregate
   * input as an exact decimal string, full event payload as JSON.

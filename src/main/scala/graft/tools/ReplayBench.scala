@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
   * the README example rules → per-event sliding windows → ECA), and
   * reports end-to-end events/s.
   *
-  * Usage: runMain graft.tools.ReplayBench [nEvents] [threads] [sources]
+  * Usage: runMain graft.tools.ReplayBench [nEvents] [threads] [sources] [windowMs]
   *
   * `sources` > 1 exercises the SOURCE-PARALLELISM lever the cluster
   * story depends on (the single synthesized feed's thread curve
@@ -22,12 +22,18 @@ import org.apache.spark.sql.streaming.Trigger
   * their UNION, so ingest, fan-out and keyed state all see
   * `sources` independent partitioned feeds — the shape a cluster
   * deployment has with one stream per Kafka partition group.
+  *
+  * `windowMs`, when given, is every rule's window length: each car
+  * emits one event per second, so a rule keyed by car holds about
+  * `windowMs / 1000` rows per key. By default the rules keep their
+  * README windows (10 s, its spawned child 5 s, the geo-box rule 60 s).
   */
 object ReplayBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(130000)
     val threads = args.lift(1).map(_.toInt).getOrElse(1)
     val nSources = math.max(1, args.lift(2).map(_.toInt).getOrElse(1))
+    val window = args.lift(3).map(_.toLong)
     val spark = graft.util.LocalSession(threads)
 
     // synthesize SHCarData-format lines: 200 cars, 1 event/s each,
@@ -68,17 +74,17 @@ object ReplayBench {
     // emission) spawning a per-car MAX monitor; plus the geo-box AVG rule
     val engine = new DynamicActiveEngine()
     engine.store.merge(RuleCodec.decode(
-      """{"queryId":1,"queryState":"ACTIVE","groupingKeyNames":["carId"],
+      s"""{"queryId":1,"queryState":"ACTIVE","groupingKeyNames":["carId"],
           "aggregateFieldName":"speed","aggregatorFunctionType":"AVG",
           "limitOperatorType":">","limit":120,
-          "windowMilliseconds":10000,"frequencyMilliseconds":0,
+          "windowMilliseconds":${window.getOrElse(10000L)},"frequencyMilliseconds":0,
           "alertRules":[{"queryId":2,"queryState":"ACTIVE",
-            "groupingKeyNames":["$carId"],"aggregateFieldName":"speed",
+            "groupingKeyNames":["$$carId"],"aggregateFieldName":"speed",
             "aggregatorFunctionType":"MAX","limitOperatorType":">","limit":10,
-            "windowMilliseconds":5000,"frequencyMilliseconds":0,
+            "windowMilliseconds":${window.getOrElse(5000L)},"frequencyMilliseconds":0,
             "lastTime":10000}]}"""))
     engine.store.merge(RuleCodec.decode(
-      """{"queryId":3,"queryState":"ACTIVE",
+      s"""{"queryId":3,"queryState":"ACTIVE",
           "windowFilterRules":[
             {"field":"lon","operator":">","value":"121.45"},
             {"field":"lon","operator":"<","value":"121.55"},
@@ -87,7 +93,7 @@ object ReplayBench {
           "groupingKeyNames":["carId"],
           "aggregateFieldName":"speed","aggregatorFunctionType":"AVG",
           "limitOperatorType":">","limit":120,
-          "windowMilliseconds":60000,"frequencyMilliseconds":0}"""))
+          "windowMilliseconds":${window.getOrElse(60000L)},"frequencyMilliseconds":0}"""))
 
     var fired = 0L
     engine.onAlerts(a => fired += a.size)

@@ -9,7 +9,8 @@ import org.scalacheck.rng.Seed
 /** Generated-input parity for the dynamic engine: for a non-spawning
   * rule set (W1 per-event, W2/W3 periodic, W4 passthrough), the fired
   * alerts depend only on the event stream — not on where the stream is
-  * cut into micro-batches, nor on how each batch is partitioned. Spawning
+  * cut into micro-batches, on how each batch is partitioned, nor on a
+  * checkpoint restore between two batches. Spawning
   * rules are left out on purpose: a spawned child takes effect at the
   * next batch, so its output legitimately depends on the cuts. */
 class DynamicEnginePropSpec extends SparkSpec {
@@ -68,14 +69,28 @@ class DynamicEnginePropSpec extends SparkSpec {
   private def cuts(n: Int): Gen[Seq[Int]] =
     Gen.choose(1, 3).flatMap(k => Gen.pick(k, 1 until n)).map(_.toSeq.sorted)
 
-  private def fired(rules: Seq[Rule], batches: Seq[Seq[Ev]], partitions: Int): List[Alert] = {
-    val engine = new DynamicActiveEngine()
-    rules.foreach(engine.store.merge(_))
+  /** The fired alerts of one engine over `batches`; with `restartAfter`
+    * = k, the engine saves a checkpoint after batch k and a new engine
+    * restored from it takes the remaining batches. */
+  private def fired(rules: Seq[Rule], batches: Seq[Seq[Ev]], partitions: Int,
+      restartAfter: Option[Int] = None): List[Alert] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Alert]
-    engine.onAlerts(as => out.synchronized { out ++= as })
-    batches.foreach { b =>
+    def start(): DynamicActiveEngine = {
+      val engine = new DynamicActiveEngine()
+      rules.foreach(engine.store.merge(_))
+      engine.onAlerts(as => out.synchronized { out ++= as })
+      engine
+    }
+    var engine = start()
+    batches.zipWithIndex.foreach { case (b, i) =>
       engine.processBatch(
         spark.sparkContext.parallelize(b, partitions).toDF("carId", "ts", "speed"), "ts")
+      if (restartAfter.contains(i)) {
+        val dir = java.nio.file.Files.createTempDirectory("graft-prop-ckpt").toString
+        engine.saveCheckpoint(spark, dir)
+        engine = start()
+        engine.restoreCheckpoint(spark, dir)
+      }
     }
     out.synchronized(out.toList)
       .sortBy(a => (a.ruleId, a.key, a.tsMillis, a.aggregate, a.payload))
@@ -107,5 +122,27 @@ class DynamicEnginePropSpec extends SparkSpec {
     val res = Test.check(params, prop)
     assert(res.passed, res.status)
     assert(kinds == Set("passthrough", "per-event", "periodic"), s"kinds fired: $kinds")
+  }
+
+  test("an engine restored from a checkpoint fires what the uninterrupted one fires") {
+    val gen = for {
+      rs <- rules
+      evs <- events
+      cs <- cuts(evs.size)
+      at <- Gen.choose(0, cs.size - 1)
+      parts <- Gen.oneOf(1, 4)
+    } yield (rs, evs, cs, at, parts)
+    val prop = Prop.forAllNoShrink(gen) { case (rs, evs, cs, at, parts) =>
+      val sliced = (0 +: cs).zip(cs :+ evs.size).map { case (a, b) => evs.slice(a, b) }
+      val uninterrupted = fired(rs, sliced, parts)
+      (fired(rs, sliced, parts, restartAfter = Some(at)) == uninterrupted) :|
+        s"restart after batch $at of cuts at $cs, $parts partitions, rules $rs"
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(6)
+      .withWorkers(1)
+      .withInitialSeed(Seed(20261020L))
+    val res = Test.check(params, prop)
+    assert(res.passed, res.status)
   }
 }

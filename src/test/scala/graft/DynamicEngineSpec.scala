@@ -477,10 +477,11 @@ class DynamicEngineSpec extends SparkSpec {
     }
   }
 
-  test("a batch on a mixed store runs at most 6 Spark jobs") {
-    // One keyed pass per batch: the fresh side's max, then the pass's
-    // shuffle, the alert collect and the tail checkpoint over its cached
-    // output, 5 jobs here. Separate plans per rule kind cost 18.
+  test("a batch on a mixed store runs at most 2 Spark jobs") {
+    // The fresh side's max, then one job for the keyed pass, its alert
+    // collect and the tail checkpoint. Re-planning tail ∪ fresh and
+    // checkpointing it in a job of its own cost 5; separate plans per
+    // rule kind cost 18.
     val perEvent = Rule(
       queryId = Some(90L),
       groupingKeyNames = Seq("carId"),
@@ -513,7 +514,48 @@ class DynamicEngineSpec extends SparkSpec {
     }
     val ids = fired.synchronized(fired.map(_.ruleId).toSet)
     assert(Set(90L, 91L, 92L, 93L).subsetOf(ids), s"every rule kind fired: $ids")
-    assert(jobs.forall(_ <= 6), s"jobs per batch: $jobs")
+    assert(jobs.forall(_ <= 2), s"jobs per batch: $jobs")
+  }
+
+  test("a batch shuffles only its own fanned-out rows, however large the tail") {
+    // a per-event COUNT over an hour: every batch's rows stay in the tail,
+    // and the running count shows the tail holds them all
+    val count = Rule(
+      queryId = Some(95L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some(Rule.CountSentinel),
+      windowMilliseconds = Some(3600000L),
+      frequencyMilliseconds = Some(0L))
+    val engine = new DynamicActiveEngine()
+    engine.store.merge(count)
+    val fired = scala.collection.mutable.ArrayBuffer.empty[Alert]
+    engine.onAlerts(as => fired.synchronized { fired ++= as })
+    // shuffle records written by the tasks of the stages the region submits
+    val region = "engine-shuffle"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(p => p.getProperty(graft.util.JobCounts.Key) == region))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val counts = new graft.util.JobCounts(spark)
+    val base = 1700000000000L
+    val perBatch = 12
+    try for (i <- 0 until 10) {
+      val batch = spark.sparkContext.parallelize(
+        (0 until perBatch).map(j => (j % 3, new java.sql.Timestamp(base + i * 1000L + j),
+          j.toDouble)), 4).toDF("carId", "ts", "speed")
+      counts.region(region) { engine.processBatch(batch, "ts") }
+      counts.take(region) // drains the listener bus
+      assert(written.getAndSet(0) == perBatch, s"batch $i")
+      val total = fired.synchronized(fired.map(_.aggregate.toLong).max)
+      assert(total == (i + 1) * perBatch / 3, s"batch $i: running count $total")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("RuleStore save/load round-trips through the MERGE path") {

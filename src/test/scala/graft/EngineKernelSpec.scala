@@ -135,6 +135,15 @@ class EngineKernelSpec extends AnyFunSuite {
     assert(fired == List((5000L, "10.000000"), (20000L, "1.000000")))
   }
 
+  test("per-event rows tied on ts and payload replay in one order however they arrive") {
+    val perEvent = sum.copy(frequencyMilliseconds = Some(0L))
+    val rows = Seq(row(1000, "10.000000"), row(1000, "20.000000"))
+    val (fired, _) = eval(perEvent, rows, hi = base + 1000, curMax = base + 1000)
+    val (reversed, _) = eval(perEvent, rows.reverse, hi = base + 1000, curMax = base + 1000)
+    assert(fired == List((1000L, "10.000000"), (1000L, "30.000000")))
+    assert(reversed == fired)
+  }
+
   test("passthrough emits each fresh row with its aggIn and payload") {
     val pass = Rule(aggregateFieldName = Some("speed"))
     val out = DynamicActiveEngine.evalGroup(Map(1L -> pass), 1L, key,
