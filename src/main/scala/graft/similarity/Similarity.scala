@@ -32,8 +32,9 @@ object Similarity {
   /** Thrown by [[absorbSemantic2L]] when an admitted batch contains ids
     * on the frozen codebook's centroid stride — the one absorb-family
     * contract violation a live ingest loop converts to COMPACTION
-    * instead of failure ([[graft.streaming.IngestGateStream.attachAbsorbing]]
-    * matches on this type, not on message text). Subtypes
+    * instead of failure (the streaming gate's
+    * [[graft.streaming.LandedGenerations]] matches on this type, not on
+    * message text). Subtypes
     * `IllegalArgumentException` so callers treating it as a plain
     * contract violation keep working. */
   final class CodebookStrideRefusal(msg: String)

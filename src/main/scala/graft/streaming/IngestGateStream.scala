@@ -29,8 +29,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * The batch is persisted before gating (it feeds both the document
   * and embedding sides of the gate; an unpersisted streaming batch
   * re-evaluated within one epoch can re-run its source) and
-  * unpersisted after delivery. Two faces with DIFFERENT consistency
-  * contracts:
+  * unpersisted after delivery. Three faces share that stream shell,
+  * with DIFFERENT consistency contracts:
   *
   *  - [[attach]] gates every batch against the FROZEN landed corpus —
   *    verdicts are batch-order-independent (the landed-codebook
@@ -41,7 +41,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   *    ([[graft.dedup.Dedup.absorbBatch]], the q184 merge) — verdicts
   *    are deliberately arrival-order-DEPENDENT (first copy in wins;
   *    its re-upload next batch verdicts `exact_landed_dup`), the
-  *    operational dedup contract of a live ingest loop. */
+  *    operational dedup contract of a live ingest loop;
+  *  - [[attachChurn]] also retracts deleted documents first; the
+  *    absorbing face is its trigger on all-add batches.
+  *
+  * The two mutating faces and [[replayJournal]] move the landed corpus
+  * through one lifecycle, [[LandedGenerations]]. */
 object IngestGateStream {
 
   /** Atomically-published view of a mutating stream's CURRENT landed
@@ -58,20 +63,9 @@ object IngestGateStream {
     * reads a torn corpus. */
   final class LandedView(d0: DataFrame, e0: DataFrame) {
     @volatile private var cur: (DataFrame, DataFrame) = (d0, e0)
-    private[streaming] def publish(d: DataFrame, e: DataFrame): Unit =
-      cur = (d, e)
+    private[streaming] def publish(frames: (DataFrame, DataFrame)): Unit =
+      cur = frames
     def current: (DataFrame, DataFrame) = cur
-  }
-
-  /** Release every registry key whose trailing plan fingerprint is one
-    * of `fps` (a key ends ":"+fingerprint) — the per-trigger and
-    * per-generation release idiom both stream faces share. */
-  private def releaseByFps(fps: Seq[String]): Unit = {
-    if (fps.nonEmpty) {
-      graft.util.CacheRegistry.releaseIf(k =>
-        fps.exists(fp => k.endsWith(":" + fp)))
-      ()
-    }
   }
 
   /** This JVM's stable writer identity for journal locks. */
@@ -245,14 +239,13 @@ object IngestGateStream {
     * commit re-runs the epoch against a corpus that already holds the
     * admits: the re-gate verdicts them `exact_landed_dup`, nothing
     * re-journals, and the duplicate delete rows the re-run CAN write
-    * are absorbed by [[replayJournal]]'s per-(epoch, op, id) dedup.
-    * At-least-once delivery with idempotent durable state — the same
-    * contract the live absorb already documents. */
+    * are absorbed by [[replayJournal]]'s per-(incarnation, epoch, op,
+    * id) dedup. At-least-once delivery with idempotent durable state —
+    * the same contract the live absorb already documents. */
   private def journalAppend(lease: JournalLease, epoch: Long,
-      dels: Option[DataFrame], admDocs: Option[DataFrame],
-      admEmb: Option[DataFrame], vecType: org.apache.spark.sql.types.DataType,
+      dels: Option[DataFrame], adm: Option[(DataFrame, DataFrame)],
+      vecType: org.apache.spark.sql.types.DataType,
       idCol: String, textCol: String): Unit = {
-    val dir = lease.dir
     // (incarnation, epoch) ride a broadcast 1-row stamp frame instead
     // of inlined literals (optimization r22, the r21 horizon-bounds
     // pattern): per-epoch literals made every trigger's journal-write
@@ -266,44 +259,49 @@ object IngestGateStream {
       df.crossJoin(broadcast(
         Seq((lease.incarnation, epoch)).toDF("incarnation", "epoch")))
     }
-    val adds = for (d <- admDocs; e <- admEmb) yield
+    val adds = adm.map { case (d, e) =>
       stamped(d.join(e.withColumnRenamed("vec_id", idCol), Seq(idCol), "left"))
         .select(col("incarnation"), col("epoch"), lit("add").as("op"),
           col(idCol), col("source"), col(textCol), col("embedding"))
+    }
     val deletes = dels.map(df => stamped(df).select(
       col("incarnation"), col("epoch"), lit("delete").as("op"), col(idCol),
       lit(null).cast("string").as("source"),
       lit(null).cast("string").as(textCol),
       lit(null).cast(vecType).as("embedding")))
     (adds ++ deletes).reduceOption(_ unionByName _)
-      .foreach(_.write.mode("append").parquet(dir))
+      .foreach(_.write.mode("append").parquet(lease.dir))
   }
 
   /** RECOVER the grown landed corpus from a journal — the restart half
     * of the recovery story: starting from the generation-0 frames (the
     * ones an index phase or [[graft.sources.IndexStore.restoreAll]]
     * re-seeded landed kinds for), fold every journaled epoch back in
-    * through the SAME merges the live stream ran — deletes retract
-    * first, admits absorb, per epoch in epoch order, with the stream's
-    * own two-generation release window and `compactEvery` LSM
-    * compaction. Returns the reconstructed (docs, emb) frames, their
-    * landed kinds seeded, ready to pass as `landedDocs0`/`landedEmb0`
-    * of a resumed [[attachChurn]]/[[attachAbsorbing]] over the same
-    * source and stream checkpoint: the resumed stream's first gate
-    * reads the seeded kinds instead of rebuilding the corpus.
+    * through the SAME [[LandedGenerations]] lifecycle the live stream
+    * ran — deletes retract first, admits absorb, per epoch in epoch
+    * order, with the stream's two-generation release window and
+    * `compactEvery` LSM compaction. Returns the reconstructed (docs,
+    * emb) frames, their landed kinds seeded, ready to pass as
+    * `landedDocs0`/`landedEmb0` of a resumed
+    * [[attachChurn]]/[[attachAbsorbing]] over the same source and
+    * stream checkpoint: the resumed stream's first gate reads the
+    * seeded kinds instead of rebuilding the corpus.
     *
     * Cost: one retract/absorb merge pair per journaled epoch, each
     * change-set-sized — recovery is O(Σ batch sizes), never O(corpus).
     * Epoch replays that double-journaled a delete are deduped per
-    * (epoch, op, id); duplicate adds cannot exist (a re-gated replay
-    * verdicts absorbed docs `exact_landed_dup`, see [[journalAppend]]).
-    * A missing or empty journal returns the generation-0 frames
-    * unchanged. */
+    * (incarnation, epoch, op, id); duplicate adds cannot exist (a
+    * re-gated replay verdicts absorbed docs `exact_landed_dup`, see
+    * [[journalAppend]]). A missing or empty journal returns the
+    * generation-0 frames unchanged; `compactEvery < 1` throws
+    * `IllegalArgumentException` before the journal is read. */
   def replayJournal(landedDocs0: DataFrame, landedEmb0: DataFrame,
       journalDir: String, targetSource: String,
       centroidOffset: Int = 8, compactEvery: Int = 16,
       keepBp: Int = 2000, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame) = {
+    val gens = new LandedGenerations(landedDocs0, landedEmb0, targetSource,
+      centroidOffset, compactEvery, keepBp, idCol, textCol)
     val spark = landedDocs0.sparkSession
     import spark.implicits._
     val journal =
@@ -314,7 +312,7 @@ object IngestGateStream {
                 else raw.withColumn("incarnation", lit(0L))
         j.dropDuplicates("incarnation", "epoch", "op", idCol)
       } catch { case _: org.apache.spark.sql.AnalysisException =>
-        return (landedDocs0, landedEmb0)
+        return gens.current
       }
     // one row per (writer incarnation, trigger) — bounded by the
     // journal's trigger count, the same cardinality the stream(s)
@@ -324,45 +322,6 @@ object IngestGateStream {
     val epochs = journal.select("incarnation", "epoch").distinct()
       .orderBy("incarnation", "epoch")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    var d = landedDocs0
-    var e = landedEmb0
-    def projDocs(x: DataFrame): DataFrame =
-      x.select(col(idCol), col("source"), col(textCol))
-    def projEmb(x: DataFrame): DataFrame =
-      x.select(col("vec_id"), col("embedding"))
-    var gens = 0
-    var fpsPrev: Seq[String] = Seq.empty
-    var fpsPrev2: Seq[String] = Seq.empty
-    def fpsOf(a: DataFrame, b: DataFrame): Seq[String] = Seq(
-      graft.util.CacheRegistry.planFingerprint(a),
-      graft.util.CacheRegistry.planFingerprint(b))
-    val protectedFps: Set[String] = fpsOf(landedDocs0, landedEmb0).toSet
-    def releaseFps(fps: Seq[String]): Unit =
-      releaseByFps(fps.filterNot(protectedFps.contains))
-    def compact(nextD: DataFrame, nextE: DataFrame,
-        extraFps: Seq[String]): Unit = {
-      val toRelease = fpsOf(d, e) ++ fpsOf(nextD, nextE) ++ extraFps ++
-        fpsPrev ++ fpsPrev2
-      d = nextD.localCheckpoint(true)
-      e = nextE.localCheckpoint(true)
-      releaseFps(toRelease)
-      fpsPrev = Seq.empty; fpsPrev2 = Seq.empty
-    }
-    def rotate(nextD: DataFrame, nextE: DataFrame,
-        extraFps: Seq[String])(mutate: => Unit): Unit = {
-      gens += 1
-      if (gens % compactEvery == 0) compact(nextD, nextE, extraFps)
-      else try {
-        val cur = fpsOf(d, e) ++ extraFps
-        mutate
-        d = nextD; e = nextE
-        releaseFps(fpsPrev2)
-        fpsPrev2 = fpsPrev; fpsPrev = cur
-      } catch {
-        case _: graft.similarity.Similarity.CodebookStrideRefusal =>
-          compact(nextD, nextE, extraFps)
-      }
-    }
     for ((inc, ep) <- epochs) {
       // equi-join against a broadcast 1-row frame, not a per-epoch
       // literal filter (optimization r22, the r21 horizon-bounds
@@ -376,32 +335,67 @@ object IngestGateStream {
         broadcast(Seq((inc, ep)).toDF("incarnation", "epoch")),
         Seq("incarnation", "epoch")).localCheckpoint(true)
       val dels = batch.filter(col("op") === "delete").select(col(idCol))
-      if (!dels.isEmpty) {
-        val keptD = d.join(dels, Seq(idCol), "left_anti")
-        val keptE = e.join(dels.select(col(idCol).as("vec_id")),
-          Seq("vec_id"), "left_anti")
-        rotate(keptD, keptE, Seq.empty) {
-          Dedup.retractBatch(d, dels, e, keptD, keptE, targetSource,
-            centroidOffset, keepBp = keepBp, textCol = textCol,
-            idCol = idCol)
-        }
-      }
+      if (!dels.isEmpty) gens.retract(dels)
       val adds = batch.filter(col("op") === "add")
-      if (!adds.isEmpty) {
-        val admDocs = adds.select(col(idCol), col("source"), col(textCol))
-          .localCheckpoint(true)
-        val admEmb = adds.select(col(idCol).as("vec_id"), col("embedding"))
-          .localCheckpoint(true)
-        val d2 = projDocs(d).unionByName(admDocs)
-        val e2 = projEmb(e).unionByName(admEmb)
-        rotate(d2, e2, fpsOf(admDocs, admEmb)) {
-          Dedup.absorbBatch(d, admDocs, e, admEmb, d2, e2, targetSource,
-            centroidOffset, keepBp = keepBp)
-        }
-      }
+      if (!adds.isEmpty)
+        gens.absorb(
+          adds.select(col(idCol), col("source"), col(textCol))
+            .localCheckpoint(true),
+          adds.select(col(idCol).as("vec_id"), col("embedding"))
+            .localCheckpoint(true))
     }
-    (d, e)
+    gens.current
   }
+
+  /** One trigger of a gate stream: its persisted batch, and what the
+    * trigger drops however it ends — the registry keys on the
+    * canonical frames it gated (shingle/band tables keyed on
+    * per-trigger fingerprints no later batch can hit; a long-running
+    * stream otherwise accumulates one persisted pair per trigger) and
+    * the frames it persisted. */
+  private final class GateTrigger(val epoch: Long, val batch: DataFrame,
+      idCol: String, stratum: String, textCol: String, vecCol: String) {
+    private var fps = Seq.empty[String]
+    private var held = List.empty[DataFrame]
+
+    /** `x`'s docs and embeddings under the gate family's canonical
+      * column names — its internal stage calls are keyed to them, so
+      * any caller-side names work (r15 second-review finding). */
+    def canonical(x: DataFrame): (DataFrame, DataFrame) = {
+      val docs = x.select(col(idCol), col(stratum).as("source"), col(textCol))
+      val emb = x.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
+      fps = LandedGenerations.fpsOf(docs, emb)
+      (docs, emb)
+    }
+
+    def hold(x: DataFrame): DataFrame = { held ::= x; x.persist() }
+
+    def close(release: Seq[String] => Unit): Unit = {
+      release(fps)
+      held.foreach(_.unpersist())
+      batch.unpersist()
+      ()
+    }
+  }
+
+  /** The stream shell of all three faces: `body` runs once per
+    * non-empty trigger. The batch is persisted FIRST — it feeds both
+    * gate sides, and even the emptiness probe must not re-run the
+    * source — and the trigger is closed with `release` however it
+    * ends. */
+  private def gateStream(records: DataFrame, trigger: Trigger,
+      checkpointDir: Option[String], idCol: String, stratum: String,
+      textCol: String, vecCol: String, release: Seq[String] => Unit)(
+      body: GateTrigger => Unit): StreamingQuery =
+    checkpointDir.foldLeft(records.writeStream
+      .outputMode("append")
+      .trigger(trigger))((w, d) => w.option("checkpointLocation", d))
+      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+        val t = new GateTrigger(epochId, batch.persist(), idCol, stratum,
+          textCol, vecCol)
+        try { if (!t.batch.isEmpty) body(t) } finally t.close(release)
+      }
+      .start()
 
   /** Attach the gate to a streaming `records` frame with columns
     * `(idCol, stratum, textCol, vecCol)` — the stratum/vector columns
@@ -421,53 +415,25 @@ object IngestGateStream {
       textCol: String = "text", vecCol: String = "embedding",
       checkpointDir: Option[String] = None)(
       onVerdicts: (Long, DataFrame) => Unit): StreamingQuery =
-    checkpointDir.foldLeft(records.writeStream
-      .outputMode("append")
-      .trigger(trigger))((w, d) => w.option("checkpointLocation", d))
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.persist()
-        var batchFps: Seq[String] = Seq.empty
-        try {
-          // persist FIRST: even the emptiness probe must not re-run
-          // the source (the hazard the persist exists to prevent)
-          if (!b.isEmpty) {
-            // the gate family's internal stage calls are keyed to the
-            // canonical column names — rename here so any caller-side
-            // names work (r15 second-review finding)
-            val docs = b.select(col(idCol), col(stratum).as("source"),
-              col(textCol))
-            val emb = b.select(col(idCol).as("vec_id"),
-              col(vecCol).as("embedding"))
-            batchFps = Seq(
-              graft.util.CacheRegistry.planFingerprint(docs),
-              graft.util.CacheRegistry.planFingerprint(emb))
-            // memoizeEvidence = false: a micro-batch frame's registry
-            // fingerprint is unique per trigger, so the gate-evidence
-            // memo would leak one persisted entry per micro-batch here
-            val verdicts =
-              if (full)
-                Dedup.ingestGateFull(landedDocs, docs, landedEmb, emb,
-                  targetSource, centroidOffset = centroidOffset,
-                  keepBp = keepBp, textCol = textCol, idCol = idCol,
-                  memoizeEvidence = false)
-              else
-                Dedup.ingestGate(landedDocs, docs, landedEmb, emb,
-                  targetSource, centroidOffset = centroidOffset,
-                  keepBp = keepBp, textCol = textCol, idCol = idCol,
-                  memoizeEvidence = false)
-            onVerdicts(epochId, verdicts)
-          }
-        } finally {
-          // drop the gate's batch-side memos (shingle/band tables keyed
-          // on THIS trigger's frame fingerprints — no later batch can
-          // hit them; a long-running stream otherwise accumulates one
-          // persisted pair per trigger, review finding)
-          releaseByFps(batchFps)
-          b.unpersist()
-          ()
-        }
-      }
-      .start()
+    gateStream(records, trigger, checkpointDir, idCol, stratum, textCol,
+        vecCol, LandedGenerations.releaseByFps) { t =>
+      val (docs, emb) = t.canonical(t.batch)
+      // memoizeEvidence = false: a micro-batch frame's registry
+      // fingerprint is unique per trigger, so the gate-evidence
+      // memo would leak one persisted entry per micro-batch here
+      val verdicts =
+        if (full)
+          Dedup.ingestGateFull(landedDocs, docs, landedEmb, emb,
+            targetSource, centroidOffset = centroidOffset,
+            keepBp = keepBp, textCol = textCol, idCol = idCol,
+            memoizeEvidence = false)
+        else
+          Dedup.ingestGate(landedDocs, docs, landedEmb, emb,
+            targetSource, centroidOffset = centroidOffset,
+            keepBp = keepBp, textCol = textCol, idCol = idCol,
+            memoizeEvidence = false)
+      onVerdicts(t.epoch, verdicts)
+    }
 
   /** The gate with LIVE ABSORPTION — the operational loop
     * "gate → admit → absorb → next batch" ([[graft.dedup.Dedup.absorbBatch]])
@@ -479,24 +445,13 @@ object IngestGateStream {
     * ago verdicts `exact_landed_dup`, never `admit`. Six-stage gate
     * only (the q184-proven absorb family covers exactly its kinds).
     *
-    * Mechanics, per admitted batch (generation G):
-    *  - admitted docs/embeddings are `localCheckpoint`ed (eager,
-    *    batch-sized) so the grown frames' plans stay one leaf per
-    *    generation, the q184 device;
-    *  - [[graft.dedup.Dedup.absorbBatch]] seeds the G-keyed registry
-    *    entries as LAZY merges over generation G−1's cached artifacts
-    *    — they materialize when batch G+1's gate reads them, so
-    *    generation G−2's entries (superseded AND no longer lazily
-    *    referenced) are released right then, keeping exactly two
-    *    generations of artifacts live;
-    *  - every `compactEvery` admitted batches — or if the frozen
-    *    codebook REFUSES an admitted id on a centroid stride
-    *    ([[graft.similarity.Similarity.absorbSemantic2L]]'s loud
-    *    contract) — the loop COMPACTS: the grown frames collapse to
-    *    one checkpointed leaf each, every tracked generation entry is
-    *    released, and the next gate rebuilds the landed indexes from
-    *    the compacted corpus (the LSM shape: cheap merges between
-    *    rebuilds, cost amortized over `compactEvery` triggers).
+    * This is [[attachChurn]]'s trigger on all-add batches: no delete
+    * extraction, no ack rows, no published view. Each admitted batch is
+    * one generation of [[LandedGenerations]] — admitted docs and
+    * embeddings `localCheckpoint`ed (eager, batch-sized) so the grown
+    * frames' plans stay one leaf per generation (the q184 device), two
+    * generations of artifacts live, and a compaction every
+    * `compactEvery` admitted batches or on a frozen-codebook refusal.
     *
     * Epoch-replay caveat (inherent to order-dependent absorption, not
     * this wiring): a batch replayed AFTER its admits were absorbed
@@ -516,139 +471,10 @@ object IngestGateStream {
       textCol: String = "text", vecCol: String = "embedding",
       checkpointDir: Option[String] = None,
       journalDir: Option[String] = None)(
-      onVerdicts: (Long, DataFrame) => Unit): StreamingQuery = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    val vecType = landedEmb0.schema("embedding").dataType
-    // exclusive writer claim + incarnation stamp (see acquireJournal)
-    val lease = journalDir.map(jd =>
-      acquireJournal(records.sparkSession, jd))
-    // single-threaded within foreachBatch (one epoch at a time).
-    // Generation 0 keeps the CALLER's landed frames verbatim — their
-    // registry keys are the ones an index phase / IndexStore restore
-    // built, and a projection here would change every fingerprint and
-    // force a full landed rebuild on the first batch (review finding).
-    // The canonical-column projection happens at UNION construction
-    // instead: the grown frames join landed with the stream's
-    // 3-column batch projection, so extra landed columns (lang,
-    // n_chars, …) must not reach the union.
-    var landedDocs = landedDocs0
-    var landedEmb = landedEmb0
-    def projDocs(d: DataFrame): DataFrame =
-      d.select(col(idCol), col("source"), col(textCol))
-    def projEmb(e: DataFrame): DataFrame =
-      e.select(col("vec_id"), col("embedding"))
-    var admittedGens = 0
-    // fingerprints of generations G-1 and G-2's landed frames — the
-    // release bookkeeping (a registry key ends ":"+fingerprint)
-    var fpsPrev: Seq[String] = Seq.empty
-    var fpsPrev2: Seq[String] = Seq.empty
-    def fpsOf(d: DataFrame, e: DataFrame): Seq[String] = Seq(
-      graft.util.CacheRegistry.planFingerprint(d),
-      graft.util.CacheRegistry.planFingerprint(e))
-    // the CALLER's generation-0 frames may back index-phase /
-    // IndexStore-restored registry entries OTHER consumers share in
-    // this session — the stream never releases keys on those
-    // fingerprints, even when generation 0 rotates out of the
-    // two-generation window or a compaction sweeps it (review finding:
-    // releasing them silently forced every sharing consumer to rebuild)
-    val protectedFps: Set[String] =
-      fpsOf(landedDocs0, landedEmb0).toSet
-    def releaseFps(fps: Seq[String]): Unit =
-      releaseByFps(fps.filterNot(protectedFps.contains))
-    def compact(landed2d: DataFrame, landed2e: DataFrame,
-        extraFps: Seq[String]): Unit = {
-      // release EVERY tracked generation plus any keys hanging off the
-      // raw union frames (a refused absorb seeds text artifacts under
-      // the landed2 keys before the semantic stage throws)
-      val toRelease = fpsOf(landedDocs, landedEmb) ++
-        fpsOf(landed2d, landed2e) ++ extraFps ++ fpsPrev ++ fpsPrev2
-      landedDocs = landed2d.localCheckpoint(true)
-      landedEmb = landed2e.localCheckpoint(true)
-      releaseFps(toRelease)
-      fpsPrev = Seq.empty; fpsPrev2 = Seq.empty
-    }
-    val q = startWithLease(records.sparkSession, lease)(
-      checkpointDir.foldLeft(records.writeStream
-      .outputMode("append")
-      .trigger(trigger))((w, d) => w.option("checkpointLocation", d))
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.persist()
-        var verdicts: DataFrame = null
-        var batchFps: Seq[String] = Seq.empty
-        try {
-          if (!b.isEmpty) {
-            val docs = b.select(col(idCol), col(stratum).as("source"),
-              col(textCol))
-            val emb = b.select(col(idCol).as("vec_id"),
-              col(vecCol).as("embedding"))
-            batchFps = fpsOf(docs, emb)
-            // persist: the sink's action AND the admit extraction both
-            // read the full six-stage plan — without this the whole
-            // gate evaluates twice per trigger (review finding)
-            verdicts = Dedup.ingestGate(landedDocs, docs, landedEmb,
-              emb, targetSource, centroidOffset = centroidOffset,
-              keepBp = keepBp, textCol = textCol, idCol = idCol,
-              memoizeEvidence = false).persist()
-            // deliver BEFORE absorbing: the delivered verdicts are the
-            // ones computed against the pre-batch landed state
-            onVerdicts(epochId, verdicts)
-            val adm = verdicts.filter(col("gate") === "admit")
-              .select(col(idCol)).localCheckpoint(true)
-            if (!adm.isEmpty) {
-              val admDocs = docs.join(adm, Seq(idCol)).localCheckpoint(true)
-              val admEmb = emb.join(
-                adm.select(col(idCol).as("vec_id")), Seq("vec_id"))
-                .localCheckpoint(true)
-              val landed2d = projDocs(landedDocs).unionByName(admDocs)
-              val landed2e = projEmb(landedEmb).unionByName(admEmb)
-              admittedGens += 1
-              // the admitted frames' own memoized builds (the batch
-              // sides of the text merges key on them) ride the same
-              // two-generation release schedule
-              val admFps = fpsOf(admDocs, admEmb)
-              if (admittedGens % compactEvery == 0)
-                compact(landed2d, landed2e, admFps)
-              else try {
-                val cur = fpsOf(landedDocs, landedEmb) ++ admFps
-                Dedup.absorbBatch(landedDocs, admDocs, landedEmb, admEmb,
-                  landed2d, landed2e, targetSource, centroidOffset,
-                  keepBp = keepBp)
-                landedDocs = landed2d
-                landedEmb = landed2e
-                releaseFps(fpsPrev2)
-                fpsPrev2 = fpsPrev; fpsPrev = cur
-              } catch {
-                // ONLY the frozen-codebook stride refusal converts to
-                // compaction; any other contract violation in the
-                // absorb family must surface, not silently degrade the
-                // stream to rebuild-per-batch (review finding). Typed
-                // match — message-text coupling was the brittle part
-                // (review finding).
-                case _: graft.similarity.Similarity.CodebookStrideRefusal =>
-                  compact(landed2d, landed2e, admFps)
-              }
-              // durable record of the mutation AFTER it landed (see
-              // journalAppend's crash-consistency note)
-              lease.foreach(l => journalAppend(l, epochId, None,
-                Some(admDocs), Some(admEmb), vecType, idCol, textCol))
-            }
-          }
-        } finally {
-          // the gate's batch-side memos (shingle/band tables of THIS
-          // trigger's frames) are keyed on per-trigger fingerprints no
-          // later batch can hit — drop them now or a long-running
-          // stream accumulates one persisted pair per trigger
-          // (review finding); the admitted frames' entries are
-          // generation-tracked above, the landed ones don't match
-          releaseFps(batchFps)
-          if (verdicts != null) { verdicts.unpersist(); () }
-          b.unpersist()
-          ()
-        }
-      }
-      .start())
-    q
-  }
+      onVerdicts: (Long, DataFrame) => Unit): StreamingQuery =
+    attachMutating(records, landedDocs0, landedEmb0, targetSource,
+      centroidOffset, compactEvery, keepBp, trigger, idCol, stratum,
+      textCol, vecCol, None, checkpointDir, journalDir, None)(onVerdicts)
 
   /** The CDC face — MIXED add/delete ingest, completing streaming
     * CRUD: each record carries `opCol` ∈ {"add", "delete"} (an add is
@@ -667,9 +493,9 @@ object IngestGateStream {
     *     never-landed ids ack too, the retract no-op contract) unioned
     *     with the adds' verdicts;
     *  4. *absorb*: admitted adds fold into every landed artifact
-    *     ([[attachAbsorbing]]'s generation bookkeeping — retract and
-    *     absorb each rotate the two-generation window, and both count
-    *     toward `compactEvery`).
+    *     ([[LandedGenerations]]' bookkeeping — retract and absorb each
+    *     rotate the two-generation window, and both count toward
+    *     `compactEvery`).
     *
     * Arrival order is the CONTRACT, as across the absorbing face: the
     * q201 oracle replays the same order one-shot (stage-1 gate →
@@ -689,137 +515,73 @@ object IngestGateStream {
         * publishes its landed frames here at the END of each mutating
         * epoch (see [[LandedView]]'s visibility contract) */
       view: Option[LandedView] = None)(
+      onVerdicts: (Long, DataFrame) => Unit): StreamingQuery =
+    attachMutating(records, landedDocs0, landedEmb0, targetSource,
+      centroidOffset, compactEvery, keepBp, trigger, idCol, stratum,
+      textCol, vecCol, Some(opCol), checkpointDir, journalDir, view)(
+      onVerdicts)
+
+  /** The trigger of both mutating faces (see [[attachChurn]]'s steps);
+    * `opCol = None` reads every record as an add. */
+  private def attachMutating(records: DataFrame, landedDocs0: DataFrame,
+      landedEmb0: DataFrame, targetSource: String, centroidOffset: Int,
+      compactEvery: Int, keepBp: Int, trigger: Trigger, idCol: String,
+      stratum: String, textCol: String, vecCol: String,
+      opCol: Option[String], checkpointDir: Option[String],
+      journalDir: Option[String], view: Option[LandedView])(
       onVerdicts: (Long, DataFrame) => Unit): StreamingQuery = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
+    val gens = new LandedGenerations(landedDocs0, landedEmb0, targetSource,
+      centroidOffset, compactEvery, keepBp, idCol, textCol)
     val vecType = landedEmb0.schema("embedding").dataType
     // exclusive writer claim + incarnation stamp (see acquireJournal)
-    val lease = journalDir.map(jd =>
-      acquireJournal(records.sparkSession, jd))
-    var landedDocs = landedDocs0
-    var landedEmb = landedEmb0
-    def projDocs(d: DataFrame): DataFrame =
-      d.select(col(idCol), col("source"), col(textCol))
-    def projEmb(e: DataFrame): DataFrame =
-      e.select(col("vec_id"), col("embedding"))
-    var mutationGens = 0
-    var fpsPrev: Seq[String] = Seq.empty
-    var fpsPrev2: Seq[String] = Seq.empty
-    def fpsOf(d: DataFrame, e: DataFrame): Seq[String] = Seq(
-      graft.util.CacheRegistry.planFingerprint(d),
-      graft.util.CacheRegistry.planFingerprint(e))
-    val protectedFps: Set[String] =
-      fpsOf(landedDocs0, landedEmb0).toSet
-    def releaseFps(fps: Seq[String]): Unit =
-      releaseByFps(fps.filterNot(protectedFps.contains))
-    def compact(nextD: DataFrame, nextE: DataFrame,
-        extraFps: Seq[String]): Unit = {
-      val toRelease = fpsOf(landedDocs, landedEmb) ++
-        fpsOf(nextD, nextE) ++ extraFps ++ fpsPrev ++ fpsPrev2
-      landedDocs = nextD.localCheckpoint(true)
-      landedEmb = nextE.localCheckpoint(true)
-      releaseFps(toRelease)
-      fpsPrev = Seq.empty; fpsPrev2 = Seq.empty
-    }
-    // one generation rotation (shared by the retract and absorb steps):
-    // adopt the next frames, release the window's oldest generation
-    def rotate(nextD: DataFrame, nextE: DataFrame,
-        extraFps: Seq[String])(mutate: => Unit): Unit = {
-      mutationGens += 1
-      if (mutationGens % compactEvery == 0)
-        compact(nextD, nextE, extraFps)
-      else try {
-        val cur = fpsOf(landedDocs, landedEmb) ++ extraFps
-        mutate
-        landedDocs = nextD
-        landedEmb = nextE
-        releaseFps(fpsPrev2)
-        fpsPrev2 = fpsPrev; fpsPrev = cur
-      } catch {
-        case _: graft.similarity.Similarity.CodebookStrideRefusal =>
-          compact(nextD, nextE, extraFps)
-      }
-    }
-    val q = startWithLease(records.sparkSession, lease)(
-      checkpointDir.foldLeft(records.writeStream
-      .outputMode("append")
-      .trigger(trigger))((w, d) => w.option("checkpointLocation", d))
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        val b = batch.persist()
-        var verdicts: DataFrame = null
-        var batchFps: Seq[String] = Seq.empty
-        // the trigger's durable-journal material, written once at the
-        // end of the mutation path (see journalAppend)
-        var delsJ: Option[DataFrame] = None
-        var admJ: Option[(DataFrame, DataFrame)] = None
-        try {
-          if (!b.isEmpty) {
-            val dels = b.filter(col(opCol) === "delete")
-              .select(col(idCol)).localCheckpoint(true)
-            // 1. retract FIRST — the adds gate against the post-delete
-            // corpus
-            if (!dels.isEmpty) {
-              val keptD = landedDocs.join(dels, Seq(idCol), "left_anti")
-              val keptE = landedEmb.join(
-                dels.select(col(idCol).as("vec_id")), Seq("vec_id"),
-                "left_anti")
-              rotate(keptD, keptE, Seq.empty) {
-                Dedup.retractBatch(landedDocs, dels, landedEmb,
-                  keptD, keptE, targetSource, centroidOffset,
-                  keepBp = keepBp, textCol = textCol, idCol = idCol)
-              }
-              delsJ = Some(dels)
-            }
-            val acks = dels.select(col(idCol),
-              lit("deleted").as("gate"))
-            val adds = b.filter(col(opCol) === "add")
-            if (adds.isEmpty) onVerdicts(epochId, acks)
-            else {
-              val docs = adds.select(col(idCol),
-                col(stratum).as("source"), col(textCol))
-              val emb = adds.select(col(idCol).as("vec_id"),
-                col(vecCol).as("embedding"))
-              batchFps = fpsOf(docs, emb)
-              verdicts = Dedup.ingestGate(landedDocs, docs, landedEmb,
-                emb, targetSource, centroidOffset = centroidOffset,
-                keepBp = keepBp, textCol = textCol, idCol = idCol,
-                memoizeEvidence = false).persist()
-              onVerdicts(epochId,
-                acks.unionByName(verdicts.select(col(idCol), col("gate"))))
-              val adm = verdicts.filter(col("gate") === "admit")
-                .select(col(idCol)).localCheckpoint(true)
-              if (!adm.isEmpty) {
-                val admDocs = docs.join(adm, Seq(idCol))
-                  .localCheckpoint(true)
-                val admEmb = emb.join(
-                  adm.select(col(idCol).as("vec_id")), Seq("vec_id"))
-                  .localCheckpoint(true)
-                val landed2d = projDocs(landedDocs).unionByName(admDocs)
-                val landed2e = projEmb(landedEmb).unionByName(admEmb)
-                rotate(landed2d, landed2e, fpsOf(admDocs, admEmb)) {
-                  Dedup.absorbBatch(landedDocs, admDocs, landedEmb,
-                    admEmb, landed2d, landed2e, targetSource,
-                    centroidOffset, keepBp = keepBp)
-                }
-                admJ = Some((admDocs, admEmb))
-              }
-            }
-            // durable record of this trigger's mutations AFTER they
-            // landed (see journalAppend's crash-consistency note)
-            if (delsJ.nonEmpty || admJ.nonEmpty)
-              lease.foreach(l => journalAppend(l, epochId, delsJ,
-                admJ.map(_._1), admJ.map(_._2), vecType, idCol, textCol))
-            // epoch complete — publish the generation to any attached
-            // server (one volatile write; see LandedView)
-            view.foreach(_.publish(landedDocs, landedEmb))
+    val lease = journalDir.map(jd => acquireJournal(records.sparkSession, jd))
+    startWithLease(records.sparkSession, lease)(gateStream(records, trigger,
+        checkpointDir, idCol, stratum, textCol, vecCol, gens.release) { t =>
+      val dels = opCol.map(o => t.batch.filter(col(o) === "delete")
+        .select(col(idCol)).localCheckpoint(true))
+      // 1. retract FIRST — the adds gate against the post-delete corpus
+      val retracted = dels.filterNot(_.isEmpty)
+      retracted.foreach(gens.retract)
+      val acks = dels.map(_.select(col(idCol), lit("deleted").as("gate")))
+      val adds = opCol.fold(t.batch)(o => t.batch.filter(col(o) === "add"))
+      // an all-add batch is non-empty already: no emptiness job for it
+      val admitted =
+        if (opCol.nonEmpty && adds.isEmpty) {
+          acks.foreach(onVerdicts(t.epoch, _))
+          None
+        } else {
+          val (docs, emb) = t.canonical(adds)
+          val (landedDocs, landedEmb) = gens.current
+          // held: the sink's action AND the admit extraction both read
+          // the full six-stage plan — without it the whole gate
+          // evaluates twice per trigger (review finding)
+          val verdicts = t.hold(Dedup.ingestGate(landedDocs, docs,
+            landedEmb, emb, targetSource, centroidOffset = centroidOffset,
+            keepBp = keepBp, textCol = textCol, idCol = idCol,
+            memoizeEvidence = false))
+          // deliver BEFORE absorbing: the delivered verdicts are the
+          // ones computed against the pre-batch landed state
+          onVerdicts(t.epoch, acks.fold(verdicts)(
+            _.unionByName(verdicts.select(col(idCol), col("gate")))))
+          val adm = verdicts.filter(col("gate") === "admit")
+            .select(col(idCol)).localCheckpoint(true)
+          if (adm.isEmpty) None
+          else {
+            val admDocs = docs.join(adm, Seq(idCol)).localCheckpoint(true)
+            val admEmb = emb.join(adm.select(col(idCol).as("vec_id")),
+              Seq("vec_id")).localCheckpoint(true)
+            gens.absorb(admDocs, admEmb)
+            Some((admDocs, admEmb))
           }
-        } finally {
-          releaseFps(batchFps)
-          if (verdicts != null) { verdicts.unpersist(); () }
-          b.unpersist()
-          ()
         }
-      }
-      .start())
-    q
+      // durable record of this trigger's mutations AFTER they landed
+      // (see journalAppend's crash-consistency note)
+      if (retracted.nonEmpty || admitted.nonEmpty)
+        lease.foreach(journalAppend(_, t.epoch, retracted, admitted, vecType,
+          idCol, textCol))
+      // epoch complete — publish the generation to any attached server
+      // (one volatile write; see LandedView)
+      view.foreach(_.publish(gens.current))
+    })
   }
 }

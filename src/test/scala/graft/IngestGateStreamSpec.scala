@@ -123,9 +123,12 @@ class IngestGateStreamSpec extends SparkSpec {
         while (nid % 25L == 8L) nid += 1L
         (nid, s, t, e)
       }
-    def run(absorbing: Boolean,
+    // each trigger's Spark jobs, the sink's collect included
+    val counts = new graft.util.JobCounts(spark)
+    // face: "absorbing", "frozen", or "churn" (the same records as op = "add")
+    def run(face: String,
         slices: Iterator[Map[Long, String] => Seq[(Long, String, String, Seq[Float])]])
-        : Seq[Map[Long, String]] = {
+        : (Seq[Map[Long, String]], Seq[Long]) = {
       val input = MemoryStream[(Long, String, String, Seq[Float])](spark)
       val records = input.toDF().toDF("doc_id", "source", "text", "embedding")
       val perEpoch = scala.collection.mutable.Buffer.empty[Map[Long, String]]
@@ -133,18 +136,27 @@ class IngestGateStreamSpec extends SparkSpec {
         perEpoch += v.as[(Long, String)].collect().toMap
         ()
       }
-      val q =
-        if (absorbing)
-          IngestGateStream.attachAbsorbing(records, landedDocsA, landedEmbA,
-            "src0", keepBp = 5000)(sink)
-        else
-          IngestGateStream.attach(records, landedDocsA, landedEmbA,
-            "src0", full = false, keepBp = 5000)(sink)
+      val q = counts.region("gate") {
+        face match {
+          case "absorbing" =>
+            IngestGateStream.attachAbsorbing(records, landedDocsA, landedEmbA,
+              "src0", keepBp = 5000)(sink)
+          case "frozen" =>
+            IngestGateStream.attach(records, landedDocsA, landedEmbA,
+              "src0", full = false, keepBp = 5000)(sink)
+          case "churn" =>
+            IngestGateStream.attachChurn(records.withColumn("op", lit("add")),
+              landedDocsA, landedEmbA, "src0", keepBp = 5000)(sink)
+        }
+      }
+      counts.take("gate")
+      val jobs = scala.collection.mutable.Buffer.empty[Long]
       try slices.foreach { mk =>
         input.addData(mk(perEpoch.lastOption.getOrElse(Map.empty)))
         q.processAllAvailable()
+        jobs += counts.take("gate")._1
       } finally q.stop()
-      perEpoch.toSeq
+      (perEpoch.toSeq, jobs.toSeq)
     }
     // batch 1 = the full record slice; batch 2 = exact re-uploads (new
     // id, same text + vector) of three docs batch 1 ADMITTED
@@ -155,16 +167,25 @@ class IngestGateStreamSpec extends SparkSpec {
         assert(admitted.nonEmpty, "fixture admitted nothing in batch 1")
         reupOf(admitted.take(3))
       })
-    val absorbed = run(absorbing = true, slices)
+    val (absorbed, absorbedJobs) = run("absorbing", slices)
     absorbed(1).foreach { case (id, v) =>
       assert(v == "exact_landed_dup",
         s"re-upload $id not caught by the absorbed index: $v")
     }
+    // the steady trigger's jobs: 71 measured before the faces shared one
+    // batch body; the absorbing face runs none of the churn face's
+    // delete-extraction or emptiness jobs
+    assert(absorbedJobs(1) <= 71, s"jobs per trigger: $absorbedJobs")
+    graft.util.CacheRegistry.releaseAll()
+    // the churn face fed the same slices as adds verdicts what the
+    // absorbing face verdicts, epoch by epoch
+    val (churned, _) = run("churn", slices)
+    assert(churned == absorbed, "churn face on all-add batches diverged")
     graft.util.CacheRegistry.releaseAll()
     // the frozen face gates batch 2 against the UNCHANGED landed corpus
     // — the re-uploads of just-admitted (landed-absent) docs re-admit:
     // exactly the operational gap attachAbsorbing closes
-    val frozen = run(absorbing = false, slices)
+    val (frozen, _) = run("frozen", slices)
     frozen(1).foreach { case (id, v) =>
       assert(v == "admit", s"frozen face unexpectedly rejected $id: $v")
     }

@@ -136,6 +136,20 @@ class JournalWriterContractSpec extends SparkSpec {
     graft.util.CacheRegistry.releaseAll()
   }
 
+  test("replayJournal refuses compactEvery < 1 before it reads the journal") {
+    val j = java.nio.file.Files.createTempDirectory("jwc4").toString + "/j"
+    // one journaled add, as a mutating stream writes it
+    val (_, id, src, text, vec) = addsOf(Seq(2L)).head
+    Seq((0L, 0L, "add", id, src, text, vec))
+      .toDF("incarnation", "epoch", "op", "doc_id", "source", "text", "embedding")
+      .write.parquet(j)
+    val ex = intercept[IllegalArgumentException] {
+      IngestGateStream.replayJournal(landedD, landedE, j, "src0",
+        compactEvery = 0, keepBp = 5000)
+    }
+    assert(ex.getMessage.contains("compactEvery"), ex.getMessage)
+  }
+
   test("a foreign-JVM lock refuses until releaseJournal; then attach succeeds") {
     val tmp = java.nio.file.Files.createTempDirectory("jwc3").toString
     val j = s"$tmp/j"
