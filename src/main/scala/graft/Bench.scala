@@ -7,289 +7,21 @@ package graft
   * column, every row) is computed — a bare `count()` would let Catalyst
   * prune the very expressions under test. A warm-up query runs first so
   * JIT/codegen warm-up is not billed to the first query measured; the
-  * one-time family-index build ([[SparkEntry.buildIndexes]]) is timed
-  * as its own "index" metric, inside the reported total.
+  * one-time family-index build ([[SparkEntry.buildIndexesTimed]]) is
+  * timed as its own "index" metric, inside the reported total, and
+  * itemized per entry in bench_out.json (`index_detail` seconds,
+  * `index_attrib` [jobs, stages]).
+  *
+  * Between queries the bench releases every memoized sub-plan except
+  * the keys of the index entries a LATER query in the run declares as
+  * a reader ([[IndexDecl]]): one query's cache pressure is not billed
+  * to the next, while the cross-query reuse the index phase exists for
+  * survives until its last reader.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.util.LocalSession()
-
-    // Memoized-sub-plan reuse graph: which CacheRegistry kinds each query
-    // consumes. Between queries the bench releases every cached sub-plan
-    // NOT still needed by a later query in the run — so one query's cache
-    // pressure is not billed to the next, while genuine cross-query reuse
-    // (one corpus is shingled/banded/clustered once per session — the
-    // reuse is the point, so the bench measures it) survives the gap:
-    // q18→q19 (shingles), q19→q43→q69 (shingles + minhash-bands),
-    // q43→q54 (dedup-clusters).
-    // q89→q91 (ppl-scored: the bigram-LM scored projection the whole
-    // perplexity family shares).
-    // NOTE sort order: "q100..." < "q11..." lexicographically, so q100
-    // runs just after q10 and its cluster build SEEDS the caches the
-    // later dedup family reuses.
-    val cacheKindsUsed: Map[String, Set[String]] = Map(
-      "q100_cluster_size_histogram" -> Set("shingles", "minhash-bands", "dedup-clusters"),
-      "q108_dedup_verdicts"         -> Set("shingles", "minhash-bands", "dedup-clusters"),
-      "q18_dedup_ngram_jaccard" -> Set("shingles", "shingles-capped"),
-      "q127_containment_pairs"  -> Set("shingles", "shingles-capped"),
-      // the threshold sweep re-reads q18's capped pair space
-      "q167_threshold_sweep"    -> Set("shingles", "shingles-capped"),
-      "q128_landed_containment" -> Set("shingles", "landed-sh-set", "sh-sizes"),
-      "q129_ingest_gate" -> Set("shingles", "minhash-bands", "vec-lookup",
-        "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes", "dsir-counts",
-        "dsir-thresholds", "landed-fp", "gate-evidence"),
-      // round-15: the media, LM and full-gate incremental cells
-      "q130_image_neardup_incremental" -> Set("img-bands"),
-      "q171_video_incremental" -> Set("vid-frames"),
-      "q175_audio_incremental" -> Set("aud-windows"),
-      "q182_xsource_lm_incremental" -> Set("src-bigrams"),
-      "q131_ppl_incremental" -> Set("ppl-landed-lm", "ppl-thresholds"),
-      "q132_ingest_gate_full" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "landed-fp", "ppl-landed-lm",
-        "ppl-thresholds", "gate-evidence"),
-      // the absorb round-trip reads the q129 kind family on its own
-      // id%100-residue landed slice, plus the per-doc DSIR histogram that
-      // makes the threshold mergeable; its stage-2 (absorbed) entries
-      // are seeded in-query — that seeding IS the measured operator
-      "q184_absorb_gate" -> Set("shingles", "minhash-bands", "vec-lookup",
-        "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes", "dsir-counts",
-        "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "gate-evidence"),
-      // retrieval-after-absorb reads q184's gate family PLUS the landed
-      // retrieval kinds its absorb extends (bm25 lexical index, routed/
-      // coded IVF-PQ pair); the grown-corpus entries are seeded
-      // in-query — that seeding IS the measured operator
-      "q196_absorb_serve" -> Set("shingles", "minhash-bands", "vec-lookup",
-        "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes", "dsir-counts",
-        "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes", "gate-evidence"),
-      // the retract round-trip anti-joins the same landed family (its
-      // kept-corpus entries are seeded in-query — that IS the measured
-      // operator) and probes the landed retrieval kinds
-      "q199_retract_gate" -> Set("shingles", "minhash-bands", "vec-lookup",
-        "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes", "dsir-counts",
-        "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // churn composes absorb then retract over the same landed family
-      "q200_churn_gate" -> Set("shingles", "minhash-bands", "vec-lookup",
-        "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes", "dsir-counts",
-        "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes", "gate-evidence"),
-      // the CDC stream replays the same churn story live
-      "q201_streaming_churn" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // the resumed CDC stream reads the same landed family (its
-      // journal-replay merges anti-join/extend the gen-0 kinds)
-      "q211_streaming_resume" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // the retention policy's retract anti-joins the same landed
-      // family (its kept-corpus entries are seeded in-query)
-      "q213_retention_ageout" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // serve-during-churn: the churn side reads the q184 landed
-      // family (its per-trigger gate memos release with the stream),
-      // the serve side probes the generation-seeded retrieval kinds
-      "q214_serve_during_churn" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // churn-then-serve probes the same family plus the serve tail
-      "q202_churn_serve" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "bm25-stats", "ivfpq-asn", "ivfpq-codes", "gate-evidence"),
-      // snapshot migration retracts + absorbs the landed family off
-      // its own old-snapshot slice (no landed GATE runs, so unlike
-      // q184/q200 it reads no landed fp/DSIR-threshold kinds — retract
-      // derives those from the per-doc histogram); the migrated
-      // entries are seeded in-query — that seeding IS the measured
-      // operator
-      "q205_snapshot_migrate" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-doc-buckets", "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // migrate-then-serve re-runs the same migration (its seeds are
-      // query-private) and serves through the migrated retrieval kinds
-      "q206_migrate_serve" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-doc-buckets", "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      // the chained migration's leg 1 reads the same q205-slice landed
-      // family; leg 2 runs against leg 1's in-query seeds
-      "q209_snapshot_chain" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-doc-buckets", "bm25-stats", "ivfpq-asn", "ivfpq-codes"),
-      "q19_dedup_minhash_lsh"   -> Set("shingles", "minhash-bands"),
-      "q43_dedup_clusters"      -> Set("shingles", "minhash-bands", "dedup-clusters"),
-      "q54_leakage_safe_split"  -> Set("dedup-clusters"),
-      "q69_cross_source_dups"   -> Set("shingles", "minhash-bands"),
-      "q89_perplexity_filter"      -> Set("ppl-scored"),
-      "q91_perplexity_sketch_cut"  -> Set("ppl-scored"),
-      "q98_lsh_precision"          -> Set("shingles", "minhash-bands"),
-      "q99_lsh_incremental"        -> Set("shingles", "minhash-bands", "sh-sizes"),
-      "q101_lsh_recall"            -> Set("shingles", "shingles-capped", "minhash-bands"),
-      // q22 and q29 build the SAME full-embeddings sign-LSH band table
-      // (identical plan + params -> one registry key); retaining the
-      // kind across the gap indexes the corpus once per session, the
-      // production shape (round-13 addition)
-      "q22_embed_neardup_lsh"      -> Set("sign-bands"),
-      "q29_ann_topk_lsh"           -> Set("sign-bands"),
-      // round-14: the substring family's memoized gram spaces
-      // (q109→q112 share the corpus gram table + dup-gram set) and the
-      // incremental operators' landed-side indexes, all built in the
-      // index phase and retained until their consumers run
-      "q109_substring_dedup"       -> Set("gram-table", "dup-grams"),
-      "q110_embed_incremental"     -> Set("sign-bands", "vec-lookup"),
-      "q111_substring_incremental" -> Set("gram-hashes"),
-      "q112_substring_stats"       -> Set("gram-table", "dup-grams"),
-      // q113/q115 share the BPE word-frequency dict (the corpus-global
-      // stage); the merge rounds themselves are vocab-sized
-      "q113_bpe_merges"            -> Set("bpe-dict"),
-      "q115_bpe_segment_stats"     -> Set("bpe-dict"),
-      "q134_bpe_incremental"       -> Set("bpe-dict", "bpe-merges"),
-      // the tokenizer policy reads the landed merge table (frozen
-      // face), the full-corpus dict (retrain branch) and the memoized
-      // landed fertility baseline
-      "q207_tokenizer_policy"      -> Set("bpe-dict", "bpe-merges",
-                                          "bpe-landed-fert"),
-      // incremental semantic dedup: landed vec lookup + its memoized
-      // cluster assignment (the semantic index)
-      "q117_semantic_incremental"  -> Set("vec-lookup", "sem-assign"),
-      // the full-corpus two-level assignment all three 2L-default
-      // consumers share (round-15 memoization)
-      "q116_unified_dedup_verdict" -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters", "sem2l-asn",
-                                          "sem2l-dedup", "unified-verdicts"),
-      // the loss cross-tab is two joins over the same verdict table
-      "q177_quality_loss"          -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters", "sem2l-asn",
-                                          "sem2l-dedup", "unified-verdicts"),
-      "q118_semantic_dedup_2l"     -> Set("sem2l-asn", "sem2l-dedup"),
-      // the sweep re-reads the shared 2L assignment
-      "q169_semantic_sweep"        -> Set("sem2l-asn"),
-      // the semantic split is one projection over the memoized end table
-      "q176_semantic_safe_split"   -> Set("sem2l-asn", "sem2l-dedup"),
-      // the pinned face reads the release artifact + the grown corpus's
-      // memoized end table (the landed slice's sem2l instances share
-      // the kind names, so they ride the same retention)
-      "q186_semantic_split_pinned" -> Set("sem2l-asn", "sem2l-dedup",
-                                          "sem-split-pin"),
-      // the coverage audit folds the same memoized assignment
-      "q179_sample_coverage"       -> Set("sem2l-asn"),
-      // the balanced draw ranks within the same assignment's cells
-      "q180_semantic_sample"       -> Set("sem2l-asn"),
-      // raw-flag agreement matrix reads the same evidence pipelines
-      "q157_method_agreement"      -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters", "sem2l-asn",
-                                          "sem2l-dedup"),
-      // append-only IVF-PQ reads the landed routing/code index pair
-      "q158_ivfpq_incremental"     -> Set("ivfpq-asn", "ivfpq-codes"),
-      // rebuild+swap reads the landed kinds (before) and publishes /
-      // serves the full-corpus release (after); the pin kind rides to
-      // the query then drops
-      "q193_codebook_rebuild"      -> Set("ivfpq-asn", "ivfpq-codes",
-                                          "ann-release"),
-      // drift monitor + policy share the memoized landed drift baseline
-      "q160_codebook_drift"        -> Set("drift-landed-res"),
-      // the drift policy measures, decides, and serves through the
-      // same release machinery (its fixture's threshold trips, so the
-      // executed path is rebuild → released serve over the full-corpus
-      // kinds)
-      "q197_drift_policy"          -> Set("drift-landed-res",
-                                          "ivfpq-asn", "ivfpq-codes",
-                                          "ann-release"),
-      "q120_curation_funnel"       -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters", "ppl-scored",
-                                          "sem2l-asn", "sem2l-dedup",
-                                          "unified-verdicts"),
-      // round-14 second half: two-level landed assignment, DSIR landed
-      // distribution + threshold indexes
-      "q122_semantic_inc_2l"       -> Set("vec-lookup", "sem-assign-2l",
-                                          "sem-cells-2l"),
-      "q123_quality_classifier"    -> Set("qc-features"),
-      // calibration/AUC re-score through the same memoized features
-      "q154_classifier_calibration" -> Set("qc-features"),
-      // filter-agreement matrix reads the classifier features and the
-      // ppl-scored projection the funnel family already shares
-      "q161_filter_agreement"      -> Set("qc-features", "ppl-scored"),
-      // resumed-writer cell reads the landed manifest partial
-      "q162_manifest_incremental"  -> Set("shard-manifest"),
-      // quality-aware representatives read the cluster table + the
-      // classifier features
-      "q165_quality_rep"           -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters", "qc-features"),
-      // drift monitor reads the landed head distribution
-      "q163_ingest_drift"          -> Set("drift-head"),
-      "q155_classifier_auc"        -> Set("qc-features"),
-      // the classifier policy reads the landed feature/weight/rate
-      // kinds plus the full-corpus features for its retrain branch
-      "q208_classifier_policy"     -> Set("qc-features", "qc-weights",
-                                          "qc-landed-rate"),
-      "q125_dsir_incremental"      -> Set("dsir-counts", "dsir-thresholds"),
-      // the power-iteration direction: q146 builds it, q147/q149 read
-      // the same memoized d-row table (round-16)
-      "q146_power_iteration"       -> Set("power-iter"),
-      "q147_pca_project"           -> Set("power-iter"),
-      "q149_variance_explained"    -> Set("power-iter"),
-      // the deflated second direction reads v̂₁ from the same memo
-      "q152_pca_second"            -> Set("power-iter", "power-iter-2"),
-      // triangle graph = q19's memoized band tables; KMV reads the
-      // corpus shingle projection (+ its own parity-slice memos)
-      "q150_triangle_count"        -> Set("shingles", "minhash-bands"),
-      "q151_source_jaccard"        -> Set("shingles", "src-grams"),
-      // cluster representatives fold the memoized q43 cluster table
-      "q148_cluster_rep"           -> Set("shingles", "minhash-bands",
-                                          "dedup-clusters"),
-      // hybrid retrieval probes the memoized lexical index
-      "q187_hybrid_rrf"            -> Set("bm25-stats"),
-      // the served face probes the lexical index + the full-corpus
-      // IVF-PQ routed/coded tables
-      "q192_hybrid_served"         -> Set("bm25-stats", "ivfpq-asn",
-                                          "ivfpq-codes"),
-      // the incremental decontamination screen probes the landed
-      // benchmark gram set
-      "q194_decontam_incremental"  -> Set("bench-grams"),
-      // the audit runs BOTH fused pipelines over their shared indexes
-      "q195_hybrid_audit"          -> Set("bm25-stats", "ivfpq-asn",
-                                          "ivfpq-codes"),
-      // the streaming serve probes the same landed retrieval kinds per
-      // trigger (no per-trigger entries of its own)
-      "q198_streaming_serve"       -> Set("bm25-stats", "ivfpq-asn",
-                                          "ivfpq-codes"),
-      // the rotation reads the release artifacts + the grown corpora's
-      // memoized end tables (q186's entry is beside q176's above)
-      "q188_split_pin_rotation"    -> Set("sem2l-asn", "sem2l-dedup",
-                                          "sem-split-pin"),
-      // the mixture-shift report replays q129's gate over the same
-      // slices — the whole q129 kind family must survive to the suite
-      // tail
-      "q189_mixture_shift" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "landed-fp", "gate-evidence"),
-      // the mixture controller replays q184's stage-1 gate (the
-      // admitting fixture) over the index-phase q184 landed family
-      "q210_mixture_rebalance" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp",
-        "gate-evidence"),
-      // the streaming frozen gate runs the q129 six-stage gate per
-      // micro-batch over the same %5 landed family (its per-trigger
-      // batch memos are released by the stream itself)
-      "q190_streaming_gate" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "landed-fp"),
-      // the live-absorbing stream reads q184's landed family (its
-      // grown-generation entries are seeded in-run and released by the
-      // stream / the post-query sweep)
-      "q191_streaming_absorb" -> Set("shingles", "minhash-bands",
-        "vec-lookup", "sem-assign-2l", "sem-cells-2l", "landed-sh-set", "sh-sizes",
-        "dsir-counts", "dsir-thresholds", "dsir-doc-buckets", "landed-fp"))
 
     // Self-attribution clocks (the q18/q26/q27 driver-spike disputes
     // each burned a round on "regression or contended box?" — these
@@ -358,25 +90,17 @@ object Bench {
       }
     })
 
-    // Spark jobs and stages each query submitted (jobs/stages columns),
-    // counted by the threads it ran on, streams included — the
-    // per-trigger cost of a streaming row is its stage count (r22).
-    val jobCounts = new graft.util.JobCounts(spark)
-
     final case class Sample(sec: Double, gcMs: Long, jitMs: Long, cgN: Long,
         sqTrigMs: Long = 0L, sqPlanMs: Long = 0L, sqBatchMs: Long = 0L,
         sqN: Long = 0L, jobs: Long = 0L, stages: Long = 0L)
 
-    // keys live at the end of the index phase — the only entries
-    // cross-query reuse legitimately flows through (every shared kind
-    // is prebuilt there). Keys CREATED mid-run are query-private even
-    // when their kind name is shared: q184's absorb seeds corpus-scale
-    // "shingles"/"minhash-bands" entries keyed to its own per-run
-    // localCheckpoint frame, which no later query can hit — kind-level
-    // retention alone pinned them for half the suite (review finding).
-    var indexKeys: Set[String] = Set.empty
+    // Spark jobs and stages each query submitted (jobs/stages columns),
+    // counted by the threads it ran on, streams included — the
+    // per-trigger cost of a streaming row is its stage count (r22).
+    // Made at the first query: the index phase counts its own regions.
+    lazy val jobCounts = new graft.util.JobCounts(spark)
 
-    def exec(name: String, retainKinds: Set[String]): Sample = {
+    def exec(name: String, retain: Set[String]): Sample = {
       val (gc0, jit0, cg0) = (gcMs(), jitMs(), cgN())
       val (st0, sp0, sb0, sn0) =
         (sqTrig.get(), sqPlan.get(), sqBatch.get(), sqN.get())
@@ -387,6 +111,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         jobCounts.take(name) // the failed pass's counts go with it
+        graft.util.CacheRegistry.takeReads(name)
         // attrib sentinel matches the -1.0 sec sentinel: a failed query
         // reads [-1,-1,-1,…], never confusable with a real zero-GC/
         // zero-JIT sample (review finding)
@@ -395,16 +120,14 @@ object Bench {
       val t = (System.nanoTime() - t0) / 1e9
       val (gc1, jit1, cg1) = (gcMs(), jitMs(), cgN())
       val (jobs, stages) = jobCounts.take(name)
+      graft.util.CacheRegistry.takeReads(name)
       val sample = Sample(t, gc1 - gc0, jit1 - jit0, cg1 - cg0,
         sqTrig.get() - st0, sqPlan.get() - sp0, sqBatch.get() - sb0,
         sqN.get() - sn0, jobs, stages)
-      // drop in-run-created keys too (dead by construction once their
-      // query finished) — but only when the index phase ran, so a
-      // filtered local run without it keeps its ad-hoc cross-query hits
-      val released = graft.util.CacheRegistry.releaseIf(k =>
-        !retainKinds.contains(k.takeWhile(_ != ':')) ||
-          (indexKeys.nonEmpty && !indexKeys.contains(k)))
-      if (retainKinds.isEmpty) spark.sharedState.cacheManager.clearCache()
+      // everything else goes: in-run-created keys are dead once their
+      // query finished, and an index entry once its last reader ran
+      graft.util.CacheRegistry.releaseIf(k => !retain.contains(k))
+      if (retain.isEmpty) spark.sharedState.cacheManager.clearCache()
       // ProfileQ26 measured the released blocks' GC debt landing on
       // whatever query ran NEXT (q26 in suite context 2.1 s vs 0.37 s
       // after an explicit collection — same session, same plan).
@@ -415,7 +138,6 @@ object Bench {
       // concurrent cycles then steal worker cores from the successor
       // WITHOUT billing gc_ms (STW-only MXBean) — q10_per read 5.3 s
       // vs its 0.89 floor with attrib [0, 973, 17] right after q109.
-      val _ = released
       System.gc()
       sample
     }
@@ -525,16 +247,15 @@ object Bench {
       if (restoreDir.isEmpty) 0.0 else (System.nanoTime() - tRes0) / 1e9
 
     val tIdx0 = System.nanoTime()
-    // per-entry seconds (r14 verdict #7): itemized into bench_out.json
-    // so a loaded-box index-phase spike self-attributes like queries do
-    var indexDetail: Seq[(String, Double)] = Seq.empty
+    // the entries some query in this run reads (all of them unless a
+    // local-iteration filter is set), itemized into bench_out.json so a
+    // loaded-box index-phase spike self-attributes like queries do
+    val decls = SparkEntry.indexDecls.filter(_.readers.exists(order.contains))
+    var indexDetail: Seq[SparkEntry.IndexBuild] = Seq.empty
     val indexSec =
-      // under a local-iteration filter, only pay the build when some
-      // selected query actually reads an indexed kind
-      if (!order.exists(cacheKindsUsed.contains)) 0.0
+      if (decls.isEmpty) 0.0
       else try {
-        indexDetail = SparkEntry.buildIndexesTimed(spark, sfDir)
-        indexKeys = graft.util.CacheRegistry.entries.keySet
+        indexDetail = SparkEntry.buildIndexesTimed(spark, sfDir, decls)
         (System.nanoTime() - tIdx0) / 1e9
       }
       catch { case e: Throwable =>
@@ -565,12 +286,16 @@ object Bench {
     // no cross-pass result reuse, only a warmer JVM.
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(2))
+    // after query i, keep exactly the keys of the entries a later query
+    // in this run reads; between its passes, its own entries' keys too
+    val keysOf = indexDetail.map(b => b.name -> b.keys).toMap
+    def keysReadBy(qs: Seq[String]): Set[String] =
+      decls.filter(_.readers.exists(qs.contains))
+        .flatMap(d => keysOf.getOrElse(d.name, Set.empty)).toSet
     val resultsAll: Seq[(String, Seq[Sample])] =
       order.zipWithIndex.map { case (n, i) =>
-        // retain exactly the kinds some LATER query in this run consumes
-        val retain = order.drop(i + 1)
-          .flatMap(q => cacheKindsUsed.getOrElse(q, Set.empty)).toSet
-        n -> (1 to passes).map(_ => exec(n, retain))
+        val (own, later) = (keysReadBy(order.drop(i)), keysReadBy(order.drop(i + 1)))
+        n -> (1 to passes).map(p => exec(n, if (p < passes) own else later))
       }
     val results = resultsAll.map { case (n, samples) =>
       val ok = samples.filter(_.sec >= 0)
@@ -654,7 +379,11 @@ object Bench {
         s""","passes":$passes,"queries_are":"min-of-passes"""" +
         s""","query_names":$namesArray}"""
     val idxDetailJson = indexDetail
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .map(b => "\"" + b.name + "\":" + fmt(b.sec))
+      .mkString("{", ",", "}")
+    // per-entry [jobs, stages], same key order as "index_detail"
+    val idxAttribJson = indexDetail
+      .map(b => "\"" + b.name + "\":[" + b.jobs + "," + b.stages + "]")
       .mkString("{", ",", "}")
     // per-pass values (full artifact only): pass 1 is the legacy
     // single-pass methodology, kept so the old numbers stay readable
@@ -668,7 +397,7 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","index":${fmt(idxR)}""" +
         restoreJson +
-        s""","index_detail":$idxDetailJson""" +
+        s""","index_detail":$idxDetailJson,"index_attrib":$idxAttribJson""" +
         s""","queries":$qsFull""" +
         s""","passes":$passes,"queries_are":"min-of-passes"$passJson""" +
         s""","attrib":$attrib,"attrib_cols":$attribCols,"sf":"$sfDir"}"""

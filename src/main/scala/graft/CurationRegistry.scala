@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   * the funnel report. */
 trait CurationRegistry extends EntryHelpers {
 
+  /** The pseudo-benchmark slice the decontamination faces screen
+    * against: doc_id % 97 == 0. */
+  private def benchDocs(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 97 === 0)
+
   protected def curationQueries: Map[String, (SparkSession, String) => DataFrame] = {
     import graft.dedup.Dedup
     import graft.functions.TextFunctions
@@ -81,8 +86,8 @@ trait CurationRegistry extends EntryHelpers {
       "q162_manifest_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.shardManifestIncrement(
-            docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2),
-            docs.filter(pmod(col("doc_id"), lit(4L)) === 2),
+            landed4(docs),
+            batch4(docs),
             maxTokens = 2048, nShards = 8)
           .orderBy("shard")
       }),
@@ -100,8 +105,8 @@ trait CurationRegistry extends EntryHelpers {
       "q163_ingest_drift" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.ingestDriftReport(
-          docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(4L)) === 2))
+          landed4(docs),
+          batch4(docs))
       }),
 
       // Gopher-style repetition filters: duplicate-word fraction and the
@@ -115,8 +120,7 @@ trait CurationRegistry extends EntryHelpers {
       "q42_decontaminate" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.contamination(
-            docs.filter(col("doc_id") % 97 =!= 0),
-            docs.filter(col("doc_id") % 97 === 0), n = 3)
+            docs.filter(col("doc_id") % 97 =!= 0), benchDocs(docs), n = 3)
           .orderBy("doc_id")
       }),
 
@@ -132,9 +136,7 @@ trait CurationRegistry extends EntryHelpers {
       "q194_decontam_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.contaminationIncrement(
-            docs.filter(col("doc_id") % 97 === 0),
-            docs.filter(pmod(col("doc_id"), lit(5L)) === 2 &&
-              col("doc_id") % 97 =!= 0), n = 3)
+            benchDocs(docs), batch5(docs).filter(col("doc_id") % 97 =!= 0), n = 3)
           .orderBy("doc_id")
       }),
 
@@ -169,8 +171,8 @@ trait CurationRegistry extends EntryHelpers {
       "q182_xsource_lm_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.crossSourceLmIncrement(
-            docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2),
-            docs.filter(pmod(col("doc_id"), lit(4L)) === 2))
+            landed4(docs),
+            batch4(docs))
           .orderBy("e_src", "t_src")
       }),
 
@@ -179,10 +181,8 @@ trait CurationRegistry extends EntryHelpers {
       // orphan vectors both exist deterministically.
       "q172_embedding_coverage" -> ((s, dir) =>
         graft.curation.Curation.embeddingCoverage(
-            table(s, dir, "documents")
-              .filter(pmod(col("doc_id"), lit(7L)) =!= 3),
-            table(s, dir, "embeddings")
-              .filter(pmod(col("vec_id"), lit(11L)) =!= 5))
+            modIsNot(table(s, dir, "documents"), 7, 3),
+            modIsNot(table(s, dir, "embeddings"), 11, 5))
           .orderBy("source")),
 
       // Corpus release diff: old = corpus minus the %17 slice with the
@@ -427,10 +427,10 @@ trait CurationRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val qd = docs.filter(pmod(col("doc_id"), lit(100L)) === 0)
+        val qd = modIs(docs, 100, 0)
           .select("doc_id", "text")
           .as[(Long, String)].collect().sortBy(_._1)
-        val qe = emb.filter(pmod(col("vec_id"), lit(100L)) === 0)
+        val qe = modIs(emb, 100, 0)
           .select("vec_id", "embedding")
           .as[(Long, Seq[Float])].collect().toMap
         val records = qd.toSeq.flatMap { case (id, text) =>
@@ -648,9 +648,9 @@ trait CurationRegistry extends EntryHelpers {
         import graft.curation.Curation
         val docs = table(s, dir, "documents")
         val pa = Curation.mixturePartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = Curation.mixturePartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         Curation.mixtureFromPartials(pa.union(pb)).orderBy("source")
       }),
 
@@ -748,8 +748,8 @@ trait CurationRegistry extends EntryHelpers {
       "q125_dsir_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.dsirScoreIncrement(
-          docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(4L)) === 2), "src0")
+          landed4(docs),
+          batch4(docs), "src0")
           .orderBy("doc_id")
       }),
 
@@ -769,8 +769,8 @@ trait CurationRegistry extends EntryHelpers {
       "q131_ppl_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.perplexityFlagIncrement(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2))
+          landed5(docs),
+          batch5(docs))
           .orderBy("doc_id")
       }),
 
@@ -781,9 +781,9 @@ trait CurationRegistry extends EntryHelpers {
       "q137_tfidf_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.curation.Curation.retrievalPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = graft.curation.Curation.retrievalPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         graft.curation.Curation.tfidfTopTermsFromPartials(
           pa.unionByName(pb), docs, 5)
           .withColumnRenamed("rank", "rnk")
@@ -798,9 +798,9 @@ trait CurationRegistry extends EntryHelpers {
       "q136_cms_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.curation.Curation.cmsPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = graft.curation.Curation.cmsPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         graft.curation.Curation.countMinTopKFromPartials(
           pa.unionByName(pb), docs, 25)
           .orderBy(desc("freq"), asc("token"))
@@ -814,9 +814,9 @@ trait CurationRegistry extends EntryHelpers {
       "q135_lm_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.curation.Curation.lmPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = graft.curation.Curation.lmPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         graft.curation.Curation.bigramLogProbFromPartials(
           pa.unionByName(pb), docs)
           .orderBy("doc_id")
@@ -832,8 +832,8 @@ trait CurationRegistry extends EntryHelpers {
       "q138_qc_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.qualityClassifierFromParts(
-          Seq(docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
-            docs.filter(pmod(col("doc_id"), lit(2L)) === 1)), "src0")
+          Seq(half(docs, 0),
+            half(docs, 1)), "src0")
           .orderBy("doc_id")
       }),
 
@@ -844,8 +844,8 @@ trait CurationRegistry extends EntryHelpers {
       "q134_bpe_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Bpe.bpeSegmentStatsIncrement(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2), steps = 8)
+          landed5(docs),
+          batch5(docs), steps = 8)
           .orderBy("source")
       }),
 
@@ -862,8 +862,8 @@ trait CurationRegistry extends EntryHelpers {
       "q207_tokenizer_policy" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Bpe.tokenizerRebuildPolicy(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2),
+          landed5(docs),
+          batch5(docs),
           docs, "tok-rel-1", maxDriftE6 = 0L, steps = 8)
           .orderBy("source")
       }),
@@ -879,8 +879,8 @@ trait CurationRegistry extends EntryHelpers {
       "q208_classifier_policy" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.curation.Curation.classifierRebuildPolicy(
-          docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(4L)) === 2),
+          landed4(docs),
+          batch4(docs),
           docs, "src0", "qc-rel-1", maxDriftPpm = 10000L)
           .orderBy("doc_id")
       }),
@@ -951,6 +951,95 @@ trait CurationRegistry extends EntryHelpers {
 
   protected lazy val hybridServedOracle: String =
     hybridOracle(servedAnnrCtes())
+
+  /** The curation family's index-phase entries: the scored LM
+    * projection, the landed DSIR/LM/classifier/manifest/drift partials
+    * the incremental faces fold batches into, the BM25 statistics and
+    * the BPE training. */
+  protected def curationIndexes: Seq[IndexDecl] = {
+    import graft.curation.{Bpe, Curation}
+    Seq(
+      IndexDecl("ppl-scored", "q120_curation_funnel", "q161_filter_agreement",
+        "q89_perplexity_filter", "q91_perplexity_sketch_cut")((s, dir) =>
+        Curation.perplexityScored(documents(s, dir))),
+      // the gate's DSIR indexes on the %5 fixture
+      IndexDecl("q129-dsir-counts", gateReaders: _*)((s, dir) =>
+        Curation.landedDsirCounts(landed5(documents(s, dir)), "src0")),
+      IndexDecl("q129-dsir-thresholds", gateReaders: _*)((s, dir) =>
+        Curation.landedDsirThresholds(landed5(documents(s, dir)), "src0")),
+      IndexDecl("q131-ppl-lm", "q131_ppl_incremental", "q132_ingest_gate_full")((s, dir) =>
+        Curation.landedBigramLm(landed5(documents(s, dir)))),
+      IndexDecl("q131-ppl-thresholds", "q131_ppl_incremental",
+        "q132_ingest_gate_full")((s, dir) =>
+        Curation.landedPplThresholds(landed5(documents(s, dir)))),
+      // the absorb fixture's DSIR side, with the per-doc histogram that
+      // makes the threshold absorbable
+      IndexDecl("q184-dsir-counts", "q184_absorb_gate",
+        "q191_streaming_absorb", "q196_absorb_serve", "q200_churn_gate",
+        "q201_streaming_churn", "q202_churn_serve", "q210_mixture_rebalance",
+        "q211_streaming_resume", "q214_serve_during_churn")((s, dir) =>
+        Curation.landedDsirCounts(absorbLanded(documents(s, dir)), "src0")),
+      IndexDecl("q184-dsir-thresholds", "q184_absorb_gate",
+        "q191_streaming_absorb", "q196_absorb_serve", "q200_churn_gate",
+        "q201_streaming_churn", "q202_churn_serve", "q210_mixture_rebalance",
+        "q211_streaming_resume", "q214_serve_during_churn")((s, dir) =>
+        Curation.landedDsirThresholds(absorbLanded(documents(s, dir)), "src0",
+          keepBp = 5000)),
+      IndexDecl("q184-dsir-doc-buckets", absorbReaders: _*)((s, dir) =>
+        Curation.landedDsirDocBuckets(absorbLanded(documents(s, dir)), "src0")),
+      IndexDecl("q196-bm25-stats", "q184_absorb_gate",
+        "q191_streaming_absorb", "q196_absorb_serve", "q199_retract_gate",
+        "q200_churn_gate", "q201_streaming_churn", "q202_churn_serve",
+        "q211_streaming_resume", "q213_retention_ageout",
+        "q214_serve_during_churn")((s, dir) =>
+        Curation.bm25Stats(absorbLanded(documents(s, dir)))),
+      IndexDecl("q205-dsir-doc-buckets", migrateReaders: _*)((s, dir) =>
+        Curation.landedDsirDocBuckets(snapshot(documents(s, dir), migrateOldRes),
+          "src0")),
+      IndexDecl("q205-bm25-stats", migrateReaders: _*)((s, dir) =>
+        Curation.bm25Stats(snapshot(documents(s, dir), migrateOldRes))),
+      IndexDecl("q123-qc-features", "q123_quality_classifier",
+        "q154_classifier_calibration", "q155_classifier_auc",
+        "q161_filter_agreement", "q165_quality_rep")((s, dir) =>
+        Curation.qcFeatures(documents(s, dir), "src0")),
+      // landed partials on the %4 fixture
+      IndexDecl("q162-shard-manifest", "q162_manifest_incremental")((s, dir) =>
+        Curation.landedShardManifest(landed4(documents(s, dir)), 8)),
+      IndexDecl("q182-src-bigrams", "q182_xsource_lm_incremental")((s, dir) =>
+        Curation.landedSourceBigrams(landed4(documents(s, dir)))),
+      IndexDecl("q163-drift-head", "q163_ingest_drift")((s, dir) =>
+        Curation.landedDriftHead(landed4(documents(s, dir)))),
+      IndexDecl("q125-dsir-counts", "q125_dsir_incremental")((s, dir) =>
+        Curation.landedDsirCounts(landed4(documents(s, dir)), "src0")),
+      IndexDecl("q125-dsir-thresholds", "q125_dsir_incremental")((s, dir) =>
+        Curation.landedDsirThresholds(landed4(documents(s, dir)), "src0")),
+      // the frozen classifier (its build reads the landed feature
+      // table) and the pass-rate baseline its drift measure reads
+      IndexDecl("q208-qc-weights", "q208_classifier_policy")((s, dir) =>
+        Curation.landedQcWeights(landed4(documents(s, dir)), "src0")),
+      IndexDecl("q208-qc-landed-rate", "q208_classifier_policy")((s, dir) =>
+        Curation.landedQcPassRate(landed4(documents(s, dir)), "src0")),
+      // the corpus BM25 statistics: computed once per corpus
+      IndexDecl("bm25-stats", "q187_hybrid_rrf", "q192_hybrid_served",
+        "q195_hybrid_audit", "q198_streaming_serve")((s, dir) =>
+        Curation.bm25Stats(documents(s, dir))),
+      // the decontamination screen's benchmark gram set
+      IndexDecl("q194-bench-grams", "q194_decontam_incremental")((s, dir) =>
+        Curation.landedBenchGrams(benchDocs(documents(s, dir)))),
+      // the full-corpus BPE training (its build reads the word
+      // dictionary): q113 emits the merges, q115 applies them
+      IndexDecl("bpe-train", "q113_bpe_merges", "q115_bpe_segment_stats",
+        "q207_tokenizer_policy")((s, dir) =>
+        Bpe.bpeMerges(documents(s, dir))),
+      // the landed merge table the incremental and frozen faces read
+      IndexDecl("q134-bpe-landed-merges", "q134_bpe_incremental",
+        "q207_tokenizer_policy")((s, dir) =>
+        Bpe.landedBpeMerges(landed5(documents(s, dir)))),
+      // the landed corpus segmented by its own merges: the policy's
+      // fertility baseline
+      IndexDecl("q207-bpe-landed-fert", "q207_tokenizer_policy")((s, dir) =>
+        Bpe.landedBpeFertility(landed5(documents(s, dir)))))
+  }
 
   protected def curationOracles: Map[String, String] = Map(
 

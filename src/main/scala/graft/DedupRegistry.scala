@@ -99,9 +99,9 @@ trait DedupRegistry extends EntryHelpers {
       "q151_source_jaccard" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.dedup.Dedup.sourceKmvPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = graft.dedup.Dedup.sourceKmvPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         graft.dedup.Dedup.sourceJaccardReport(pa.unionByName(pb), docs)
           .orderBy("src_a", "src_b")
       }),
@@ -189,8 +189,8 @@ trait DedupRegistry extends EntryHelpers {
       "q83_incremental_dedup" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.dedup.Dedup.exactIncrement(
-            docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0),
-            docs.filter(pmod(col("doc_id"), lit(3L)) === 0))
+            modIsNot(docs, 3, 0),
+            modIs(docs, 3, 0))
           .orderBy("fp")
       }),
 
@@ -227,8 +227,8 @@ trait DedupRegistry extends EntryHelpers {
       "q88_bloom_incremental_dedup" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.dedup.Dedup.exactIncrementBloom(
-            docs.filter(pmod(col("doc_id"), lit(3L)) =!= 1),
-            docs.filter(pmod(col("doc_id"), lit(3L)) === 1))
+            modIsNot(docs, 3, 1),
+            modIs(docs, 3, 1))
           .orderBy("fp")
       }),
 
@@ -247,8 +247,8 @@ trait DedupRegistry extends EntryHelpers {
       "q99_lsh_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.dedup.Dedup.lshIncrement(
-            docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-            docs.filter(pmod(col("doc_id"), lit(5L)) === 2))
+            landed5(docs),
+            batch5(docs))
           .orderBy("doc_id")
       }),
 
@@ -317,8 +317,8 @@ trait DedupRegistry extends EntryHelpers {
       "q111_substring_incremental" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         graft.dedup.Dedup.substringDedupIncrement(
-          docs.filter(pmod(col("doc_id"), lit(4L)) =!= 1),
-          docs.filter(pmod(col("doc_id"), lit(4L)) === 1), k = 8)
+          landed4b(docs),
+          batch4b(docs), k = 8)
           .orderBy("doc_id")
       }),
 
@@ -383,8 +383,8 @@ trait DedupRegistry extends EntryHelpers {
       "q128_landed_containment" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         Dedup.landedContainmentScreen(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2))
+          landed5(docs),
+          batch5(docs))
           .orderBy("doc_id")
       }),
 
@@ -396,10 +396,10 @@ trait DedupRegistry extends EntryHelpers {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
         Dedup.ingestGate(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2), "src0")
+          landed5(docs),
+          batch5(docs),
+          landed5(emb),
+          batch5(emb), "src0")
           .orderBy("doc_id")
       }),
 
@@ -411,10 +411,10 @@ trait DedupRegistry extends EntryHelpers {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
         Dedup.ingestGateFull(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2), "src0")
+          landed5(docs),
+          batch5(docs),
+          landed5(emb),
+          batch5(emb), "src0")
           .orderBy("doc_id")
       }),
 
@@ -439,18 +439,12 @@ trait DedupRegistry extends EntryHelpers {
         // semantic codebook strides (≡ 8 mod 25) while sharing sources
         // with the landed slice; keepBp = 5000 puts the landed DSIR
         // bar where stage 1 genuinely admits docs at contract scale.
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val b2 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(12L, 37L, 62L, 87L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val be2 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(12L, 37L, 62L, 87L))
+        val d0 = absorbLanded(docs)
+        val b1 = absorbBatch1(docs)
+        val b2 = absorbBatch2(docs)
+        val e0 = absorbLanded(emb)
+        val be1 = absorbBatch1(emb)
+        val be2 = absorbBatch2(emb)
         // checkpointed admit ids: the grown landed frames' plans stay
         // batch-sized (a LogicalRDD leaf), and absorb + gate 2 see the
         // SAME frame — one fingerprint, one set of seeded keys
@@ -479,10 +473,10 @@ trait DedupRegistry extends EntryHelpers {
         // memoizeEvidence = true: this gates the SAME slices as q129,
         // so the gate-evidence memo is shared, not leaked
         graft.curation.Curation.mixtureShiftReport(
-          docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-          docs.filter(pmod(col("doc_id"), lit(5L)) === 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2), "src0",
+          landed5(docs),
+          batch5(docs),
+          landed5(emb),
+          batch5(emb), "src0",
           memoizeEvidence = true)
           .orderBy("source")
       }),
@@ -501,14 +495,11 @@ trait DedupRegistry extends EntryHelpers {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
         graft.curation.Curation.mixtureRebalance(
-          docs.filter(!pmod(col("doc_id"), lit(100L))
-            .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L)),
-          docs.filter(pmod(col("doc_id"), lit(100L))
-            .isin(2L, 22L, 47L, 67L)),
-          emb.filter(!pmod(col("vec_id"), lit(100L))
-            .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L)),
-          emb.filter(pmod(col("vec_id"), lit(100L))
-            .isin(2L, 22L, 47L, 67L)), "src0", keepBp = 5000)
+          absorbLanded(docs),
+          absorbBatch1(docs),
+          absorbLanded(emb),
+          absorbBatch1(emb), "src0", keepBp = 5000,
+          memoizeEvidence = true)
           .orderBy("doc_id")
       }),
 
@@ -531,12 +522,12 @@ trait DedupRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val landedD = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2)
-        val landedE = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2)
-        val ds = docs.filter(pmod(col("doc_id"), lit(5L)) === 2)
+        val landedD = landed5(docs)
+        val landedE = landed5(emb)
+        val ds = batch5(docs)
           .select("doc_id", "source", "text")
           .as[(Long, String, String)].collect().sortBy(_._1)
-        val em = emb.filter(pmod(col("vec_id"), lit(5L)) === 2)
+        val em = batch5(emb)
           .select("vec_id", "embedding")
           .as[(Long, Seq[Float])].collect().toMap
         // inner doc↔embedding zip: an ingest record carries both (the
@@ -585,15 +576,13 @@ trait DedupRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
+        val d0 = absorbLanded(docs)
+        val e0 = absorbLanded(emb)
         def recsOf(res: Seq[Long]): Seq[(Long, String, String, Seq[Float])] = {
-          val ds = docs.filter(pmod(col("doc_id"), lit(100L)).isin(res: _*))
+          val ds = modIn(docs, 100, res)
             .select("doc_id", "source", "text")
             .as[(Long, String, String)].collect().sortBy(_._1)
-          val em = emb.filter(pmod(col("vec_id"), lit(100L)).isin(res: _*))
+          val em = modIn(emb, 100, res)
             .select("vec_id", "embedding")
             .as[(Long, Seq[Float])].collect().toMap
           ds.toSeq.flatMap { case (id, src, text) =>
@@ -613,7 +602,7 @@ trait DedupRegistry extends EntryHelpers {
           ()
         }
         try {
-          Seq(Seq(2L, 22L, 47L, 67L), Seq(12L, 37L, 62L, 87L))
+          Seq(absorbRes1, absorbRes2)
             .foreach { res =>
               input.addData(recsOf(res))
               q.processAllAvailable()
@@ -637,14 +626,10 @@ trait DedupRegistry extends EntryHelpers {
       "q196_absorb_serve" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
+        val d0 = absorbLanded(docs)
+        val b1 = absorbBatch1(docs)
+        val e0 = absorbLanded(emb)
+        val be1 = absorbBatch1(emb)
         val adm = Dedup.ingestGate(d0, b1, e0, be1, "src0", keepBp = 5000)
           .filter(col("gate") === "admit").select("doc_id")
           .localCheckpoint(true)
@@ -673,16 +658,11 @@ trait DedupRegistry extends EntryHelpers {
       "q199_retract_gate" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val landedD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val landedE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val delIds = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(14L, 39L)).select("doc_id")
+        val landedD = absorbLanded(docs)
+        val landedE = absorbLanded(emb)
+        val b1 = absorbBatch1(docs)
+        val be1 = absorbBatch1(emb)
+        val delIds = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
         val keptD = landedD.join(delIds, Seq("doc_id"), "left_anti")
         val keptE = landedE.join(
           delIds.select(col("doc_id").as("vec_id")), Seq("vec_id"),
@@ -705,18 +685,12 @@ trait DedupRegistry extends EntryHelpers {
       "q200_churn_gate" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val b2 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(12L, 37L, 62L, 87L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val be2 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(12L, 37L, 62L, 87L))
+        val d0 = absorbLanded(docs)
+        val b1 = absorbBatch1(docs)
+        val b2 = absorbBatch2(docs)
+        val e0 = absorbLanded(emb)
+        val be1 = absorbBatch1(emb)
+        val be2 = absorbBatch2(emb)
         val adm = Dedup.ingestGate(d0, b1, e0, be1, "src0", keepBp = 5000)
           .filter(col("gate") === "admit").select("doc_id")
           .localCheckpoint(true)
@@ -727,8 +701,7 @@ trait DedupRegistry extends EntryHelpers {
         val landed2e = e0.unionByName(admEmb)
         Dedup.absorbBatch(d0, admDocs, e0, admEmb, landed2d, landed2e,
           "src0", keepBp = 5000)
-        val delIds = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(14L, 39L)).select("doc_id")
+        val delIds = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
         val keptD = landed2d.join(delIds, Seq("doc_id"), "left_anti")
         val keptE = landed2e.join(
           delIds.select(col("doc_id").as("vec_id")), Seq("vec_id"),
@@ -752,23 +725,20 @@ trait DedupRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
+        val d0 = absorbLanded(docs)
+        val e0 = absorbLanded(emb)
         def addsOf(res: Seq[Long])
             : Seq[(String, Long, String, String, Seq[Float])] = {
-          val ds = docs.filter(pmod(col("doc_id"), lit(100L)).isin(res: _*))
+          val ds = modIn(docs, 100, res)
             .select("doc_id", "source", "text")
             .as[(Long, String, String)].collect().sortBy(_._1)
-          val em = emb.filter(pmod(col("vec_id"), lit(100L)).isin(res: _*))
+          val em = modIn(emb, 100, res)
             .select("vec_id", "embedding")
             .as[(Long, Seq[Float])].collect().toMap
           ds.toSeq.flatMap { case (id, src, text) =>
             em.get(id).map(e => ("add", id, src, text, e)) }
         }
-        val dels = docs.filter(pmod(col("doc_id"), lit(100L))
-            .isin(14L, 39L)).select("doc_id")
+        val dels = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
           .as[Long].collect().sorted.toSeq
           .map(id => ("delete", id, "", "", Seq.empty[Float]))
         val input = org.apache.spark.sql.execution.streaming.runtime
@@ -785,8 +755,8 @@ trait DedupRegistry extends EntryHelpers {
           ()
         }
         try {
-          Seq(addsOf(Seq(2L, 22L, 47L, 67L)),
-              dels ++ addsOf(Seq(12L, 37L, 62L, 87L)))
+          Seq(addsOf(absorbRes1),
+              dels ++ addsOf(absorbRes2))
             .foreach { recs =>
               input.addData(recs)
               q.processAllAvailable()
@@ -812,23 +782,20 @@ trait DedupRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
+        val d0 = absorbLanded(docs)
+        val e0 = absorbLanded(emb)
         def addsOf(res: Seq[Long])
             : Seq[(String, Long, String, String, Seq[Float])] = {
-          val ds = docs.filter(pmod(col("doc_id"), lit(100L)).isin(res: _*))
+          val ds = modIn(docs, 100, res)
             .select("doc_id", "source", "text")
             .as[(Long, String, String)].collect().sortBy(_._1)
-          val em = emb.filter(pmod(col("vec_id"), lit(100L)).isin(res: _*))
+          val em = modIn(emb, 100, res)
             .select("vec_id", "embedding")
             .as[(Long, Seq[Float])].collect().toMap
           ds.toSeq.flatMap { case (id, src, text) =>
             em.get(id).map(e => ("add", id, src, text, e)) }
         }
-        val dels = docs.filter(pmod(col("doc_id"), lit(100L))
-            .isin(14L, 39L)).select("doc_id")
+        val dels = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
           .as[Long].collect().sorted.toSeq
           .map(id => ("delete", id, "", "", Seq.empty[Float]))
         val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -855,13 +822,13 @@ trait DedupRegistry extends EntryHelpers {
         val journal = java.nio.file.Files
           .createTempDirectory("q211-journal").toString
         // trigger 1 (journaled), then the kill
-        runTrigger(d0, e0, Some(journal), addsOf(Seq(2L, 22L, 47L, 67L)))
+        runTrigger(d0, e0, Some(journal), addsOf(absorbRes1))
         // restart: reconstruct the grown corpus from gen 0 + journal
         val (recD, recE) = graft.streaming.IngestGateStream.replayJournal(
           d0, e0, journal, "src0", keepBp = 5000)
         // the resumed stream (its own journal epoch-space), trigger 2
         runTrigger(recD, recE, None,
-          dels ++ addsOf(Seq(12L, 37L, 62L, 87L)))
+          dels ++ addsOf(absorbRes2))
         got.toSeq.toDF("doc_id", "gate").orderBy("doc_id")
       }),
 
@@ -881,14 +848,10 @@ trait DedupRegistry extends EntryHelpers {
       "q213_retention_ageout" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val landedD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val landedE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
+        val landedD = absorbLanded(docs)
+        val landedE = absorbLanded(emb)
+        val b1 = absorbBatch1(docs)
+        val be1 = absorbBatch1(emb)
         val (action, span, keptD, keptE) = Dedup.retentionAgeOut(
           landedD, landedE, "src14", horizonIds = 200L, "src0",
           keepBp = 5000)
@@ -909,14 +872,10 @@ trait DedupRegistry extends EntryHelpers {
       "q202_churn_serve" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val b1 = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-        val be1 = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L))
+        val d0 = absorbLanded(docs)
+        val b1 = absorbBatch1(docs)
+        val e0 = absorbLanded(emb)
+        val be1 = absorbBatch1(emb)
         val adm = Dedup.ingestGate(d0, b1, e0, be1, "src0", keepBp = 5000)
           .filter(col("gate") === "admit").select("doc_id")
           .localCheckpoint(true)
@@ -927,8 +886,7 @@ trait DedupRegistry extends EntryHelpers {
         val landed2e = e0.unionByName(admEmb)
         Dedup.absorbBatch(d0, admDocs, e0, admEmb, landed2d, landed2e,
           "src0", keepBp = 5000)
-        val delIds = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(14L, 39L)).select("doc_id")
+        val delIds = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
         val keptD = landed2d.join(delIds, Seq("doc_id"), "left_anti")
         val keptE = landed2e.join(
           delIds.select(col("doc_id").as("vec_id")), Seq("vec_id"),
@@ -955,27 +913,22 @@ trait DedupRegistry extends EntryHelpers {
         import s.implicits._
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val allRes = Seq(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L)
-        val d0 = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(allRes: _*))
-        val e0 = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(allRes: _*))
+        val d0 = absorbLanded(docs)
+        val e0 = absorbLanded(emb)
         type Rec = (String, Long, String, String, Seq[Float])
         def embOf(res: Seq[Long]): Map[Long, Seq[Float]] =
-          emb.filter(pmod(col("vec_id"), lit(100L)).isin(res: _*))
+          modIn(emb, 100, res)
             .select("vec_id", "embedding")
             .as[(Long, Seq[Float])].collect().toMap
         val adds: Seq[Rec] = {
-          val em = embOf(Seq(2L, 22L, 47L, 67L))
-          docs.filter(pmod(col("doc_id"), lit(100L))
-              .isin(2L, 22L, 47L, 67L))
+          val em = embOf(absorbRes1)
+          absorbBatch1(docs)
             .select("doc_id", "source", "text")
             .as[(Long, String, String)].collect().sortBy(_._1).toSeq
             .flatMap { case (id, src, text) =>
               em.get(id).map(e => ("add", id, src, text, e)) }
         }
-        val dels: Seq[Rec] = docs.filter(pmod(col("doc_id"), lit(100L))
-            .isin(14L, 39L)).select("doc_id")
+        val dels: Seq[Rec] = modIn(docs, 100, Seq(14L, 39L)).select("doc_id")
           .as[Long].collect().sorted.toSeq
           .map(id => ("delete", id, "", "", Seq.empty[Float]))
         // the serve queries: the corpus's %100==0 slice, the exact
@@ -983,10 +936,10 @@ trait DedupRegistry extends EntryHelpers {
         // (ids ≡ 0 mod 100 sit in no residue or delete set, so the
         // query set is identical at both epochs)
         val qRecords: Seq[(Long, String, Seq[Float])] = {
-          val qe = emb.filter(pmod(col("vec_id"), lit(100L)) === 0)
+          val qe = modIs(emb, 100, 0)
             .select("vec_id", "embedding")
             .as[(Long, Seq[Float])].collect().toMap
-          docs.filter(pmod(col("doc_id"), lit(100L)) === 0)
+          modIs(docs, 100, 0)
             .select("doc_id", "text")
             .as[(Long, String)].collect().sortBy(_._1).toSeq
             .flatMap { case (id, text) =>
@@ -1040,10 +993,8 @@ trait DedupRegistry extends EntryHelpers {
       // the oracle replays verbatim). Unchanged ids emit nothing.
       "q204_snapshot_diff" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
-        val oldSnap = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(5L, 30L, 55L, 80L))
-        val newSnap = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(21L, 71L))
+        val oldSnap = modNotIn(docs, 100, Seq(5L, 30L, 55L, 80L))
+        val newSnap = modNotIn(docs, 100, Seq(21L, 71L))
           .withColumn("text",
             when(pmod(col("doc_id"), lit(100L)) === 44L,
               concat(col("text"), lit(" rev2"))).otherwise(col("text")))
@@ -1063,22 +1014,14 @@ trait DedupRegistry extends EntryHelpers {
       "q205_snapshot_migrate" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val oldRes = Seq(5L, 30L, 55L, 80L, 9L, 59L)
-        val newRes = Seq(21L, 71L, 9L, 59L)
-        val oD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(oldRes: _*))
-        val oE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(oldRes: _*))
-        val nD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(newRes: _*))
-        val nE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(newRes: _*))
+        val oD = snapshot(docs, migrateOldRes)
+        val oE = snapshot(emb, migrateOldRes)
+        val nD = snapshot(docs, migrateNewRes)
+        val nE = snapshot(emb, migrateNewRes)
         val (migD, migE) = Dedup.migrateToSnapshot(oD, oE, nD, nE,
           "src0", keepBp = 5000)
-        val probe = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(9L, 59L))
-        val probeE = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(9L, 59L))
+        val probe = migrateProbe(docs)
+        val probeE = migrateProbe(emb)
         Dedup.ingestGate(migD, probe, migE, probeE, "src0", keepBp = 5000)
           .orderBy("doc_id")
       }),
@@ -1095,16 +1038,10 @@ trait DedupRegistry extends EntryHelpers {
       "q206_migrate_serve" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val oldRes = Seq(5L, 30L, 55L, 80L, 9L, 59L)
-        val newRes = Seq(21L, 71L, 9L, 59L)
-        val oD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(oldRes: _*))
-        val oE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(oldRes: _*))
-        val nD = docs.filter(!pmod(col("doc_id"), lit(100L))
-          .isin(newRes: _*))
-        val nE = emb.filter(!pmod(col("vec_id"), lit(100L))
-          .isin(newRes: _*))
+        val oD = snapshot(docs, migrateOldRes)
+        val oE = snapshot(emb, migrateOldRes)
+        val nD = snapshot(docs, migrateNewRes)
+        val nE = snapshot(emb, migrateNewRes)
         val (migD, migE) = Dedup.migrateToSnapshot(oD, oE, nD, nE,
           "src0", keepBp = 5000)
         graft.curation.Curation.hybridRrfTopKServed(migD, migE)
@@ -1124,21 +1061,15 @@ trait DedupRegistry extends EntryHelpers {
       "q209_snapshot_chain" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val emb = table(s, dir, "embeddings")
-        val oldRes = Seq(5L, 30L, 55L, 80L, 9L, 59L)
-        val s1Res = Seq(21L, 71L, 9L, 59L)
-        val s2Res = Seq(71L, 14L, 64L, 9L, 59L)
-        def dOf(res: Seq[Long]) =
-          docs.filter(!pmod(col("doc_id"), lit(100L)).isin(res: _*))
-        def eOf(res: Seq[Long]) =
-          emb.filter(!pmod(col("vec_id"), lit(100L)).isin(res: _*))
-        val (m1D, m1E) = Dedup.migrateToSnapshot(dOf(oldRes), eOf(oldRes),
-          dOf(s1Res), eOf(s1Res), "src0", keepBp = 5000)
+        val s2Res = Seq(71L, 14L, 64L) ++ migrateProbeRes
+        val (m1D, m1E) = Dedup.migrateToSnapshot(
+          snapshot(docs, migrateOldRes), snapshot(emb, migrateOldRes),
+          snapshot(docs, migrateNewRes), snapshot(emb, migrateNewRes),
+          "src0", keepBp = 5000)
         val (m2D, m2E) = Dedup.migrateToSnapshot(m1D, m1E,
-          dOf(s2Res), eOf(s2Res), "src0", keepBp = 5000)
-        val probe = docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(9L, 59L))
-        val probeE = emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(9L, 59L))
+          snapshot(docs, s2Res), snapshot(emb, s2Res), "src0", keepBp = 5000)
+        val probe = migrateProbe(docs)
+        val probeE = migrateProbe(emb)
         Dedup.ingestGate(m2D, probe, m2E, probeE, "src0", keepBp = 5000)
           .orderBy("doc_id")
       }),
@@ -1149,6 +1080,124 @@ trait DedupRegistry extends EntryHelpers {
     * (q116/q157): exact fingerprint dup ids (ex), n-gram CC cluster
     * labels (cl), and two-level semantic CC labels (scl). Interpolate
     * after WITH RECURSIVE. */
+  /** The dedup family's index-phase entries: the corpus shingle, band
+    * and cluster tables, and the landed-side indexes the incremental
+    * faces and the ingest gates probe batch over batch. */
+  protected def dedupIndexes: Seq[IndexDecl] = {
+    import graft.dedup.Dedup
+    Seq(
+      IndexDecl("shingles-capped", "q101_lsh_recall",
+        "q127_containment_pairs", "q167_threshold_sweep",
+        "q18_dedup_ngram_jaccard")((s, dir) =>
+        Dedup.cappedShingleHashes(documents(s, dir), 3, 100, "text", "doc_id")),
+      // q151's distinct (stratum, gram) set, read by both the KMV
+      // sketch and its exact twin
+      IndexDecl("src-grams", "q151_source_jaccard")((s, dir) =>
+        Dedup.sourceGramSet(documents(s, dir))),
+      IndexDecl("minhash-bands", "q100_cluster_size_histogram",
+        "q101_lsh_recall", "q108_dedup_verdicts",
+        "q116_unified_dedup_verdict", "q120_curation_funnel",
+        "q148_cluster_rep", "q150_triangle_count", "q157_method_agreement",
+        "q165_quality_rep", "q177_quality_loss", "q19_dedup_minhash_lsh",
+        "q43_dedup_clusters", "q54_leakage_safe_split",
+        "q69_cross_source_dups", "q98_lsh_precision")((s, dir) =>
+        Dedup.bandKeyTable(documents(s, dir))),
+      IndexDecl("dedup-clusters", "q100_cluster_size_histogram",
+        "q108_dedup_verdicts", "q116_unified_dedup_verdict",
+        "q120_curation_funnel", "q148_cluster_rep", "q157_method_agreement",
+        "q165_quality_rep", "q177_quality_loss", "q43_dedup_clusters",
+        "q54_leakage_safe_split")((s, dir) =>
+        Dedup.dedupClusters(documents(s, dir))),
+      // the unified text+semantic verdict table, the suite's deepest
+      // composed plan: its codegen bill lands here, not on q116
+      IndexDecl("unified-verdicts", "q116_unified_dedup_verdict",
+        "q120_curation_funnel", "q177_quality_loss")((s, dir) =>
+        Dedup.unifiedDedupVerdicts(documents(s, dir), embeddings(s, dir))),
+      IndexDecl("gram-table", "q109_substring_dedup", "q112_substring_stats")((s, dir) =>
+        Dedup.gramTable(documents(s, dir), 8)),
+      IndexDecl("dup-grams", "q109_substring_dedup", "q112_substring_stats")((s, dir) =>
+        Dedup.dupGrams(documents(s, dir), 8)),
+      // landed-side indexes on the %5 gate fixture
+      IndexDecl("q99-landed-bands", "q129_ingest_gate",
+        "q132_ingest_gate_full", "q189_mixture_shift", "q190_streaming_gate",
+        "q99_lsh_incremental")((s, dir) =>
+        Dedup.bandKeyTable(landed5(documents(s, dir)))),
+      IndexDecl("q99-landed-shingles", "q128_landed_containment",
+        "q129_ingest_gate", "q132_ingest_gate_full", "q189_mixture_shift",
+        "q190_streaming_gate", "q99_lsh_incremental")((s, dir) =>
+        Dedup.shingleHashes(landed5(documents(s, dir)), 3, "text", "doc_id")),
+      // the per-doc shingle counts lshIncrement's Jaccard denominators read
+      IndexDecl("q99-landed-sh-sizes", "q129_ingest_gate",
+        "q132_ingest_gate_full", "q189_mixture_shift", "q190_streaming_gate",
+        "q99_lsh_incremental")((s, dir) =>
+        Dedup.landedShingleSizes(landed5(documents(s, dir)))),
+      IndexDecl("q128-landed-sh-set", "q128_landed_containment",
+        "q129_ingest_gate", "q132_ingest_gate_full", "q189_mixture_shift",
+        "q190_streaming_gate")((s, dir) =>
+        Dedup.landedShingleSet(landed5(documents(s, dir)))),
+      IndexDecl("q129-landed-fp", gateReaders: _*)((s, dir) =>
+        Dedup.landedFingerprints(landed5(documents(s, dir)))),
+      // the %5 batch's own shingle and band tables (the gate's
+      // within-batch dedup), read by the increments on that batch
+      IndexDecl("q99-batch-bands", "q129_ingest_gate",
+        "q132_ingest_gate_full", "q189_mixture_shift", "q99_lsh_incremental")((s, dir) =>
+        Dedup.bandKeyTable(batch5(documents(s, dir)))),
+      IndexDecl("q128-batch-shingles", "q128_landed_containment",
+        "q129_ingest_gate", "q132_ingest_gate_full", "q189_mixture_shift",
+        "q99_lsh_incremental")((s, dir) =>
+        Dedup.shingleHashes(batch5(documents(s, dir)), 3, "text", "doc_id")),
+      // the gate's joined five-column evidence frame, the family's
+      // widest plan: its whole-stage-codegen compile lands here
+      IndexDecl("gate-evidence", "q129_ingest_gate", "q132_ingest_gate_full",
+        "q189_mixture_shift")((s, dir) => {
+        val (docs, emb) = (documents(s, dir), embeddings(s, dir))
+        Dedup.gateEvidence(landed5(docs), batch5(docs), landed5(emb),
+          batch5(emb), "src0")
+      }),
+      // the absorb fixture's landed side; the absorbed (grown) entries
+      // are seeded by the queries themselves, they are what they measure
+      IndexDecl("q184-landed-fp", "q184_absorb_gate", "q191_streaming_absorb",
+        "q196_absorb_serve", "q200_churn_gate", "q201_streaming_churn",
+        "q202_churn_serve", "q210_mixture_rebalance", "q211_streaming_resume",
+        "q214_serve_during_churn")((s, dir) =>
+        Dedup.landedFingerprints(absorbLanded(documents(s, dir)))),
+      IndexDecl("q184-shingles", absorbReaders: _*)((s, dir) =>
+        Dedup.shingleHashes(absorbLanded(documents(s, dir)), 3, "text", "doc_id")),
+      IndexDecl("q184-bands", absorbReaders: _*)((s, dir) =>
+        Dedup.bandKeyTable(absorbLanded(documents(s, dir)))),
+      IndexDecl("q184-sh-set", "q184_absorb_gate", "q191_streaming_absorb",
+        "q196_absorb_serve", "q200_churn_gate", "q201_streaming_churn",
+        "q202_churn_serve", "q210_mixture_rebalance", "q211_streaming_resume",
+        "q214_serve_during_churn")((s, dir) =>
+        Dedup.landedShingleSet(absorbLanded(documents(s, dir)))),
+      IndexDecl("q184-sh-sizes", absorbReaders: _*)((s, dir) =>
+        Dedup.landedShingleSizes(absorbLanded(documents(s, dir)))),
+      // the stage-1 gate every absorb-fixture query opens with; their
+      // measured operators are the absorb/serve/churn tails after it
+      IndexDecl("q184-gate1-evidence", "q184_absorb_gate",
+        "q196_absorb_serve", "q200_churn_gate", "q202_churn_serve",
+        "q210_mixture_rebalance")((s, dir) => {
+        val (docs, emb) = (documents(s, dir), embeddings(s, dir))
+        Dedup.gateEvidence(absorbLanded(docs), absorbBatch1(docs),
+          absorbLanded(emb), absorbBatch1(emb), "src0", keepBp = 5000)
+      }),
+      // absorb batch 1's band table, read by the followers that
+      // gate or retract it without the memoized stage-1 evidence
+      IndexDecl("q199-batch1-bands", "q184_absorb_gate", "q196_absorb_serve",
+        "q199_retract_gate", "q200_churn_gate", "q202_churn_serve",
+        "q210_mixture_rebalance", "q213_retention_ageout")((s, dir) =>
+        Dedup.bandKeyTable(absorbBatch1(documents(s, dir)))),
+      // the migrate fixture's OLD snapshot: what the diff-driven
+      // retract anti-joins; the migrated entries are q205's own work
+      IndexDecl("q205-shingles", migrateReaders: _*)((s, dir) =>
+        Dedup.shingleHashes(snapshot(documents(s, dir), migrateOldRes), 3,
+          "text", "doc_id")),
+      IndexDecl("q205-bands", migrateReaders: _*)((s, dir) =>
+        Dedup.bandKeyTable(snapshot(documents(s, dir), migrateOldRes))),
+      IndexDecl("q111-landed-grams", "q111_substring_incremental")((s, dir) =>
+        Dedup.landedGramHashes(landed4b(documents(s, dir)), 8)))
+  }
+
   protected lazy val unifiedCtes: String =
     s"""$tokCte, $shingleCte, $minhashPairCte,
           fp AS (SELECT doc_id,

@@ -2,7 +2,7 @@ package graft
 
 import graft.exec.BatchExec
 import graft.rules.RuleCodec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing of the [[SparkEntry]] registry family: table
@@ -22,13 +22,106 @@ object EntryHelpers {
       .getOrElse(500000)
 }
 
-trait EntryHelpers {
+/** One index-phase entry: a memoized sub-plan built once per session,
+  * and the contract queries that read it. Each registry declares its
+  * entries beside its queries; [[SparkEntry.indexDecls]] concatenates
+  * them, and [[Bench]] keeps an entry's registry keys until its last
+  * reader has run. */
+final case class IndexDecl(name: String, readers: String*)(
+    val build: (SparkSession, String) => DataFrame)
 
+trait EntryHelpers {
 
   protected def events(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.load(spark, dir, "events")
   protected def table(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.sources.Tables.load(spark, dir, name)
+  protected def documents(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "documents")
+  protected def embeddings(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "embeddings")
+
+  // ---------------------------------------------------------------------
+  // Fixture slices: the landed/batch splits of the documents (doc_id) and
+  // embeddings (vec_id) tables, each defined once. Queries and index
+  // declarations call the same definition, so an entry's input plan, and
+  // with it its registry key, is the reading query's by construction.
+  // ---------------------------------------------------------------------
+  private def idOf(t: DataFrame): Column =
+    col(if (t.columns.contains("vec_id")) "vec_id" else "doc_id")
+  /** Rows whose id is `r` mod `m`. */
+  protected def modIs(t: DataFrame, m: Long, r: Int): DataFrame =
+    t.filter(pmod(idOf(t), lit(m)) === r)
+  /** Rows whose id is not `r` mod `m`. */
+  protected def modIsNot(t: DataFrame, m: Long, r: Int): DataFrame =
+    t.filter(pmod(idOf(t), lit(m)) =!= r)
+  /** Rows whose id mod `m` is one of `rs`. */
+  protected def modIn(t: DataFrame, m: Long, rs: Seq[Long]): DataFrame =
+    t.filter(pmod(idOf(t), lit(m)).isin(rs: _*))
+  /** Rows whose id mod `m` is none of `rs`. */
+  protected def modNotIn(t: DataFrame, m: Long, rs: Seq[Long]): DataFrame =
+    t.filter(!pmod(idOf(t), lit(m)).isin(rs: _*))
+
+  /** The %5 gate fixture: the batch is id ≡ 2 (mod 5). */
+  protected def batch5(t: DataFrame): DataFrame = modIs(t, 5, 2)
+  protected def landed5(t: DataFrame): DataFrame = modIsNot(t, 5, 2)
+  /** The gate queries on the %5 fixture: each reads the whole landed
+    * index family the gate probes. */
+  protected val gateReaders: Seq[String] = Seq("q129_ingest_gate",
+    "q132_ingest_gate_full", "q189_mixture_shift", "q190_streaming_gate")
+  /** The %5 semantic-increment fixture: the batch is id ≡ 3 (mod 5). */
+  protected def batch5b(t: DataFrame): DataFrame = modIs(t, 5, 3)
+  protected def landed5b(t: DataFrame): DataFrame = modIsNot(t, 5, 3)
+  /** The %4 curation-increment fixture: the batch is id ≡ 2 (mod 4). */
+  protected def batch4(t: DataFrame): DataFrame = modIs(t, 4, 2)
+  protected def landed4(t: DataFrame): DataFrame = modIsNot(t, 4, 2)
+  /** The %4 gram-increment fixture: the batch is id ≡ 1 (mod 4). */
+  protected def batch4b(t: DataFrame): DataFrame = modIs(t, 4, 1)
+  protected def landed4b(t: DataFrame): DataFrame = modIsNot(t, 4, 1)
+  /** The two halves of a two-slice partials fold: id ≡ r (mod 2). */
+  protected def half(t: DataFrame, r: Int): DataFrame = modIs(t, 2, r)
+  /** The kNN query set: every vector with vec_id ≡ 0 (mod 100, an int
+    * modulus). */
+  protected def queryVecs(emb: DataFrame): DataFrame =
+    emb.filter(pmod(col("vec_id"), lit(100)) === 0)
+
+  /** The %100 absorb fixture (q184 and its followers): batch 1 is
+    * absorbed, batch 2 is gated against the absorbed indexes, landed
+    * is the rest. The residues keep both batches off the semantic
+    * codebook strides (≡ 8 mod 25) while sharing sources with the
+    * landed slice. */
+  protected val absorbRes1: Seq[Long] = Seq(2L, 22L, 47L, 67L)
+  protected val absorbRes2: Seq[Long] = Seq(12L, 37L, 62L, 87L)
+  protected def absorbLanded(t: DataFrame): DataFrame =
+    modNotIn(t, 100, absorbRes1 ++ absorbRes2)
+  protected def absorbBatch1(t: DataFrame): DataFrame = modIn(t, 100, absorbRes1)
+  protected def absorbBatch2(t: DataFrame): DataFrame = modIn(t, 100, absorbRes2)
+  /** The absorb fixture's followers: each reads its landed index family. */
+  protected val absorbReaders: Seq[String] = Seq("q184_absorb_gate",
+    "q191_streaming_absorb", "q196_absorb_serve", "q199_retract_gate",
+    "q200_churn_gate", "q201_streaming_churn", "q202_churn_serve",
+    "q210_mixture_rebalance", "q211_streaming_resume",
+    "q213_retention_ageout", "q214_serve_during_churn")
+
+  /** The %100 snapshot-migrate fixture (q205 and its followers): a
+    * snapshot is the corpus minus its residues; the old one lacks the
+    * adds, the new one the deletes, and both lack the probe batch. */
+  protected val migrateProbeRes: Seq[Long] = Seq(9L, 59L)
+  protected val migrateOldRes: Seq[Long] = Seq(5L, 30L, 55L, 80L) ++ migrateProbeRes
+  protected val migrateNewRes: Seq[Long] = Seq(21L, 71L) ++ migrateProbeRes
+  protected def snapshot(t: DataFrame, res: Seq[Long]): DataFrame =
+    modNotIn(t, 100, res)
+  protected def migrateProbe(t: DataFrame): DataFrame = modIn(t, 100, migrateProbeRes)
+  /** The migrate fixture's queries: each reads the old snapshot's index. */
+  protected val migrateReaders: Seq[String] =
+    Seq("q205_snapshot_migrate", "q206_migrate_serve", "q209_snapshot_chain")
+
+  /** The %10 release-pin fixture (q186/q188): the release is id ≢ 3
+    * (mod 10); q188's landed corpus also lacks ≡ 7, its grown one has
+    * ≡ 3 back. */
+  protected def pinLanded(emb: DataFrame): DataFrame = modIsNot(emb, 10, 3)
+  protected def pinLanded0(emb: DataFrame): DataFrame = modNotIn(emb, 10, Seq(3L, 7L))
+  protected def pinGrown1(emb: DataFrame): DataFrame = modIsNot(emb, 10, 7)
 
   /** Run a rule given as JSON — the full reference entry path (JSON rule →
     * codec → compiled Columns → execution), minus the Kafka transport. */

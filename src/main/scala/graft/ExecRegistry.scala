@@ -11,6 +11,19 @@ import org.apache.spark.sql.functions._
   * compaction), graph analytics, and the skew planner. */
 trait ExecRegistry extends EntryHelpers {
 
+  /** A media increment's batch (q171 video, q175 audio): the %5 batch
+    * slice plus re-upload twins, from media kind id ≡ `kind` (mod 3),
+    * of a landed original (id ≡ 1 mod 10, +99999 → landed_dup) and of
+    * a batch original (id ≡ 7 mod 10, +199998 → batch_dup). */
+  private def mediaIncrementBatch(docs: DataFrame, kind: Int): DataFrame = {
+    val d = docs.select("doc_id", "text")
+    def twins(r10: Int, shift: Long) = d
+      .filter(pmod(col("doc_id"), lit(3L)) === kind &&
+        pmod(col("doc_id"), lit(10L)) === r10)
+      .select((col("doc_id") + shift).as("doc_id"), col("text"))
+    batch5(d).unionByName(twins(1, 99999L)).unionByName(twins(7, 199998L))
+  }
+
   protected def execQueries: Map[String, (SparkSession, String) => DataFrame] = {
     import graft.dedup.Dedup
     import graft.functions.TextFunctions
@@ -43,7 +56,7 @@ trait ExecRegistry extends EntryHelpers {
       "q156_weighted_sample" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         def slice(r: Int) = graft.curation.Curation.weightedSamplePartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === r), "source",
+          half(docs, r), "source",
           col("doc_id").cast("string"), col("n_chars"), 25)
         graft.curation.Curation.weightedSampleFromPartials(
             slice(0).unionByName(slice(1)), "source", 25)
@@ -146,16 +159,7 @@ trait ExecRegistry extends EntryHelpers {
         import graft.multimodal.Multimodal
         val docs = table(s, dir, "documents")
         val landed = Multimodal.landedMediaSlice(docs)
-        val batchDocs = docs.select("doc_id", "text")
-          .filter(pmod(col("doc_id"), lit(5L)) === 2)
-          .unionByName(docs.select("doc_id", "text")
-            .filter(pmod(col("doc_id"), lit(3L)) === 1 &&
-              pmod(col("doc_id"), lit(10L)) === 1)
-            .select((col("doc_id") + 99999L).as("doc_id"), col("text")))
-          .unionByName(docs.select("doc_id", "text")
-            .filter(pmod(col("doc_id"), lit(3L)) === 1 &&
-              pmod(col("doc_id"), lit(10L)) === 7)
-            .select((col("doc_id") + 199998L).as("doc_id"), col("text")))
+        val batchDocs = mediaIncrementBatch(docs, 1)
         Multimodal.audioNearDupIncrement(landed,
             Multimodal.syntheticMedia(batchDocs, "doc_id", "text"),
             stride = 10, minJaccardPpm = 300000)
@@ -173,16 +177,7 @@ trait ExecRegistry extends EntryHelpers {
         // (same plan → same registry key → the memoized "vid-frames"
         // index is probed, never rebuilt)
         val landed = Multimodal.landedMediaSlice(docs)
-        val batchDocs = docs.select("doc_id", "text")
-          .filter(pmod(col("doc_id"), lit(5L)) === 2)
-          .unionByName(docs.select("doc_id", "text")
-            .filter(pmod(col("doc_id"), lit(3L)) === 2 &&
-              pmod(col("doc_id"), lit(10L)) === 1)
-            .select((col("doc_id") + 99999L).as("doc_id"), col("text")))
-          .unionByName(docs.select("doc_id", "text")
-            .filter(pmod(col("doc_id"), lit(3L)) === 2 &&
-              pmod(col("doc_id"), lit(10L)) === 7)
-            .select((col("doc_id") + 199998L).as("doc_id"), col("text")))
+        val batchDocs = mediaIncrementBatch(docs, 2)
         Multimodal.videoNearDupIncrement(landed,
             Multimodal.syntheticMedia(batchDocs, "doc_id", "text"),
             stride = 10, minJaccardPpm = 300000)
@@ -528,9 +523,9 @@ trait ExecRegistry extends EntryHelpers {
       "q139_hll_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.curation.Curation.hllPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0))
+          half(docs, 0))
         val pb = graft.curation.Curation.hllPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
+          half(docs, 1))
         graft.curation.Curation.distinctFromHllPartials(
           pa.unionByName(pb))
           .orderBy("bucket")
@@ -544,10 +539,10 @@ trait ExecRegistry extends EntryHelpers {
       "q140_quantile_merge" -> ((s, dir) => {
         val docs = table(s, dir, "documents")
         val pa = graft.curation.Curation.histPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
+          half(docs, 0),
           "source", "n_chars")
         val pb = graft.curation.Curation.histPartials(
-          docs.filter(pmod(col("doc_id"), lit(2L)) === 1),
+          half(docs, 1),
           "source", "n_chars")
         graft.curation.Curation.distributionStatsFromPartials(
           pa.unionByName(pb), "source", Seq(5000, 9000, 9900))
@@ -576,6 +571,22 @@ trait ExecRegistry extends EntryHelpers {
           .orderBy("grp_key")
       }),
     )
+  }
+
+  /** The multimodal increments' landed media indexes, each one landed
+    * decode / frame pass / window pass; batches probe them by
+    * equi-join. */
+  protected def execIndexes: Seq[IndexDecl] = {
+    import graft.multimodal.Multimodal
+    def landed(s: SparkSession, dir: String) =
+      Multimodal.landedMediaSlice(documents(s, dir))
+    Seq(
+      IndexDecl("q130-img-bands", "q130_image_neardup_incremental")((s, dir) =>
+        Multimodal.landedImageBands(landed(s, dir))),
+      IndexDecl("q171-vid-frames", "q171_video_incremental")((s, dir) =>
+        Multimodal.landedVideoFrames(landed(s, dir))),
+      IndexDecl("q175-aud-windows", "q175_audio_incremental")((s, dir) =>
+        Multimodal.landedAudioWindows(landed(s, dir))))
   }
 
   protected def execOracles: Map[String, String] = Map(

@@ -34,7 +34,7 @@ trait SimilarityRegistry extends EntryHelpers {
       // Brute-force cosine top-5 (exact ANN baseline; query side broadcast).
       "q21_ann_topk" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
-        Similarity.bruteForceTopK(emb, emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+        Similarity.bruteForceTopK(emb, queryVecs(emb), 5)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -54,7 +54,7 @@ trait SimilarityRegistry extends EntryHelpers {
       // ANN path; q21 is the exact baseline).
       "q29_ann_topk_lsh" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
-        Similarity.lshTopK(emb, emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5,
+        Similarity.lshTopK(emb, queryVecs(emb), 5,
             bands = 4, bitsPerBand = 8)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
@@ -66,7 +66,7 @@ trait SimilarityRegistry extends EntryHelpers {
       // path next to q29's LSH (assignment O(n·nlist), query O(n/nlist)).
       "q37_ann_topk_ivf" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
-        Similarity.ivfTopK(emb, emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5,
+        Similarity.ivfTopK(emb, queryVecs(emb), 5,
             centroidStride = 25, centroidOffset = 7, nprobe = 4)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
@@ -79,7 +79,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q49_ann_topk_quantized" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         Similarity.quantizedTopK(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5, rerankFactor = 4)
+            queryVecs(emb), 5, rerankFactor = 4)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -107,7 +107,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q86_hard_negatives" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         Similarity.hardNegatives(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5, 0.25)
+            queryVecs(emb), 5, 0.25)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -127,8 +127,8 @@ trait SimilarityRegistry extends EntryHelpers {
       "q110_embed_incremental" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.lshIncrement(
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2),
+          landed5(emb),
+          batch5(emb),
           bands = 4, bitsPerBand = 8, minCosine = 0.3)
           .orderBy("vec_id")
       }),
@@ -149,8 +149,8 @@ trait SimilarityRegistry extends EntryHelpers {
       "q117_semantic_incremental" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.semanticDedupIncrementFlat(
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 3),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 3))
+          landed5b(emb),
+          batch5b(emb))
           .orderBy("vec_id")
       }),
 
@@ -182,8 +182,7 @@ trait SimilarityRegistry extends EntryHelpers {
         val emb = table(s, dir, "embeddings")
         // the sample carries dangling ids (+999983 twins) so the
         // stale-reference sentinel row is exercised, not just declared
-        val sm = emb.select(col("vec_id"))
-          .filter(pmod(col("vec_id"), lit(10L)) === 3)
+        val sm = modIs(emb.select(col("vec_id")), 10, 3)
         graft.similarity.Similarity.sampleCoverage(emb,
             sm.unionByName(
               sm.select((col("vec_id") + 999983L).as("vec_id"))))
@@ -207,7 +206,7 @@ trait SimilarityRegistry extends EntryHelpers {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.semanticSafeSplitPinned(emb,
             graft.similarity.Similarity.pinnedSemanticSplit(
-              emb.filter(pmod(col("vec_id"), lit(10L)) =!= 3),
+              pinLanded(emb),
               trainPct = 80),
             trainPct = 80)
           .orderBy("vec_id")
@@ -220,8 +219,8 @@ trait SimilarityRegistry extends EntryHelpers {
       // keep its side through BOTH rotations (pin transitivity).
       "q188_split_pin_rotation" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val l0 = emb.filter(!pmod(col("vec_id"), lit(10L)).isin(3L, 7L))
-        val g1 = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 7)
+        val l0 = modNotIn(emb, 10, Seq(3L, 7L))
+        val g1 = pinGrown1(emb)
         val pin1 = graft.similarity.Similarity.rotatePinnedSplit(g1,
           graft.similarity.Similarity.pinnedSemanticSplit(l0,
             trainPct = 80),
@@ -244,7 +243,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q119_ann_topk_pq" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.pqTopK(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+            queryVecs(emb), 5)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -257,8 +256,8 @@ trait SimilarityRegistry extends EntryHelpers {
       "q122_semantic_inc_2l" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.semanticDedupIncrementTwoLevel(
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 3),
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 3))
+          landed5b(emb),
+          batch5b(emb))
           .orderBy("vec_id")
       }),
 
@@ -270,7 +269,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q133_ann_ivf_pq" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.ivfPqTopK(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+            queryVecs(emb), 5)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -284,9 +283,9 @@ trait SimilarityRegistry extends EntryHelpers {
       "q158_ivfpq_incremental" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.ivfPqIncrement(
-            emb.filter(pmod(col("vec_id"), lit(4L)) =!= 2),
-            emb.filter(pmod(col("vec_id"), lit(4L)) === 2),
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+            landed4(emb),
+            batch4(emb),
+            queryVecs(emb), 5)
           .withColumnRenamed("rank", "rnk")
           .orderBy("q_id", "rnk")
       }),
@@ -297,7 +296,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q159_served_ndcg" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.servedNdcg(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+            queryVecs(emb), 5)
           .orderBy("q_id")
       }),
 
@@ -314,8 +313,8 @@ trait SimilarityRegistry extends EntryHelpers {
       "q160_codebook_drift" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.codebookDrift(
-            emb.filter(pmod(col("vec_id"), lit(4L)) =!= 2),
-            emb.filter(pmod(col("vec_id"), lit(4L)) === 2))
+            landed4(emb),
+            batch4(emb))
           .orderBy("grp")
       }),
 
@@ -333,10 +332,10 @@ trait SimilarityRegistry extends EntryHelpers {
       // oracle is their union.
       "q193_codebook_rebuild" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
-        val queries = emb.filter(pmod(col("vec_id"), lit(100)) === 0)
+        val queries = queryVecs(emb)
         val before = graft.similarity.Similarity.ivfPqIncrement(
-            emb.filter(pmod(col("vec_id"), lit(4L)) =!= 2),
-            emb.filter(pmod(col("vec_id"), lit(4L)) === 2), queries, 5)
+            landed4(emb),
+            batch4(emb), queries, 5)
           .withColumnRenamed("rank", "rnk")
           .withColumn("release", lit("before"))
         graft.similarity.Similarity.rebuildIvfPqRelease(emb, "r18-rebuild")
@@ -362,10 +361,10 @@ trait SimilarityRegistry extends EntryHelpers {
       "q197_drift_policy" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.driftRebuildPolicy(
-            emb.filter(pmod(col("vec_id"), lit(4L)) =!= 2),
-            emb.filter(pmod(col("vec_id"), lit(4L)) === 2),
+            landed4(emb),
+            batch4(emb),
             emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0),
+            queryVecs(emb),
             "q197-policy", maxDriftPpm = 0L)
           .orderBy("q_id", "rnk")
       }),
@@ -377,7 +376,7 @@ trait SimilarityRegistry extends EntryHelpers {
       "q145_ivfpq_recall" -> ((s, dir) => {
         val emb = table(s, dir, "embeddings")
         graft.similarity.Similarity.ivfPqRecall(emb,
-            emb.filter(pmod(col("vec_id"), lit(100)) === 0), 5)
+            queryVecs(emb), 5)
           .orderBy("nprobe", "rerank_factor")
       }),
 
@@ -542,6 +541,120 @@ trait SimilarityRegistry extends EntryHelpers {
     s"""CASE WHEN ('0x' || substr(md5(CAST($lblExpr AS VARCHAR)), 1, 15))
                ::BIGINT % 100 < $trainPct
              THEN 'train' ELSE 'eval' END"""
+
+  /** The similarity family's index-phase entries: corpus LSH and
+    * semantic-dedup tables, the landed vector indexes of the
+    * incremental faces, the served IVF-PQ layout, the power-iteration
+    * memos and the pinned semantic-split releases. */
+  protected def similarityIndexes: Seq[IndexDecl] = {
+    import graft.similarity.Similarity
+    Seq(
+      IndexDecl("sign-bands", "q22_embed_neardup_lsh", "q29_ann_topk_lsh")((s, dir) =>
+        Similarity.bandedTable(embeddings(s, dir), 4, 8)),
+      IndexDecl("sem2l-asn", "q116_unified_dedup_verdict",
+        "q118_semantic_dedup_2l", "q120_curation_funnel",
+        "q157_method_agreement", "q169_semantic_sweep",
+        "q176_semantic_safe_split", "q177_quality_loss",
+        "q179_sample_coverage", "q180_semantic_sample",
+        "q186_semantic_split_pinned", "q188_split_pin_rotation")((s, dir) =>
+        Similarity.twoLevelAssignment(embeddings(s, dir))),
+      // the 2L semantic-dedup table: its CC fixpoint runs eagerly at
+      // construction
+      IndexDecl("sem2l-dedup", "q116_unified_dedup_verdict",
+        "q118_semantic_dedup_2l", "q120_curation_funnel",
+        "q157_method_agreement", "q176_semantic_safe_split",
+        "q177_quality_loss", "q186_semantic_split_pinned",
+        "q188_split_pin_rotation")((s, dir) =>
+        Similarity.semanticDedupTwoLevel(embeddings(s, dir))),
+      // the gate's two-level semantic index at its offset-8 codebook
+      IndexDecl("q129-sem-cells-2l", gateReaders: _*)((s, dir) =>
+        Similarity.landedTwoLevelCells(landed5(embeddings(s, dir)), 25, 8, 5)),
+      IndexDecl("q129-sem-assign-2l", gateReaders: _*)((s, dir) =>
+        Similarity.landedSemanticAssignment2L(landed5(embeddings(s, dir)), 25, 8, 5)),
+      IndexDecl("q184-vec-lookup", absorbReaders: _*)((s, dir) =>
+        Similarity.landedVecLookup(absorbLanded(embeddings(s, dir)))),
+      IndexDecl("q184-sem-cells-2l", absorbReaders: _*)((s, dir) =>
+        Similarity.landedTwoLevelCells(absorbLanded(embeddings(s, dir)), 25, 8, 5)),
+      IndexDecl("q184-sem-assign-2l", absorbReaders: _*)((s, dir) =>
+        Similarity.landedSemanticAssignment2L(absorbLanded(embeddings(s, dir)), 25, 8, 5)),
+      // the routed/coded ANN pair the absorb merges extend
+      IndexDecl("q196-ivfpq-asn", "q184_absorb_gate", "q191_streaming_absorb",
+        "q196_absorb_serve", "q199_retract_gate", "q200_churn_gate",
+        "q201_streaming_churn", "q202_churn_serve", "q211_streaming_resume",
+        "q213_retention_ageout", "q214_serve_during_churn")((s, dir) =>
+        Similarity.landedIvfPqAssignment(absorbLanded(embeddings(s, dir)))),
+      IndexDecl("q196-ivfpq-codes", "q184_absorb_gate",
+        "q191_streaming_absorb", "q196_absorb_serve", "q199_retract_gate",
+        "q200_churn_gate", "q201_streaming_churn", "q202_churn_serve",
+        "q211_streaming_resume", "q213_retention_ageout",
+        "q214_serve_during_churn")((s, dir) =>
+        Similarity.landedIvfPqCodes(absorbLanded(embeddings(s, dir)))),
+      IndexDecl("q205-vec-lookup", migrateReaders: _*)((s, dir) =>
+        Similarity.landedVecLookup(snapshot(embeddings(s, dir), migrateOldRes))),
+      IndexDecl("q205-sem-cells-2l", migrateReaders: _*)((s, dir) =>
+        Similarity.landedTwoLevelCells(snapshot(embeddings(s, dir), migrateOldRes),
+          25, 8, 5)),
+      IndexDecl("q205-sem-assign-2l", migrateReaders: _*)((s, dir) =>
+        Similarity.landedSemanticAssignment2L(
+          snapshot(embeddings(s, dir), migrateOldRes), 25, 8, 5)),
+      IndexDecl("q205-ivfpq-asn", migrateReaders: _*)((s, dir) =>
+        Similarity.landedIvfPqAssignment(snapshot(embeddings(s, dir), migrateOldRes))),
+      IndexDecl("q205-ivfpq-codes", migrateReaders: _*)((s, dir) =>
+        Similarity.landedIvfPqCodes(snapshot(embeddings(s, dir), migrateOldRes))),
+      IndexDecl("q110-landed-bands", "q110_embed_incremental")((s, dir) =>
+        Similarity.bandedTable(landed5(embeddings(s, dir)), 4, 8)),
+      IndexDecl("q110-landed-vecs", "q110_embed_incremental",
+        "q129_ingest_gate", "q132_ingest_gate_full", "q189_mixture_shift",
+        "q190_streaming_gate")((s, dir) =>
+        Similarity.landedVecLookup(landed5(embeddings(s, dir)))),
+      // the landed IVF-PQ pair and the drift baseline on the %4 slice
+      IndexDecl("q158-ivfpq-asn", "q158_ivfpq_incremental",
+        "q193_codebook_rebuild")((s, dir) =>
+        Similarity.landedIvfPqAssignment(landed4(embeddings(s, dir)))),
+      IndexDecl("q158-ivfpq-codes", "q158_ivfpq_incremental",
+        "q193_codebook_rebuild")((s, dir) =>
+        Similarity.landedIvfPqCodes(landed4(embeddings(s, dir)))),
+      IndexDecl("q160-drift-res", "q160_codebook_drift", "q197_drift_policy")((s, dir) =>
+        Similarity.landedDriftFold(landed4(embeddings(s, dir)))),
+      IndexDecl("q117-landed-vecs", "q117_semantic_incremental",
+        "q122_semantic_inc_2l")((s, dir) =>
+        Similarity.landedVecLookup(landed5b(embeddings(s, dir)))),
+      IndexDecl("q117-landed-assign", "q117_semantic_incremental")((s, dir) =>
+        Similarity.landedSemanticAssignment(landed5b(embeddings(s, dir)))),
+      IndexDecl("q122-landed-cells-2l", "q122_semantic_inc_2l")((s, dir) =>
+        Similarity.landedTwoLevelCells(landed5b(embeddings(s, dir)))),
+      IndexDecl("q122-landed-assign-2l", "q122_semantic_inc_2l")((s, dir) =>
+        Similarity.landedSemanticAssignment2L(landed5b(embeddings(s, dir)))),
+      // the served semantic index: the full corpus routed and
+      // PQ-encoded under the full-corpus codebooks
+      IndexDecl("q192-ivfpq-asn", "q192_hybrid_served",
+        "q193_codebook_rebuild", "q195_hybrid_audit", "q197_drift_policy",
+        "q198_streaming_serve")((s, dir) =>
+        Similarity.landedIvfPqAssignment(embeddings(s, dir))),
+      IndexDecl("q192-ivfpq-codes", "q192_hybrid_served",
+        "q193_codebook_rebuild", "q195_hybrid_audit", "q197_drift_policy",
+        "q198_streaming_serve")((s, dir) =>
+        Similarity.landedIvfPqCodes(embeddings(s, dir))),
+      IndexDecl("power-iter", "q146_power_iteration", "q147_pca_project",
+        "q149_variance_explained", "q152_pca_second")((s, dir) =>
+        Similarity.powerIterationTop(embeddings(s, dir), iters = 3)),
+      IndexDecl("power-iter-2", "q152_pca_second")((s, dir) =>
+        Similarity.powerIterationSecond(embeddings(s, dir), iters = 3)),
+      // q188's pin lifecycle: the landed release and its rotation over
+      // the first grown corpus
+      IndexDecl("q188-split-pin0", "q188_split_pin_rotation")((s, dir) =>
+        Similarity.pinnedSemanticSplit(pinLanded0(embeddings(s, dir)), 80)),
+      IndexDecl("q188-split-pin1", "q188_split_pin_rotation")((s, dir) => {
+        val emb = embeddings(s, dir)
+        Similarity.rotatePinnedSplit(pinGrown1(emb),
+          Similarity.pinnedSemanticSplit(pinLanded0(emb), 80), 80,
+          releaseId = "rel1")
+      }),
+      // q186's release: the pin is the index, and building it seeds
+      // the slice's sem2l-asn/sem2l-dedup instances
+      IndexDecl("q186-split-pin", "q186_semantic_split_pinned")((s, dir) =>
+        Similarity.pinnedSemanticSplit(pinLanded(embeddings(s, dir)), 80)))
+  }
 
   protected def similarityOracles: Map[String, String] = Map(
 

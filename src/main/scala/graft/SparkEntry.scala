@@ -49,353 +49,85 @@ object SparkEntry extends CoreRegistry with DedupRegistry
 
 
   /** One-time per-session family-index materialization: every memoized
-    * sub-plan (CacheRegistry kind) that more than one contract query —
-    * or every batch of an incremental operator — reads. A production
+    * sub-plan (CacheRegistry kind) that more than one contract query, or
+    * every batch of an incremental operator, reads. A production
     * deployment builds these once per corpus and amortizes them across
     * the whole query stream; the bench therefore times this as its own
-    * "index" metric (still inside the reported total) instead of
-    * billing the build to whichever query happens to run first
-    * (r13 verdict: q100, lexicographically first in the dedup family,
-    * absorbed the family's entire shingle/band/cluster build).
+    * "index" metric (still inside the reported total) instead of billing
+    * the build to whichever query happens to run first.
     *
-    * Every build below replicates the EXACT call (same table loader,
-    * same params, same filter expressions) of the consuming queries, so
-    * the registry keys — which embed the input plan's semantic hash —
-    * match and the queries hit the cache. `count()` forces every
-    * partition of the lazily-persisted entry. */
-  private def indexBuilds(spark: SparkSession,
-      dir: String): Seq[(String, () => DataFrame)] = {
-    import graft.dedup.Dedup
-    import graft.similarity.Similarity
-    import graft.curation.Curation
-    val docs = table(spark, dir, "documents")
-    val emb = table(spark, dir, "embeddings")
-    val landedDocs5 = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2) // q99
-    val landedDocs4 = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 1) // q111
-    val landedDocs4b = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 2) // q125
-    val landedEmb5 = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2) // q110
-    val landedEmb3 = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 3) // q117
-    val landedEmb4 = emb.filter(pmod(col("vec_id"), lit(4L)) =!= 2) // q158
-    // q184's landed slice: id % 100 outside both batch residue sets
-    // (MUST textually match the q184 entry's construction — the plan
-    // fingerprint is the cache key)
-    val landedDocsA = docs.filter(!pmod(col("doc_id"), lit(100L))
-      .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-    val landedEmbA = emb.filter(!pmod(col("vec_id"), lit(100L))
-      .isin(2L, 22L, 47L, 67L, 12L, 37L, 62L, 87L))
-    // q205's OLD snapshot: corpus minus add residues {5,30,55,80} and
-    // holdout {9,59} (MUST textually match the q205 entry's slices)
-    val landedDocsM = docs.filter(!pmod(col("doc_id"), lit(100L))
-      .isin(5L, 30L, 55L, 80L, 9L, 59L))
-    val landedEmbM = emb.filter(!pmod(col("vec_id"), lit(100L))
-      .isin(5L, 30L, 55L, 80L, 9L, 59L))
-    val builds: Seq[(String, () => DataFrame)] = Seq(
-      // shingles + capped shingle space (q18/q19/q43/q69/q98/q101…)
-      "shingles-capped" -> (() => Dedup.cappedShingleHashes(docs, 3, 100, "text", "doc_id")),
-      // q151's distinct (stratum, gram) set — built once here, read by
-      // both the KMV sketch and its exact twin
-      "src-grams" -> (() => Dedup.sourceGramSet(docs)),
-      // minhash band keys (q19/q43/q69/q98/q99/q101)
-      "minhash-bands" -> (() => Dedup.bandKeyTable(docs)),
-      // near-dup cluster table (q43/q54/q100/q108)
-      "dedup-clusters" -> (() => Dedup.dedupClusters(docs)),
-      // bigram-LM scored projection (q89/q91)
-      "ppl-scored" -> (() => Curation.perplexityScored(docs)),
-      // full-corpus sign-LSH bands (q22/q29)
-      "sign-bands" -> (() => Similarity.bandedTable(emb, 4, 8)),
-      // full-corpus two-level assignment (q116/q118/q120 all embed it
-      // through the 2L default routing — one build, three consumers)
-      "sem2l-asn" -> (() => Similarity.twoLevelAssignment(emb)),
-      // the 2L semantic-dedup END table (CC fixpoint runs eagerly at
-      // construction — without this entry every consumer re-pays it;
-      // round-16 profile: 6.4 s construction per call at sf0.1)
-      "sem2l-dedup" -> (() => Similarity.semanticDedupTwoLevel(emb)),
-      // the unified text+semantic verdict table (q116 emits it, q120's
-      // funnel left-joins it) — the suite's deepest composed plan,
-      // materialized once here so its codegen bill lands in the index
-      // phase, not on the first consumer (r15 q116 `weak` fix)
-      "unified-verdicts" -> (() => Dedup.unifiedDedupVerdicts(docs, emb)),
-      // substring-dedup gram table + corpus dup-gram set (q109/q112)
-      "gram-table" -> (() => Dedup.gramTable(docs, 8)),
-      "dup-grams" -> (() => Dedup.dupGrams(docs, 8)),
-      // landed-side indexes of the incremental operators — built once,
-      // probed batch over batch (q99 / q110 / q111)
-      "q99-landed-bands" -> (() => Dedup.bandKeyTable(landedDocs5)),
-      "q99-landed-shingles" -> (() => Dedup.shingleHashes(landedDocs5, 3, "text", "doc_id")),
-      // the per-doc shingle-count index lshIncrement's Jaccard
-      // denominators read (r22: replaces a corpus-wide per-call agg)
-      "q99-landed-sh-sizes" -> (() => Dedup.landedShingleSizes(landedDocs5)),
-      "q128-landed-sh-set" -> (() => Dedup.landedShingleSet(landedDocs5)),
-      // q129's gate: TWO-LEVEL semantic index at the gate's offset-8
-      // codebook (cells + assignment, the √-law pair) and DSIR indexes
-      // on the %5 landed slice (q125's are on %4); the
-      // text/band/vec/shingle-set indexes are shared with q99/q110/q128
-      "q129-landed-fp" -> (() => Dedup.landedFingerprints(landedDocs5)),
-      "q129-sem-cells-2l" -> (() =>
-        Similarity.landedTwoLevelCells(landedEmb5, 25, 8, 5)),
-      "q129-sem-assign-2l" -> (() =>
-        Similarity.landedSemanticAssignment2L(landedEmb5, 25, 8, 5)),
-      "q129-dsir-counts" -> (() => Curation.landedDsirCounts(landedDocs5, "src0")),
-      "q129-dsir-thresholds" -> (() =>
-        Curation.landedDsirThresholds(landedDocs5, "src0")),
-      // q131/q132's landed LM + boundary ratios on the same %5 slice
-      "q131-ppl-lm" -> (() => Curation.landedBigramLm(landedDocs5)),
-      "q131-ppl-thresholds" -> (() => Curation.landedPplThresholds(landedDocs5)),
-      // q129/q132's joined five-column evidence frame — the gate
-      // family's widest plan, whose whole-stage-codegen compile bill
-      // dominated q129's first landing (r16 driver 12.35 s vs the 4.63
-      // floor). Both queries construct it with identical arguments
-      // (MUST textually match their entries' slices), so this ONE
-      // entry serves both and the compile lands in the index phase,
-      // the unified-verdicts pattern.
-      "gate-evidence" -> (() => Dedup.gateEvidence(
-        docs.filter(pmod(col("doc_id"), lit(5L)) =!= 2),
-        docs.filter(pmod(col("doc_id"), lit(5L)) === 2),
-        emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2),
-        emb.filter(pmod(col("vec_id"), lit(5L)) === 2), "src0")),
-      // q184's stage-1 landed side (id%100 outside both batch residue
-      // sets — a THREE-slice
-      // contract: landed, batch 1 to absorb, batch 2 to gate): the
-      // same landed-index family as q129, keyed on the smaller slice,
-      // plus the per-doc DSIR histogram that makes the threshold
-      // absorbable. The absorbed (stage-2) artifacts are seeded by the
-      // query itself — they ARE what q184 measures.
-      "q184-landed-fp" -> (() => Dedup.landedFingerprints(landedDocsA)),
-      "q184-shingles" -> (() => Dedup.shingleHashes(landedDocsA, 3, "text", "doc_id")),
-      "q184-bands" -> (() => Dedup.bandKeyTable(landedDocsA)),
-      "q184-sh-set" -> (() => Dedup.landedShingleSet(landedDocsA)),
-      "q184-sh-sizes" -> (() => Dedup.landedShingleSizes(landedDocsA)),
-      "q184-vec-lookup" -> (() => Similarity.landedVecLookup(landedEmbA)),
-      "q184-sem-cells-2l" -> (() =>
-        Similarity.landedTwoLevelCells(landedEmbA, 25, 8, 5)),
-      "q184-sem-assign-2l" -> (() =>
-        Similarity.landedSemanticAssignment2L(landedEmbA, 25, 8, 5)),
-      "q184-dsir-counts" -> (() => Curation.landedDsirCounts(landedDocsA, "src0")),
-      "q184-dsir-thresholds" -> (() =>
-        Curation.landedDsirThresholds(landedDocsA, "src0", keepBp = 5000)),
-      "q184-dsir-doc-buckets" -> (() =>
-        Curation.landedDsirDocBuckets(landedDocsA, "src0")),
-      // the q184-fixture STAGE-1 gate evidence (kind "gate-evidence",
-      // the q129/q132 idiom on the %100-residue fixture): q184, q196,
-      // q200, q202 and q210 all open with the IDENTICAL
-      // ingestGate(d0, b1, …, keepBp = 5000) call, and the per-run
-      // release of mid-run keys made each of the five re-pay the
-      // stage-1 evidence join (r19 ProfileQ184: 16.4 s cold) even
-      // though the stage-1 gate is q129's operator, not theirs — their
-      // measured operators are the absorb/serve/churn tails. One
-      // build here serves all five (MUST textually match their
-      // entries' slice construction).
-      "q184-gate1-evidence" -> (() => Dedup.gateEvidence(
-        landedDocsA,
-        docs.filter(pmod(col("doc_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L)),
-        landedEmbA,
-        emb.filter(pmod(col("vec_id"), lit(100L))
-          .isin(2L, 22L, 47L, 67L)),
-        "src0", keepBp = 5000)),
-      // q196's landed RETRIEVAL kinds on the same %100-residue slice:
-      // the lexical index and the routed/coded ANN pair the absorb
-      // merges extend — a deployment has these before the batch
-      // arrives; the absorbed (grown) entries are seeded by the query
-      // itself, they ARE what q196 measures
-      "q196-bm25-stats" -> (() => Curation.bm25Stats(landedDocsA)),
-      "q196-ivfpq-asn" -> (() => Similarity.landedIvfPqAssignment(landedEmbA)),
-      "q196-ivfpq-codes" -> (() => Similarity.landedIvfPqCodes(landedEmbA)),
-      // q205's OLD-snapshot landed kinds — everything the diff-driven
-      // retract anti-joins (no landed gate runs, so no fp/DSIR-count/
-      // threshold entries: retract re-derives those from the per-doc
-      // histogram); the migrated (new-snapshot) entries are seeded by
-      // the query itself — that seeding IS what q205 measures
-      "q205-shingles" -> (() => Dedup.shingleHashes(landedDocsM, 3, "text", "doc_id")),
-      "q205-bands" -> (() => Dedup.bandKeyTable(landedDocsM)),
-      "q205-sh-set" -> (() => Dedup.landedShingleSet(landedDocsM)),
-      "q205-vec-lookup" -> (() => Similarity.landedVecLookup(landedEmbM)),
-      "q205-sem-cells-2l" -> (() =>
-        Similarity.landedTwoLevelCells(landedEmbM, 25, 8, 5)),
-      "q205-sem-assign-2l" -> (() =>
-        Similarity.landedSemanticAssignment2L(landedEmbM, 25, 8, 5)),
-      "q205-dsir-doc-buckets" -> (() =>
-        Curation.landedDsirDocBuckets(landedDocsM, "src0")),
-      "q205-bm25-stats" -> (() => Curation.bm25Stats(landedDocsM)),
-      "q205-ivfpq-asn" -> (() => Similarity.landedIvfPqAssignment(landedEmbM)),
-      "q205-ivfpq-codes" -> (() => Similarity.landedIvfPqCodes(landedEmbM)),
-      // q130/q171/q175's landed media indexes — one landed decode /
-      // frame pass / window pass each, paid here once; batches probe
-      // by equi-join. ALL built over Multimodal.landedMediaSlice, the
-      // one definition their exec entries also use (the plan
-      // fingerprint IS the cache key — copies must never drift).
-      "q130-img-bands" -> (() => graft.multimodal.Multimodal.landedImageBands(
-        graft.multimodal.Multimodal.landedMediaSlice(docs))),
-      "q171-vid-frames" -> (() => graft.multimodal.Multimodal.landedVideoFrames(
-        graft.multimodal.Multimodal.landedMediaSlice(docs))),
-      "q175-aud-windows" -> (() => graft.multimodal.Multimodal.landedAudioWindows(
-        graft.multimodal.Multimodal.landedMediaSlice(docs))),
-      "q110-landed-bands" -> (() => Similarity.bandedTable(landedEmb5, 4, 8)),
-      "q110-landed-vecs" -> (() => Similarity.landedVecLookup(landedEmb5)),
-      // q158's landed IVF-PQ index pair: every landed vector routed to
-      // its landed coarse cell and PQ-encoded against the landed
-      // codebook — batches union their own routing/codes on top
-      "q158-ivfpq-asn" -> (() => Similarity.landedIvfPqAssignment(landedEmb4)),
-      "q158-ivfpq-codes" -> (() => Similarity.landedIvfPqCodes(landedEmb4)),
-      // q160/q197's drift BASELINE: one landed assignment fold — the
-      // denominator every drift measurement shares (same %4 landed
-      // slice as q158's kinds)
-      "q160-drift-res" -> (() => Similarity.landedDriftFold(landedEmb4)),
-      "q111-landed-grams" -> (() => Dedup.landedGramHashes(landedDocs4, 8)),
-      "q117-landed-vecs" -> (() => Similarity.landedVecLookup(landedEmb3)),
-      "q117-landed-assign" -> (() => Similarity.landedSemanticAssignment(landedEmb3)),
-      "q122-landed-cells-2l" -> (() => Similarity.landedTwoLevelCells(landedEmb3)),
-      "q122-landed-assign-2l" -> (() =>
-        Similarity.landedSemanticAssignment2L(landedEmb3)),
-      "q123-qc-features" -> (() => Curation.qcFeatures(docs, "src0")),
-      // q162's landed manifest partial: nShards rows, built once
-      "q162-shard-manifest" -> (() => Curation.landedShardManifest(landedDocs4b, 8)),
-      // q182's landed per-source bigram partials: mergeable by sum
-      "q182-src-bigrams" -> (() => Curation.landedSourceBigrams(landedDocs4b)),
-      // q163's landed head distribution: headV+1 rows, built once
-      "q163-drift-head" -> (() => Curation.landedDriftHead(landedDocs4b)),
-      "q125-dsir-counts" -> (() => Curation.landedDsirCounts(landedDocs4b, "src0")),
-      "q125-dsir-thresholds" -> (() =>
-        Curation.landedDsirThresholds(landedDocs4b, "src0")),
-      // q208's landed classifier artifacts on the same %4 slice: the
-      // feature table, the trained weight vector (buckets+1 rows — the
-      // frozen model), and the one-row pass-rate baseline the policy's
-      // drift measure reads
-      "q208-qc-features" -> (() => Curation.qcFeatures(landedDocs4b, "src0")),
-      "q208-qc-weights" -> (() => Curation.landedQcWeights(landedDocs4b, "src0")),
-      "q208-qc-landed-rate" -> (() =>
-        Curation.landedQcPassRate(landedDocs4b, "src0")),
-      // the corpus-side BM25 statistics (q187/q192's lexical index; a
-      // retrieval system computes these once per corpus, never per
-      // query)
-      "bm25-stats" -> (() => Curation.bm25Stats(docs)),
-      // q192's served semantic index: the FULL corpus routed +
-      // PQ-encoded under the landed (full-corpus) codebooks — the
-      // billion-vector layout the hybrid deployment probes (q158's
-      // kinds, full-corpus keys)
-      "q192-ivfpq-asn" -> (() => Similarity.landedIvfPqAssignment(emb)),
-      "q192-ivfpq-codes" -> (() => Similarity.landedIvfPqCodes(emb)),
-      // q194's landed benchmark gram set (the decontamination screen's
-      // index; changes on benchmark releases, never per batch)
-      "q194-bench-grams" -> (() => Curation.landedBenchGrams(
-        docs.filter(col("doc_id") % 97 === 0))),
-      // the power-iteration direction (+ deflated second) — q146/q147/
-      // q149/q152 share these memos; since r17 an in-run-created key
-      // releases after its query, so the shared builds belong here
-      // (r17b: q147/q149 re-paid the fixed point, 2.5 s vs their
-      // 0.28 floors)
-      "power-iter" -> (() => Similarity.powerIterationTop(emb, iters = 3)),
-      "power-iter-2" -> (() => Similarity.powerIterationSecond(emb, iters = 3)),
-      // q188's pin lifecycle: the landed release AND its rotation over
-      // the first grown corpus — the final query consults pin1 (MUST
-      // textually match q188's entry construction)
-      "q188-split-pin0" -> (() => Similarity.pinnedSemanticSplit(
-        emb.filter(!pmod(col("vec_id"), lit(10L)).isin(3L, 7L)), 80)),
-      "q188-split-pin1" -> (() => Similarity.rotatePinnedSplit(
-        emb.filter(pmod(col("vec_id"), lit(10L)) =!= 7),
-        Similarity.pinnedSemanticSplit(
-          emb.filter(!pmod(col("vec_id"), lit(10L)).isin(3L, 7L)), 80),
-        80, releaseId = "rel1")),
-      // q186's pinned release split over the %10 landed slice — the
-      // release artifact IS the index (kind "sem-split-pin", the
-      // IndexStore-persisted replacement for "pin the release output"
-      // by hand); building it also seeds the landed slice's
-      // sem2l-asn/sem2l-dedup instances
-      "q186-split-pin" -> (() => Similarity.pinnedSemanticSplit(
-        emb.filter(pmod(col("vec_id"), lit(10L)) =!= 3), 80)),
-      // BPE word-frequency dict (q113/q115 share it); q134's
-      // landed-slice dict is its own entry (different input plan)
-      "bpe-dict" -> (() => graft.curation.Bpe.baseDict(docs)),
-      // the full-corpus TRAINING (r21): q113 emits the merge table and
-      // q115 applies the final segmented dict — identical learn()
-      // call, now shared through Bpe's session-scoped learn memo.
-      // Constructing bpeMerges here pays the `steps` serial argmax
-      // rounds in the phase, itemized, instead of twice across the
-      // two consumers (the unified-verdicts amortization pattern).
-      "bpe-train" -> (() => graft.curation.Bpe.bpeMerges(docs)),
-      "q134-bpe-landed-dict" -> (() => graft.curation.Bpe.baseDict(landedDocs5)),
-      // the landed MERGE TABLE itself (kind bpe-merges): q134's
-      // incremental face and q207's frozen face both read it per
-      // batch — the training rounds are paid here once (review
-      // finding: they were re-paid per call)
-      "q134-bpe-landed-merges" -> (() =>
-        graft.curation.Bpe.landedBpeMerges(landedDocs5)),
-      // q207's landed fertility BASELINE (one row): the landed corpus
-      // segmented by its own merge table — a property of (landed
-      // corpus, merge table) that never changes between retrains, so
-      // the policy's measure stage reads it instead of re-paying a
-      // landed segmentation pass (the drift-landed-res idiom)
-      "q207-bpe-landed-fert" -> (() =>
-        graft.curation.Bpe.landedBpeFertility(landedDocs5)))
-    builds
-  }
+    * Each registry declares its entries beside the queries that read
+    * them, over the same fixture slices ([[EntryHelpers]]), so an
+    * entry's registry keys are its readers' keys by construction.
+    * `IndexDeclSpec` checks the declared readers against the keys the
+    * queries read. */
+  def indexDecls: Seq[IndexDecl] =
+    dedupIndexes ++ similarityIndexes ++ curationIndexes ++ execIndexes
 
   def buildIndexes(spark: SparkSession, dir: String): Unit = {
     buildIndexesTimed(spark, dir)
     ()
   }
 
-  /** [[buildIndexes]] with per-entry wall seconds — the bench's
-    * itemized "index" metric (r14 verdict #7: a loaded-box index-phase
-    * spike should self-attribute the way queries already do).
+  /** One built index entry: its wall seconds, the Spark jobs and stages
+    * it submitted, and the registry keys it read (its build's inner keys
+    * included). */
+  final case class IndexBuild(name: String, sec: Double, jobs: Long,
+      stages: Long, keys: Set[String])
+
+  /** [[buildIndexes]], itemized per entry (`decls` defaults to all of
+    * [[indexDecls]]). Each entry builds in its own
+    * [[graft.util.JobCounts]] region, which attributes its jobs, stages
+    * and registry keys.
     *
-    * Materialization is CONCURRENT (r19): the ~95 entries are each a
-    * few-partition count() job, so running them serially left the
-    * box mostly idle — ~1.2 s × 95 of mostly-JIT/planning latency paid
-    * end to end. Construction (mk()) runs INSIDE the pool —
-    * [[indexBuilds]] returns thunks — and is safe because (a)
+    * Materialization is CONCURRENT: the entries are each a few-partition
+    * count() job, so running them serially left the box mostly idle.
+    * Construction runs INSIDE the pool and is safe because
     * [[graft.util.CacheRegistry.planFingerprint]] renders with an
-    * explicit maxFields (no shared-conf set/restore race; r20 fix of
-    * the r19 judge advice), so key derivation is race-free, and (b)
-    * registry insertion runs each key's build exactly once under a
-    * per-key lock (CacheRegistry.cache), so a shared inner entry
-    * cannot double-build or leak a loser's persist; concurrent jobs
-    * computing a shared cached subtree serialize per block in the
-    * BlockManager.
-    * Per-entry seconds remain wall-clock UNDER CONCURRENCY — they
-    * overlap and no longer sum to the phase wall; the phase wall is
-    * the bench's "index" metric. Pool width via SPARK_GRAFT_INDEX_PAR
-    * (default 8 — wide enough to hide per-job latency, narrow enough
-    * that 10× materialized runs stay memory-safe).
+    * explicit maxFields (key derivation is race-free), and registry
+    * insertion runs each key's build exactly once under a per-key lock,
+    * so a shared inner entry cannot double-build or leak a loser's
+    * persist. Per-entry seconds are wall-clock under concurrency: they
+    * overlap, and the phase wall is the bench's "index" metric. Pool
+    * width via SPARK_GRAFT_INDEX_PAR (default 8).
     *
-    * Submission is longest-pole-first (LPT, r20): with a bounded pool,
-    * a heavy entry submitted LATE sets the phase wall to (its start +
-    * its cost), so entries go in descending cost from
-    * [[recordedRanks]]; entries the record lacks keep list order after
-    * the ranked ones. */
-  def buildIndexesTimed(spark: SparkSession, dir: String): Seq[(String, Double)] = {
+    * Submission is longest-pole-first (LPT): with a bounded pool, a
+    * heavy entry submitted LATE sets the phase wall, so entries go in
+    * descending cost from [[recordedRanks]]; entries the record lacks
+    * keep declaration order after the ranked ones. */
+  def buildIndexesTimed(spark: SparkSession, dir: String,
+      decls: Seq[IndexDecl] = indexDecls): Seq[IndexBuild] = {
     val ranks = recordedRanks()
-    val builds = indexBuilds(spark, dir).sortBy { case (n, _) =>
-      -ranks.getOrElse(n, 0.0)
-    }
+    val ordered = decls.sortBy(d => -ranks.getOrElse(d.name, 0.0))
     val par = sys.env.get("SPARK_GRAFT_INDEX_PAR").map(_.toInt).getOrElse(8)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, par))
+    val counts = new graft.util.JobCounts(spark)
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = builds.map { case (n, mk) =>
-        n -> scala.concurrent.Future {
+      val futs = ordered.map { d =>
+        scala.concurrent.Future {
+          val region = "index:" + d.name
           val t0 = System.nanoTime()
-          mk().count()
-          (System.nanoTime() - t0) / 1e9
+          counts.region(region) { d.build(spark, dir).count() }
+          val sec = (System.nanoTime() - t0) / 1e9
+          val (jobs, stages) = counts.take(region)
+          IndexBuild(d.name, sec, jobs, stages,
+            graft.util.CacheRegistry.takeReads(region))
         }(ec)
       }
-      futs.map { case (n, f) =>
-        n -> scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf)
-      }
-    } finally pool.shutdown()
+      futs.map(scala.concurrent.Await.result(_,
+        scala.concurrent.duration.Duration.Inf))
+    } finally { pool.shutdown(); counts.close() }
   }
 
-  /** LPT ranks from the LAST RECORDED run (r22): every graft.Bench run
-    * writes its per-entry index itemization to bench_out.json
-    * ("index_detail"), so the next run in the same working directory
-    * submits in measured-cost order for THIS tree and box. An explicit
-    * file via SPARK_GRAFT_INDEX_RANKS overrides; a missing or
-    * unparseable record ranks nothing (list order). Order-only
-    * metadata — no results or intermediates ride across runs. */
+  /** LPT ranks from the last recorded run: every graft.Bench run writes
+    * its per-entry index seconds to bench_out.json ("index_detail") in
+    * its working directory, so the next run there submits in
+    * measured-cost order for this tree and box. A missing or unparseable
+    * record ranks nothing (declaration order). Order-only metadata: no
+    * results or intermediates ride across runs. */
   private def recordedRanks(): Map[String, Double] = {
-    val path = sys.env.get("SPARK_GRAFT_INDEX_RANKS").filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("user.dir", ".") + "/bench_out.json")
+    val path = sys.props.getOrElse("user.dir", ".") + "/bench_out.json"
     try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8")

@@ -364,9 +364,9 @@ object Bpe {
       learnMemo.computeIfAbsent(docs.sparkSession,
         _ => scala.collection.concurrent.TrieMap.empty)
     }
-    perSession.getOrElseUpdate(
-      CacheRegistry.key(docs, "bpe-learn", steps, textCol),
-      learnImpl(docs, steps, textCol))
+    val k = CacheRegistry.key(docs, "bpe-learn", steps, textCol)
+    CacheRegistry.logged(k)(
+      perSession.getOrElseUpdate(k, learnImpl(docs, steps, textCol)))
   }
 
   /** The shared training loop: `steps` rounds of pair-count argmax +

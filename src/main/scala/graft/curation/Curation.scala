@@ -2265,7 +2265,7 @@ object Curation {
     * keyed by the docs plan + column params): one evaluation per
     * corpus, shared across the exact form and its sketch twin rather
     * than relying on Spark exchange reuse to deduplicate the work.
-    * Released by the standard releaseExcept/releaseAll harness
+    * Released by the standard releaseIf/releaseAll harness
     * contract. */
   def perplexityScored(docs: DataFrame, stratum: String = "source",
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

@@ -162,7 +162,7 @@ object Dedup {
     * landed snapshot re-hit it for free. That entry lives until the
     * caller releases it — when the landed corpus advances (its plan
     * hash changes and the old entry becomes garbage), call
-    * `CacheRegistry.releaseExcept`/`releaseAll`, as the bench harness
+    * `CacheRegistry.releaseIf`/`releaseAll`, as the bench harness
     * does between queries.
     *
     * Durability caveat (cluster deployments): the batch projection's

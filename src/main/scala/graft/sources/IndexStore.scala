@@ -43,8 +43,7 @@ object IndexStore {
     * registry.
     *
     * `kinds` restricts the save to those registry kinds (the first
-    * `:`-part of the key — same filter contract as
-    * [[graft.util.CacheRegistry.releaseExcept]]); empty saves all.
+    * `:`-part of the key); empty saves all.
     * Pass the landed-index kinds in production: the registry also
     * holds corpus-scale intermediates ("shingles", "gram-table", …)
     * that are cheaper to rebuild than to copy. Entries ALREADY served

@@ -51,7 +51,7 @@ object IndexPersistBench {
       }
     val fromStore = graft.util.CacheRegistry.entries.values.count(scansStore)
     val detailJson = detail
-      .map { case (n, s) => s""""$n":${"%.3f".format(s)}""" }
+      .map(b => s""""${b.name}":${"%.3f".format(b.sec)}""")
       .mkString("{", ",", "}")
     println(s"""{"mode":"$mode","sf":"$sfDir","index_s":${
       "%.3f".format(indexS)},"restored":$restored,"saved":$saved,""" +

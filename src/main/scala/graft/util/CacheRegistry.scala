@@ -101,7 +101,7 @@ object CacheRegistry {
       .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  def cache(k: String, build: => DataFrame): DataFrame =
+  def cache(k: String, build: => DataFrame): DataFrame = logged(k) {
     items.get(k).getOrElse {
       val lock = buildLocks.computeIfAbsent(k, _ => new Object)
       lock.synchronized {
@@ -112,6 +112,44 @@ object CacheRegistry {
         }
       }
     }
+  }
+
+  // Read log: the keys each open JobCounts region read (hits and builds
+  // alike), and per key the keys its build read, so a hit logs what its
+  // build did and a region's keys do not depend on which thread built a
+  // shared key first. Outside a region nothing is logged.
+  private val regionReads = TrieMap.empty[String, Set[String]]
+  private val buildReads = TrieMap.empty[String, Set[String]]
+  // inheritable: a build's helper threads (the gate's semantic branch)
+  // read on its behalf
+  private val building = new InheritableThreadLocal[List[String]] {
+    override def initialValue(): List[String] = Nil
+  }
+
+  /** Runs `getOrBuild` as a read of `k`: inside a region, logs `k` and
+    * makes the keys `getOrBuild` reads `k`'s own. [[cache]] reads
+    * through it; a memo kept outside the registry (Bpe's learn memo)
+    * calls it directly. */
+  def logged[A](k: String)(getOrBuild: => A): A = JobCounts.current match {
+    case None => getOrBuild
+    case Some(region) =>
+      val outer = building.get
+      building.set(k :: outer)
+      val v = try getOrBuild finally building.set(outer)
+      synchronized {
+        val ks = buildReads.getOrElse(k, Set.empty) + k
+        regionReads(region) = regionReads.getOrElse(region, Set.empty) ++ ks
+        outer.headOption.foreach { b =>
+          buildReads(b) = buildReads.getOrElse(b, Set.empty) ++ ks
+        }
+      }
+      v
+  }
+
+  /** The keys region `region` read since the last take; its log
+    * restarts empty. */
+  def takeReads(region: String): Set[String] =
+    synchronized { regionReads.remove(region).getOrElse(Set.empty) }
 
   /** Seed an entry with an ALREADY-MATERIALIZED frame (e.g. a parquet
     * read of a persisted index — [[graft.sources.IndexStore]]): the
@@ -156,6 +194,7 @@ object CacheRegistry {
   def releaseAll(): Unit = {
     items.values.foreach(_.unpersist(blocking = false))
     items.clear()
+    buildReads.clear()
     releaseHooks.forEach(_.apply())
     // buildLocks entries are deliberately NEVER removed (r20 judge
     // advice): dropping a key's lock while another thread is building
@@ -165,24 +204,16 @@ object CacheRegistry {
     // and the key space is bounded per session.
   }
 
-  /** Release every entry whose kind (the first `:`-separated key part,
-    * e.g. "shingles", "minhash-bands", "dedup-clusters") is NOT in
-    * `retainKinds`. Returns the number of entries released — lets a
-    * harness decide whether a GC pass is owed. */
-  def releaseExcept(retainKinds: Set[String]): Int =
-    releaseIf(k => !retainKinds.contains(k.takeWhile(_ != ':')))
-
-  /** Release every entry whose FULL key satisfies `victim`. The
-    * key-precision face of [[releaseExcept]]: a query that seeds
-    * entries keyed to its own run-private plans (q184's absorbed
-    * grown-landed frames hang off a per-run localCheckpoint leaf) puts
-    * keys under SHARED kind names that no other query can ever hit —
-    * kind-level retention would pin them for as long as the kind has
-    * later consumers. */
+  /** Release every entry whose full key satisfies `victim`; returns
+    * the number released. Keys, not kinds: a query that seeds entries
+    * keyed to its own run-private plans (q184's absorbed grown-landed
+    * frames hang off a per-run localCheckpoint leaf) puts keys under
+    * SHARED kind names that no other query can ever hit. */
   def releaseIf(victim: String => Boolean): Int = {
     val victims = items.keySet.filter(victim)
     victims.foreach { k =>
       items.remove(k).foreach(_.unpersist(blocking = false))
+      buildReads.remove(k)
       // the key's build lock stays (see releaseAll) — removing it
       // while a concurrent cache() builds under it double-builds
     }

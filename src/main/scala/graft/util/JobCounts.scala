@@ -40,6 +40,9 @@ final class JobCounts(spark: SparkSession) {
     try f finally sc.setLocalProperty(JobCounts.Key, prev)
   }
 
+  /** Stops counting. */
+  def close(): Unit = spark.sparkContext.removeSparkListener(listener)
+
   /** (jobs, stages) region `name` submitted, once every event posted so
     * far was handled; the region's counts restart from zero. */
   def take(name: String): (Long, Long) = {
@@ -50,4 +53,9 @@ final class JobCounts(spark: SparkSession) {
 
 object JobCounts {
   val Key = "graft.region"
+
+  /** The region the calling thread runs in, if any. */
+  def current: Option[String] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .flatMap(s => Option(s.sparkContext.getLocalProperty(Key)))
 }
