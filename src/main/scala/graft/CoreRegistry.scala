@@ -269,54 +269,6 @@ trait CoreRegistry extends EntryHelpers {
     // q190/q191 replay-row device applied to the engine).
     "q212_eca_live" -> ((s, dir) => {
       import s.implicits._
-      val ms = (unix_micros(col("ts").cast("timestamp")) / lit(1000))
-        .cast("long")
-      val base = events(s, dir)
-        .withColumn("__ms", ms)
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"), col("__ms"))
-            .orderBy(col("event_id"))))
-        .filter(col("__rn") === 1)
-        .withColumn("__wk", expr("__ms div 604800000"))
-        .select(col("__wk"), col("user_id"), col("ts"), col("value"))
-        .persist()
-      // the harness feeds the engine from the driver (MemoryStream),
-      // but per WEEK — one batch-sized collect per trigger instead of
-      // a corpus-scale one (r19 verdict minor #3): the week slicing
-      // pushes down to the persisted projection. The collect happens
-      // INSIDE the feed loop (r20 verdict task #3), so peak driver
-      // residency is ONE week's rows, not all ~52 weeks at once.
-      val weekCounts = base.groupBy(col("__wk"))
-        .agg(count(lit(1)).as("__n"))
-        .as[(Long, Long)].collect().toMap
-      val weeks = weekCounts.keys.toSeq.sorted
-      def weekBatch(w: Long): Seq[(Long, java.sql.Timestamp, Double)] =
-        base.filter(col("__wk") === w)
-          .select(col("user_id"), col("ts"), col("value"))
-          .as[(Long, java.sql.Timestamp, Double)].collect().toSeq
-      // driver-residency cap (r22, see EntryHelpers.replayMaxRows): an
-      // over-cap week feeds as ts-ordered sub-week chunks — each chunk
-      // its own trigger, output-identical by the event-time
-      // batch-boundary invariance the engine guarantees
-      def feedWeekChunked(w: Long,
-          send: Seq[(Long, java.sql.Timestamp, Double)] => Unit): Unit = {
-        val cap = EntryHelpers.replayMaxRows
-        if (weekCounts(w) <= cap) send(weekBatch(w))
-        else {
-          val it = base.filter(col("__wk") === w)
-            .sort(col("ts"))
-            .select(col("user_id"), col("ts"), col("value"))
-            .as[(Long, java.sql.Timestamp, Double)].toLocalIterator()
-          val buf = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, java.sql.Timestamp, Double)]
-          while (it.hasNext) {
-            buf += it.next()
-            if (buf.size >= cap) { send(buf.toSeq); buf.clear() }
-          }
-          if (buf.nonEmpty) send(buf.toSeq)
-        }
-      }
       val engine = new graft.streaming.DynamicActiveEngine()
       val fired = scala.collection.mutable.ArrayBuffer
         .empty[graft.model.Alert]
@@ -353,20 +305,18 @@ trait CoreRegistry extends EntryHelpers {
         ruleQ.processAllAvailable()
         require(engine.store.size == 1,
           "q212: parent not merged over the transport")
-        weeks.foreach { w =>
-          feedWeekChunked(w, { chunk =>
-            evIn.addData(chunk: _*); q.processAllAvailable()
-          })
+        // the harness feeds the engine from the driver (MemoryStream),
+        // one trigger per week or over-cap chunk
+        feedReplayWeeks(s, dir, Seq("user_id", "ts", "value")) { rows =>
+          evIn.addData(rows.map(r =>
+            (r.getLong(0), r.getTimestamp(1), r.getDouble(2))): _*)
+          q.processAllAvailable()
         }
       } finally {
         // each stop in its own try (r21 judge advice): a throwing
-        // q.stop() must not leak the rule stream or the persisted
-        // corpus for the rest of the session
+        // q.stop() must not leak the rule stream
         try q.stop()
-        finally {
-          try ruleQ.stop()
-          finally { base.unpersist(); () }
-        }
+        finally ruleQ.stop()
       }
       fired.synchronized(fired.toList).map { a =>
         (if (a.ruleId == 4000L) "parent" else "child",

@@ -2,8 +2,10 @@ package graft
 
 import graft.exec.BatchExec
 import graft.rules.RuleCodec
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Shared plumbing of the [[SparkEntry]] registry family: table
   * loaders, the rule-execution entry path, exact-decimal rendering,
@@ -169,80 +171,79 @@ trait EntryHelpers {
     * engine's deliver step runs [[graft.active.EcaLoop.processAlerts]]
     * after every batch. */
   protected def dynamicReplayRaw(s: SparkSession, dir: String, ruleJson: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val engine = new graft.streaming.DynamicActiveEngine()
     engine.store.merge(RuleCodec.decode(ruleJson))
     val fired = scala.collection.mutable.ArrayBuffer.empty[graft.model.Alert]
     engine.onAlerts(as => fired.synchronized { fired ++= as })
 
-    val ms = (unix_micros(col("ts").cast("timestamp")) / lit(1000)).cast("long")
-    val base = events(s, dir)
-      .withColumn("__ms", ms)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("user_id"), col("__ms")).orderBy(col("event_id"))))
-      .filter(col("__rn") === 1)
-      .withColumn("__wk", expr("__ms div 604800000"))
-      .drop("__rn")
-      .persist()
-    try {
-      val weekCounts = base.groupBy(col("__wk"))
-        .agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val weeks = weekCounts.keys.toSeq.sorted
-      // Feed each weekly batch as a DRIVER-LOCAL frame (the q212
-      // device, r21): one batch-sized collect per week — never more
-      // than one week resident — re-parallelized as a local relation.
-      // The engine's per-batch jobs (curMax, the keyed pass, alert
-      // collect, tail checkpoint) each read the batch; against
-      // `base.filter(__wk)` they re-scanned EVERY cached corpus
-      // partition per week (~52 weeks × jobs × 32 tasks of pure scan
-      // overhead, and at 10× a real re-read of the corpus per trigger). The batch-sized leaf makes
-      // every engine job O(batch), the same rows in the same weekly
-      // order — alert output is row-set identical (q30's dedup already
-      // makes within-batch order immaterial).
-      //
-      // DRIVER-RESIDENCY CAP (r22 verdict task #6): "one week fits on
-      // the driver" is not a 100 TB invariant, so a week larger than
-      // [[EntryHelpers.replayMaxRows]] feeds as EVENT-TIME-ORDERED
-      // sub-week chunks through a partition-at-a-time local iterator —
-      // bounded residency at any corpus size. Output is identical:
-      // with chunks cut in ts order, a periodic window finalized after
-      // chunk k (end ≤ chunk k's max ts) can never receive an event
-      // from chunk k+1 (all later-ts; a ts == end event belongs to the
-      // NEXT half-open window), and a fresh event's trailing-[t-w, t]
-      // history is inside the tail's window(+slide) retention horizon
-      // — the ordinary event-time micro-batch-boundary invariance the
-      // engine already guarantees (ReplayChunkSpec pins it).
-      val batchSchema = org.apache.spark.sql.types.StructType(
-        base.drop("__ms", "__wk").schema.fields)
-      def feed(rows: java.util.List[org.apache.spark.sql.Row]): Unit =
-        engine.processBatch(
-          s.createDataFrame(rows, batchSchema), "ts")
-      val cap = EntryHelpers.replayMaxRows
-      weeks.foreach { wk =>
-        if (weekCounts(wk) <= cap) {
-          val rows = base.filter(col("__wk") === wk).drop("__ms", "__wk")
-            .collect()
-          feed(java.util.Arrays.asList(rows: _*))
-        } else {
-          val it = base.filter(col("__wk") === wk)
-            .sort(col("__ms")).drop("__ms", "__wk")
-            .toLocalIterator()
-          val buf = new java.util.ArrayList[org.apache.spark.sql.Row](cap)
-          while (it.hasNext) {
-            buf.add(it.next())
-            if (buf.size >= cap) { feed(buf); buf.clear() }
-          }
-          if (!buf.isEmpty) feed(buf)
-        }
-      }
-    } finally base.unpersist()
+    // each week (or chunk) as a DRIVER-LOCAL frame: the engine's
+    // per-batch jobs (curMax, the keyed pass, alert collect, tail
+    // checkpoint) each read the batch, and against a filter of the
+    // cached corpus they re-scanned EVERY corpus partition per week.
+    // The batch-sized leaf makes every engine job O(batch), the same
+    // rows in the same weekly order.
+    val evs = events(s, dir)
+    feedReplayWeeks(s, dir, evs.columns.toSeq) { rows =>
+      engine.processBatch(s.createDataFrame(rows.asJava, evs.schema), "ts")
+    }
 
     import s.implicits._
     fired.synchronized(fired.toSeq).toDF()
       .select(col("ruleId"), col("key").as("group_key"),
         col("tsMillis").as("ts_ms"),
         col("aggregate").cast("double").as("agg_value"))
+  }
+
+  /** The engine replays' weekly feed (q30, q31, q185, q212): events
+    * deduped to one per (user_id, ms), the lowest event_id kept,
+    * projected to `cols` and handed to `send` week by week, in
+    * ascending order. Each week is one batch-sized collect, so the
+    * driver never holds more than one week.
+    *
+    * DRIVER-RESIDENCY CAP: "one week fits on the driver" is not a 100 TB
+    * invariant, so a week larger than [[EntryHelpers.replayMaxRows]]
+    * goes to `send` as EVENT-TIME-ORDERED chunks of at most that many
+    * rows, read through a partition-at-a-time local iterator. The
+    * engine's output is identical: with chunks cut in ts order, a
+    * periodic window finalized after chunk k (end ≤ chunk k's max ts)
+    * can never receive an event from chunk k+1 (all later-ts; a
+    * ts == end event belongs to the NEXT half-open window), and a fresh
+    * event's trailing-[t-w, t] history is inside the tail's
+    * window(+slide) retention horizon — the ordinary event-time
+    * micro-batch-boundary invariance the engine already guarantees
+    * (ReplayChunkSpec pins it). That invariance covers rules that spawn
+    * nothing: a spawned child evaluates from the batch after its parent
+    * fired, so chunking a week spawns it earlier (q185, q212). */
+  protected def feedReplayWeeks(s: SparkSession, dir: String, cols: Seq[String])(
+      send: Seq[Row] => Unit): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    val ms = (unix_micros(col("ts").cast("timestamp")) / lit(1000)).cast("long")
+    val base = events(s, dir)
+      .withColumn("__ms", ms)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("user_id"), col("__ms")).orderBy(col("event_id"))))
+      .filter(col("__rn") === 1)
+      .select(col("__ms") +: expr("__ms div 604800000").as("__wk") +: cols.map(col): _*)
+      .persist()
+    try {
+      val weekCounts = base.groupBy(col("__wk"))
+        .agg(count(lit(1)).as("__n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cap = EntryHelpers.replayMaxRows
+      weekCounts.keys.toSeq.sorted.foreach { wk =>
+        val week = base.filter(col("__wk") === wk)
+        if (weekCounts(wk) <= cap) send(week.drop("__ms", "__wk").collect().toSeq)
+        else {
+          val it = week.sort(col("__ms")).drop("__ms", "__wk").toLocalIterator()
+          val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+          while (it.hasNext) {
+            buf += it.next()
+            if (buf.size >= cap) { send(buf.toSeq); buf.clear() }
+          }
+          if (buf.nonEmpty) send(buf.toSeq)
+        }
+      }
+    } finally base.unpersist()
   }
 
   // ---------------------------------------------------------------------

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** One-shot (batch) evaluation of a [[graft.model.Rule]] over a DataFrame.
   *
-  * This is the batch face of the engine: the same compiled expressions the
-  * streaming paths use, applied to a static table. Modes mirror the
-  * reference's emission modes (`operator/DynamicQueryFunction.java:91-147`):
+  * This is the batch face of the engine: the rule compiled to Catalyst
+  * expressions by [[graft.compile.RuleCompiler]], applied to a static
+  * table. Modes mirror the reference's emission modes
+  * (`operator/DynamicQueryFunction.java:91-147`):
   *
   *  - passthrough (no aggregate requested, W4): filter + project;
   *  - global aggregate (no window): plain `groupBy` — the batch-SQL face;

@@ -28,7 +28,7 @@ import java.math.{BigDecimal => JBigDecimal}
   * two Spark jobs:
   *
   *  - fan-out (D1-D3): the new batch is fanned out under the CURRENT
-  *    snapshot via [[FanOut.auto]] and persisted, so a rule change is a
+  *    snapshot via [[FanOut.keyed]] and persisted, so a rule change is a
   *    re-plan, not a restart. Events that arrive while no rule wants them
   *    are never keyed or retained (exactly the reference:
   *    `DynamicKeyFunction` forwards per live rule only);
@@ -139,7 +139,7 @@ final class DynamicActiveEngine(
     if (rules.isEmpty) return (None, noCkpt)
 
     // persisted: read by the curMax job and by the shuffle's map side
-    val fresh = FanOut.auto(batch, rules, tsCol).rdd.persist()
+    val fresh = FanOut.keyed(batch, rules, tsCol).rdd.persist()
     try {
       // curMax = max(fresh max, maxSeenTs): every tail row's tsMillis is
       // ≤ the maxSeenTs of the batch that retained it, so only the fresh

@@ -2,124 +2,83 @@ package graft.streaming
 
 import graft.compile.RuleCompiler
 import graft.model.{CompareOp, KeyedEvent, Rule}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** D1-D3 for the streaming path: the event×rule fan-out.
+/** D1-D3 for the streaming path: the event×rule fan-out, rules as data.
   *
-  * For every live rule, events passing the rule's filters are tagged with
-  * (ruleId, composite key string) — the reference's "implicit copy"
-  * pattern (`DynamicKeyFunction.java:43-105`) — and union the per-rule
-  * branches. The filters are compiled literals pushed into each branch,
-  * so only matching rows ever reach the downstream shuffle (the
-  * reference's hand-built filter-before-shuffle, free here). Catalyst
-  * does NOT share the source scan across branches: the compiled side is
-  * a union of one scan per rule, so its output has rules × input
-  * partitions partitions (96 for 24 rules over a 4-partition batch).
-  * [[DynamicActiveEngine]] persists this output and reads it twice, in
-  * its curMax job and on the map side of the shuffle that moves these
-  * rows, and only these, onto the retained tail's (rule, key)
-  * partitioning, so those stages run a task per partition. Everything
-  * downstream is bounded apart from the fan-out: the keyed pass runs one
-  * task per tail partition, at most the default parallelism.
+  * Every live rule is evaluated against every event from one broadcast
+  * of the rule set — the reference's broadcast rule state
+  * (`DynamicKeyFunction.java:43-105`). Events passing a rule's filters
+  * are tagged with (ruleId, composite key string), the reference's
+  * "implicit copy" pattern. The batch is scanned once and runs through
+  * one `flatMap`, so the plan does not grow with the rule count and the
+  * output has exactly the input's partitions. [[DynamicActiveEngine]]
+  * persists this output and reads it twice, in its curMax job and on
+  * the map side of the shuffle that moves these rows, and only these,
+  * onto the retained tail's (rule, key) partitioning. Rows matching no
+  * rule are dropped before that shuffle.
   *
   * Output is the normalized [[KeyedEvent]]: event-time millis, aggregate
-  * input as an exact decimal string, full event payload as JSON.
-  */
+  * input as an exact decimal string, full event payload as JSON. */
 object FanOut {
 
-  /** Plan-size threshold: at most this many compiled per-rule branches;
-    * beyond it [[auto]] switches to the broadcast kernel. The reference
-    * evaluates thousands of rules per event — a thousand-branch union
-    * would make Catalyst analysis itself the bottleneck. */
-  val CompiledRuleLimit = 32
-
-  /** Pick the fan-out strategy by rule count: compiled Column branches
-    * (full pushdown/codegen per rule) while the plan stays small, the
-    * broadcast interpreted kernel beyond [[CompiledRuleLimit]]. */
-  def auto(events: DataFrame, rules: Seq[Rule], tsCol: String = "ts"): Dataset[KeyedEvent] =
-    if (rules.size <= CompiledRuleLimit) keyed(events, rules, tsCol)
-    else keyedBroadcast(events, rules, tsCol)
-
-  def keyed(events: DataFrame, rules: Seq[Rule], tsCol: String = "ts"): Dataset[KeyedEvent] = {
-    implicit val enc = Encoders.product[KeyedEvent]
-    require(rules.nonEmpty, "fan-out needs at least one rule")
-    rules.map { r =>
-      val aggIn = r.aggregateFieldName match {
-        case Some(f) if !Rule.isCountSentinel(f) =>
-          col(f).cast(RuleCompiler.RuleDecimal).cast("string")
-        case _ => lit("")
-      }
-      // the JSON payload is only consumed by ECA template binding — rules
-      // with no alertRules skip the per-event render entirely
-      val payload =
-        if (r.alertRules.nonEmpty) to_json(struct(events.columns.map(col): _*))
-        else lit("")
-      events
-        .filter(RuleCompiler.filterColumn(r, Some(events.schema)))
-        .select(
-          lit(r.queryId.getOrElse(-1L)).as("ruleId"),
-          RuleCompiler.keyStringColumn(r).as("key"),
-          (unix_micros(col(tsCol).cast("timestamp")) / lit(1000)).cast("long")
-            .as("tsMillis"),
-          coalesce(aggIn, lit("")).as("aggIn"),
-          payload.as("payload"))
-    }.reduce(_ unionByName _).as[KeyedEvent]
-  }
-
-  /** Rules-as-data fan-out: ONE broadcast of the rule set and ONE flatMap
-    * — plan size O(1) in rule count, so thousands of live rules cost a
-    * per-row loop instead of a thousand-branch union that Catalyst must
-    * analyze (the reference's broadcast-state design,
-    * `DynamicKeyFunction.java:43-105`, at its native scale).
-    *
-    * The interpreted kernel reproduces the compiled semantics:
-    *  - `=` compares the column's *string cast* (the same `cast("string")`
-    *    rendering, computed once per row in codegen);
+  /** Semantics, the same at every rule count:
+    *  - a null cell fails every filter;
+    *  - `=` compares the column's string cast with the literal (so
+    *    `carId = "00270"` respects leading zeros);
     *  - other operators compare as BigDecimal over that rendering — the
-    *    `CompareOp` kernel, the reference's `applyCompare`. (For FLOAT
-    *    columns the two paths can differ past the 8th significant digit:
-    *    the compiled path compares the widened binary value, this one the
-    *    shortest decimal rendering. DOUBLE/INT/LONG/STRING are identical.)
-    *  - the aggregate input is pre-cast to DECIMAL(38,6) per column, so
-    *    `aggIn` strings are byte-identical to the compiled path's;
-    *  - rows matching no rule are dropped before any shuffle.
+    *    `CompareOp` kernel, the reference's `applyCompare`. A cell that
+    *    does not parse as a number fails the filter, so a runtime rule
+    *    can drop rows but never fail the batch;
+    *  - the key renders `{k=v;…}` in key order, `{}` for the global
+    *    group, and a null value as `k=null`;
+    *  - the aggregate input is the column's DECIMAL(38,6) rendering, ""
+    *    for COUNT, a null cell or one that does not parse;
+    *  - the JSON payload is rendered only if some live rule has
+    *    `alertRules`, and kept only on that rule's rows.
     * Field→index resolution happens once on the driver; an unknown field
-    * fails fast there, like the compiled path's analysis error. */
-  def keyedBroadcast(events: DataFrame, rules: Seq[Rule], tsCol: String = "ts"): Dataset[KeyedEvent] = {
+    * fails fast there. */
+  def keyed(events: DataFrame, rules: Seq[Rule], tsCol: String = "ts"): Dataset[KeyedEvent] = {
     require(rules.nonEmpty, "fan-out needs at least one rule")
     val names = events.columns.toSeq
-    val idx = names.zipWithIndex.toMap
-    def at(f: String): Int = idx.getOrElse(f,
-      throw new IllegalArgumentException(s"rule field '$f' not in event schema $names"))
-    val compiled = rules.flatMap(r => r.queryId.map(id => CompiledRule(
-      id,
-      r.windowFilterRules.map(f => FilterAt(at(f.field), f.operator, f.value,
+    val live = rules.filter(_.queryId.isDefined)
+    // each row renders only the columns some rule reads: the string cast
+    // of filter and key fields, the decimal of aggregate fields
+    val rawNames = live.flatMap(r => r.windowFilterRules.map(_.field) ++ r.groupingKeyNames).distinct
+    val decNames = live.flatMap(_.aggregateFieldName.filterNot(Rule.isCountSentinel)).distinct
+    (rawNames ++ decNames).find(!names.contains(_)).foreach { f =>
+      throw new IllegalArgumentException(s"rule field '$f' not in event schema $names")
+    }
+    val compiled = live.map(r => CompiledRule(
+      r.queryId.get,
+      r.windowFilterRules.map(f => FilterAt(rawNames.indexOf(f.field), f.operator, f.value,
         if (f.operator == CompareOp.Equal) None else Some(BigDecimal(f.value)))),
       r.groupingKeyNames,
-      r.groupingKeyNames.map(at),
-      r.aggregateFieldName.filterNot(Rule.isCountSentinel).map(at),
-      r.alertRules.nonEmpty)))
+      r.groupingKeyNames.map(rawNames.indexOf),
+      r.aggregateFieldName.filterNot(Rule.isCountSentinel).map(decNames.indexOf),
+      r.alertRules.nonEmpty))
     val spark = events.sparkSession
     val bc = spark.sparkContext.broadcast(compiled)
 
     // struct→JSON is the single most expensive per-row expression here;
-    // pay it only if some live rule actually consumes the payload (the
-    // compiled path makes the same gate per rule at `keyed`).
+    // pay it only if some live rule actually consumes the payload
     val anyPayload = compiled.exists(_.payload)
     val payloadCol =
       if (anyPayload) to_json(struct(names.map(col): _*)) else lit("")
+    def strings(cs: Seq[Column]): Column =
+      if (cs.isEmpty) typedLit(Seq.empty[String]) else array(cs: _*)
 
     import spark.implicits._
     events
       .select(
         (unix_micros(col(tsCol).cast("timestamp")) / lit(1000)).cast("long").as("__ts"),
         payloadCol.as("__payload"),
-        array(names.map(c => col(c).cast("string")): _*).as("__raw"),
-        // try_cast: non-numeric columns yield null here instead of an ANSI
-        // error — only columns actually used as aggregate input are read
-        array(names.map(c =>
-          expr(s"CAST(try_cast(`$c` AS ${RuleCompiler.RuleDecimal.sql}) AS STRING)")): _*)
+        strings(rawNames.map(c => col(c).cast("string"))).as("__raw"),
+        // try_cast: a non-numeric cell yields null here instead of an
+        // ANSI error
+        strings(decNames.map(c =>
+          expr(s"CAST(try_cast(`$c` AS ${RuleCompiler.RuleDecimal.sql}) AS STRING)")))
           .as("__dec"))
       .as[(Long, String, Array[String], Array[String])]
       .flatMap { case (ts, payload, raw, dec) =>

@@ -199,7 +199,7 @@ class DynamicEngineSpec extends SparkSpec {
     assert(sums == List(10.0, 30.0, 35.0, 7.0))
   }
 
-  test("alerts are unchanged across the compiled->broadcast fan-out switch (>32 rules)") {
+  test("alerts do not depend on how many other rules are live") {
     def run(extraInert: Int): List[Alert] = {
       val active = Rule(
         queryId = Some(50L),
@@ -211,7 +211,7 @@ class DynamicEngineSpec extends SparkSpec {
         windowMilliseconds = Some(10000L),
         frequencyMilliseconds = Some(0L))
       // inert rules: filters that match no event, so they contribute
-      // nothing but rule-count (pushing the engine over CompiledRuleLimit)
+      // nothing but rule-count
       val inert = (0 until extraInert).map(i => active.copy(
         queryId = Some(1000L + i),
         windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
@@ -225,9 +225,78 @@ class DynamicEngineSpec extends SparkSpec {
         Seq(ev(1, base + 1000, 5))))
       fired.synchronized(fired.toList).sortBy(a => (a.key, a.tsMillis))
     }
-    val few = run(0)    // 1 rule  -> compiled kernel
-    val many = run(40)  // 41 rules -> broadcast kernel
+    val few = run(0)    // 1 rule
+    val many = run(40)  // 41 rules
     assert(many == few && few.size == 3)
+  }
+
+  /** `extraInert` rules whose filter matches no event. */
+  private def inertLike(like: Rule, extraInert: Int): Seq[Rule] =
+    (0 until extraInert).map(i => like.copy(queryId = Some(5000L + i),
+      windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
+
+  /** (ruleId, key, tsMillis, aggregate) of what `rules` fire on `batch`. */
+  private def fire(rules: Seq[Rule], batch: org.apache.spark.sql.DataFrame)
+      : List[(Long, String, Long, BigDecimal)] = {
+    val engine = new DynamicActiveEngine()
+    rules.foreach(engine.store.merge(_))
+    val fired = scala.collection.mutable.ArrayBuffer.empty[Alert]
+    engine.onAlerts(as => fired.synchronized { fired ++= as })
+    engine.processBatch(batch, "ts")
+    fired.synchronized(fired.toList)
+      .map(a => (a.ruleId, a.key, a.tsMillis, BigDecimal(a.aggregate))).sorted
+  }
+
+  test("a null grouping-key value keys as {carId=null} whatever the rule count") {
+    val sum = Rule(
+      queryId = Some(60L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Sum),
+      windowMilliseconds = Some(10000L),
+      frequencyMilliseconds = Some(0L))
+    val base = 1700000000000L
+    val batch = Seq[(Option[Int], java.sql.Timestamp, Double)](
+      (Some(1), new java.sql.Timestamp(base), 10),
+      (None, new java.sql.Timestamp(base + 500), 20),
+      (None, new java.sql.Timestamp(base + 1000), 5)).toDF("carId", "ts", "speed")
+    val alone = fire(Seq(sum), batch)
+    val many = fire(sum +: inertLike(sum, 40), batch)
+    assert(alone == many)
+    assert(alone.map(a => (a._2, a._4)) ==
+      List(("{carId=1}", BigDecimal(10)), ("{carId=null}", BigDecimal(20)),
+        ("{carId=null}", BigDecimal(25))))
+    // the global group is another state: a keyless rule sums every row
+    val global = fire(Seq(sum.copy(groupingKeyNames = Nil)), batch)
+    assert(global.map(a => (a._2, a._4)) ==
+      List(("{}", BigDecimal(10)), ("{}", BigDecimal(30)), ("{}", BigDecimal(35))))
+  }
+
+  test("a numeric filter on a non-numeric string cell drops the row, not the batch") {
+    val valid = Rule(
+      queryId = Some(70L),
+      groupingKeyNames = Seq("carId"),
+      aggregateFieldName = Some("speed"),
+      aggregatorFunctionType = Some(AggregatorType.Sum),
+      windowMilliseconds = Some(10000L),
+      frequencyMilliseconds = Some(0L))
+    // arrives at runtime: `>` on a string column holding "n/a"
+    val plate = valid.copy(queryId = Some(71L),
+      windowFilterRules = Seq(FilterSpec("plate", CompareOp.Greater, "5")))
+    val base = 1700000000000L
+    val batch = Seq(
+      (1, "12", new java.sql.Timestamp(base), 10.0),
+      (1, "n/a", new java.sql.Timestamp(base + 500), 20.0),
+      (2, "3", new java.sql.Timestamp(base + 1000), 5.0),
+      (2, "9", new java.sql.Timestamp(base + 1500), 1.0)).toDF("carId", "plate", "ts", "speed")
+    val alone = fire(Seq(valid), batch)
+    assert(alone.size == 4)
+    for (extra <- Seq(0, 40)) {
+      val out = fire(Seq(valid, plate) ++ inertLike(valid, extra), batch)
+      assert(out.filter(_._1 == 70L) == alone, s"$extra inert rules")
+      assert(out.filter(_._1 == 71L).map(a => (a._2, a._3)) ==
+        List(("{carId=1}", base), ("{carId=2}", base + 1500)), s"$extra inert rules")
+    }
   }
 
   test("200 periodic rules sharing a window evaluate in one batch without plan blowup") {
@@ -438,8 +507,8 @@ class DynamicEngineSpec extends SparkSpec {
 
   test("the retained tail stays within defaultParallelism partitions on both fan-out sides") {
     // tail ∪ fresh keeps the partitions of both sides, so an unbounded
-    // tail grows by the fresh side's partition count every batch (rules ×
-    // 4 on the compiled side) and each later batch scans all of them
+    // tail grows by the fresh side's partition count every batch and
+    // each later batch scans all of them
     val maxParts = spark.sparkContext.defaultParallelism
     val perEvent = Rule(
       queryId = Some(80L),
@@ -456,7 +525,7 @@ class DynamicEngineSpec extends SparkSpec {
       (0 until 8).map(j => (j % 3, new java.sql.Timestamp(base + i * 1000L + j), j.toDouble)),
       4).toDF("carId", "ts", "speed")
 
-    for (inert <- Seq(0, 40)) { // 2 rules: compiled; 42 rules: broadcast
+    for (inert <- Seq(0, 40)) { // 2 and 42 live rules
       val rules = Seq(perEvent, periodic) ++ (0 until inert).map(i => perEvent.copy(
         queryId = Some(3000L + i),
         windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
@@ -496,7 +565,7 @@ class DynamicEngineSpec extends SparkSpec {
     val sliding = tumbling.copy(queryId = Some(92L), frequencyMilliseconds = Some(3000L))
     val passthrough = Rule(queryId = Some(93L),
       windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "5")))
-    // inert rules push the store past FanOut.CompiledRuleLimit
+    // 40 inert rules: the bound holds at 44 live rules
     val inert = (0 until 40).map(i => perEvent.copy(queryId = Some(4000L + i),
       windowFilterRules = Seq(FilterSpec("speed", CompareOp.Greater, "1e9"))))
     val engine = new DynamicActiveEngine()

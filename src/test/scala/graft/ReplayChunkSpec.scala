@@ -5,13 +5,20 @@ package graft
   * alert set as the single-collect week — the event-time
   * batch-boundary invariance [[EntryHelpers.replayMaxRows]]'s chunking
   * relies on (periodic emit-once horizons + the tail's window(+slide)
-  * retention cover every cut). Pinned on the q30 replay at sf0.001,
-  * whose weekly batches (hundreds of rows) all exceed the lowered cap. */
+  * retention cover every cut). Pinned at sf0.001, whose weekly batches
+  * (hundreds of rows) all exceed the lowered cap, on the q30 replay
+  * (`processBatch` on driver-local frames) and on q212 (the live engine
+  * fed over a MemoryStream, one trigger per chunk).
+  *
+  * The invariance covers rules that spawn nothing. A spawned child
+  * evaluates from the trigger after its parent fired, so chunking a
+  * week spawns it earlier and it fires on more events: q212 is pinned
+  * on its parent's alerts, and its children must fire either way. */
 class ReplayChunkSpec extends SparkSpec {
 
-  test("dynamicReplayRaw: chunked over-cap weeks ≡ single-batch weeks") {
+  private def singleAndChunked(name: String): (Seq[String], Seq[String]) = {
     val dir = "/root/testdata/sf0.001"
-    val q = SparkEntry.queries("q30_dynamic_engine_replay")
+    val q = SparkEntry.queries(name)
     def rows(): Seq[String] =
       q(spark, dir).collect().map(_.toString).sorted.toSeq
     val single = rows()
@@ -19,6 +26,18 @@ class ReplayChunkSpec extends SparkSpec {
     val chunked =
       try { EntryHelpers.replayMaxRows = 37; rows() }
       finally EntryHelpers.replayMaxRows = saved
+    (single, chunked)
+  }
+
+  test("dynamicReplayRaw: chunked over-cap weeks ≡ single-batch weeks") {
+    val (single, chunked) = singleAndChunked("q30_dynamic_engine_replay")
     assert(chunked.nonEmpty && chunked == single)
+  }
+
+  test("q212: chunked over-cap weeks ≡ single-batch weeks on the parent rule") {
+    val (single, chunked) = singleAndChunked("q212_eca_live")
+    def stage(rows: Seq[String], s: String) = rows.filter(_.startsWith(s"[$s,"))
+    assert(stage(chunked, "parent").nonEmpty && stage(chunked, "parent") == stage(single, "parent"))
+    assert(stage(single, "child").nonEmpty && stage(chunked, "child").nonEmpty)
   }
 }
